@@ -271,6 +271,19 @@ def test_chunked_pipeline_costs_exactly_two_exchanges(spark):
     assert p.count("Exchange hashpartitioning") == 2
 
 
+def test_span_table_is_one_span_udf_over_the_scan(spark):
+    """S5 plan shape: the span table is the span UDF exploded over the
+    scan — no exchange, and exactly two Python nodes (the page source UDF
+    and the span UDF), not a detect → recognize UDF chain."""
+    from texteller_spark.plans.pipeline import span_table
+    from texteller_spark.sources.pages import pages_from_documents
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    p = plan_of(span_table(pages_from_documents(docs)))
+    assert "Exchange" not in p
+    assert p.count("ArrowEvalPython") == 2
+
+
 def test_no_row_at_a_time_python_in_any_catalog_plan(spark, Q):
     """Global hygiene: NO catalog query may plan a BatchEvalPython node
     (row-at-a-time Python UDF — the 10-100x slow path). Arrow-batched

@@ -1,5 +1,8 @@
 """Structured Streaming lift: same kernels over an unbounded source."""
 
+from collections import Counter
+
+from texteller_spark.plans.pipeline import span_table
 from texteller_spark.schema import PAGES_SCHEMA
 from texteller_spark.sources.pages import tiny_corpus
 from texteller_spark.streaming.stream import streaming_extract, streaming_span_rates
@@ -26,12 +29,12 @@ def test_streaming_extract_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT kind, count(*) AS n FROM spans_out GROUP BY kind").collect()
-    counts = {r["kind"]: r["n"] for r in got}
-    assert counts.get("text", 0) > 0
-    assert counts.get("embedding", 0) > 0
-    assert counts.get("isolated", 0) > 0
+    assert q.awaitTermination(120)
+    batch = span_table(spark.read.parquet(f"{tmp_path}/pages_src"))
+    got = spark.table("spans_out").select(*batch.columns).collect()
+    want = batch.collect()
+    assert {r["kind"] for r in want} >= {"text", "embedding", "isolated"}
+    assert Counter(map(tuple, got)) == Counter(map(tuple, want))
 
 
 def test_streaming_windowed_rates(spark, tmp_path):
@@ -44,7 +47,7 @@ def test_streaming_windowed_rates(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     rows = spark.sql("SELECT * FROM rates_out").collect()
     assert rows
     assert all(r["n_spans"] > 0 for r in rows)

@@ -15,23 +15,20 @@ Behavior-parity with the reference's assembly fold
   first span's row so no leading separator is emitted.
 
 This fold is inherently sequential per url (it mutates the accumulated
-string tail), so it runs as a per-group kernel over the *sorted* collected
-span array — ``array_sort(collect_list(...))`` guarantees order regardless
-of partitioning (SURVEY.md §7.3).
+string tail). The fused per-page kernel calls it on a page's spans; the
+chunked plan calls it per url on the *sorted* collected span array —
+``array_sort(collect_list(...))`` guarantees order regardless of
+partitioning (SURVEY.md §7.3). The Spark UDFs live in ``plans/pipeline.py``.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Iterator, Sequence
-
-import pandas as pd
-from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import StringType
+from typing import Sequence
 
 from ..functions.katex import debold_inline
 
-__all__ = ["assemble_document", "assemble_udf"]
+__all__ = ["assemble_document"]
 
 _TAG_TAIL_RE = re.compile(r"\\tag\{.*\}$")
 
@@ -80,11 +77,3 @@ def assemble_document(spans: Sequence) -> str:
         prev_block, prev_kind = block, kind
     return md.strip()
 
-
-def _assemble_batches(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    for spans_col in it:
-        yield spans_col.map(assemble_document)
-
-
-#: scalar pandas UDF: array<struct spans+content> → extracted_text
-assemble_udf = pandas_udf(_assemble_batches, returnType=StringType())

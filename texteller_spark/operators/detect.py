@@ -24,9 +24,9 @@ Contract
 * Text-span ``raw`` is the concatenation of the run's text nodes (inline
   tags stripped); math-span ``raw`` is the exact document slice.
 
-On Spark, :func:`detect_spans_udf` applies :func:`detect_document` to whole
-Arrow batches (scalar pandas UDF) — columnar at the boundary, zero per-row
-Python at the Spark level.
+No Spark here: these are pure kernels. The span kernel in
+``plans/pipeline.py`` runs :func:`detect_document` inside the one span UDF
+and keeps the spans at confidence ≥ 0.5 (P1).
 """
 
 from __future__ import annotations
@@ -34,19 +34,14 @@ from __future__ import annotations
 import gzip
 import re
 import zlib
-from typing import Iterator, NamedTuple
+from typing import NamedTuple
 
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import pandas_udf
-
-from ..schema import DETECT_CONF_THRESHOLD, SPANS_ARRAY
+from ..schema import DETECT_CONF_THRESHOLD
 
 __all__ = [
     "Span",
     "decode_page",
     "detect_document",
-    "detect_spans_udf",
     "safe_split_points",
     "chunk_document",
 ]
@@ -326,21 +321,3 @@ def chunk_document(doc: str, target_chars: int) -> list[tuple[int, str]]:
         if bounds[k + 1] > bounds[k]
     ] or [(0, doc)]
 
-
-def _detect_batches(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    for html in it:
-        yield html.map(lambda b: detect_document(decode_page(b)))
-
-
-#: scalar pandas UDF: html binary → array<struct> spans (Arrow-batched)
-detect_spans_udf = pandas_udf(_detect_batches, returnType=SPANS_ARRAY)
-
-
-def with_spans(df, html_col: str = "html"):
-    """``df`` + a ``spans`` column, with the declarative P1 confidence
-    filter in the plan (already enforced inside detection; kept as the
-    Catalyst-visible predicate)."""
-    return df.withColumn("spans", detect_spans_udf(F.col(html_col))).withColumn(
-        "spans",
-        F.filter("spans", lambda s: s["confidence"] >= F.lit(DETECT_CONF_THRESHOLD)),
-    )

@@ -1,7 +1,7 @@
 """Recognition + normalization: span raw source → final content string.
 
 Mirrors the reference's two recognition stages and its normalization pass in
-one fused Arrow-batched kernel:
+one pure per-span kernel, :func:`recognize_span`:
 
 * text spans → entity-unescape + whitespace canonicalization (the CTC
   text-recognition analog, ``/root/reference/src/models/thrid_party/
@@ -12,20 +12,17 @@ one fused Arrow-batched kernel:
 * MathML math spans → deterministic MathML→LaTeX transliteration →
   ``latex_to_katex`` → wrap (wrapping parity with ``mix_inference.py:210-215``).
 
-Fusing recognize+normalize avoids one extra Arrow round-trip per exploded
-span — the batched-kernel discipline the reference applies with its single
-stacked ``generate`` call.
+No Spark here: the span kernel in ``plans/pipeline.py`` calls
+:func:`recognize_span` for every span it detects, inside the one span UDF,
+so recognition never costs an Arrow round trip of its own — the
+batched-kernel discipline the reference applies with its single stacked
+``generate`` call.
 """
 
 from __future__ import annotations
 
 import html as _htmllib
 import re
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 from ..functions.katex import latex_to_katex, wrap_span
 from ..functions.mathml import mathml_to_latex
@@ -36,7 +33,6 @@ __all__ = [
     "recognize_text",
     "recognize_math",
     "recognize_span",
-    "recognize_udf",
 ]
 
 _WS_RE = re.compile(r"\s+")
@@ -138,48 +134,3 @@ def recognize_span(kind: str, raw: str) -> str:
         return recognize_text(raw)
     return wrap_span(kind, _cap_decode(latex_to_katex(recognize_math(raw))))
 
-
-def _recognize_batches(
-    it: Iterator[tuple[pd.Series, pd.Series]],
-) -> Iterator[pd.Series]:
-    for kind, raw in it:
-        yield pd.Series(
-            [None if k is None else recognize_span(k, r) for k, r in zip(kind, raw)],
-            dtype="object",
-        )
-
-
-#: scalar pandas UDF: (kind, raw) → content (Arrow-batched, span-granular —
-#: used by the exploded span-table path)
-recognize_udf = pandas_udf(_recognize_batches, returnType=StringType())
-
-
-def _recognize_array_batches(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    for spans_col in it:
-        out = []
-        for spans in spans_col:
-            recognized = []
-            for s in spans if spans is not None else []:
-                d = dict(s)
-                d["content"] = recognize_span(d["kind"], d["raw"])
-                recognized.append(d)
-            out.append(recognized)
-        yield pd.Series(out, dtype="object")
-
-
-def make_recognize_spans_udf():
-    """Doc-granular recognition: spans array → spans+content array.
-
-    Keeping the spans of a page together (instead of explode → recognize →
-    groupBy) removes the re-grouping shuffle entirely: reassembly needs
-    per-page locality anyway, so the flagship plan stays a pure map after
-    one repartition. Span-granular batching (``recognize_udf``) remains for
-    the exploded span-table path.
-    """
-    from ..schema import CONTENT_SPAN_SCHEMA
-    from pyspark.sql.types import ArrayType
-
-    return pandas_udf(_recognize_array_batches, returnType=ArrayType(CONTENT_SPAN_SCHEMA))
-
-
-recognize_spans_udf = make_recognize_spans_udf()

@@ -1,143 +1,59 @@
-"""The flagship extraction plan: pages → spans → recognized → assembled.
+"""The extraction plans: pages → spans → recognized → assembled.
 
 Spark-first re-expression of the reference's mix_inference dataflow
-(``/root/reference/src/models/utils/mix_inference.py:136-264``):
+(``src/models/utils/mix_inference.py:136-264``). One kernel,
+:func:`recognize_piece_kernel`, is the only detect → threshold (P1,
+confidence ≥ 0.5) → recognize loop. It runs over a whole decoded page at
+offset 0 or over one chunk of a page at the chunk's char offset, and every
+extraction path derives from it:
 
 ::
 
-    pages (scan: url, warc_ts, html, text, lang)
-      → repartition(P, xxhash64(url, salt) % P)      # salted skew discipline
-      → withColumn(spans = detect_udf(html))          # D1+D2 fused (Arrow)
-      → filter(confidence ≥ 0.5)                      # P1, Catalyst-visible
-      → explode(spans)                                # span-granular skew
-      → sortWithinPartitions(length(raw))             # width-sorted batching (W4)
-      → withColumn(content = recognize_udf(kind,raw)) # R1+R2+normalize (Arrow)
-      → groupBy(url).agg(array_sort(collect_list(...)))  # deterministic order
-      → withColumn(extracted_text = assemble_udf(spans)) # ordered fold (A2)
+    extract_pages          pages → extract_udf(html)              # + assemble_document:
+                                                                  # one fused map, no exchange
+    span_table             pages → explode_outer(recognize_piece_udf(0, html))
+    extract_pages_chunked  pages → explode(chunk_udf(html))
+                             → repartition(url, chunk_id)
+                             → explode_outer(recognize_piece_udf(off, piece))
+                             → groupBy(url).agg(array_sort(collect_list(...)))
+                             → assemble_udf(spans)
+    streaming_extract, streaming_span_rates (streaming/stream.py):
+                           span_table's explode over a stream
 
-Two exchanges total: the initial salted repartition and the final groupBy.
+``recognize_piece_udf`` is the only span UDF. It passes its input through
+``decode_page``, which returns a ``str`` unchanged, so it takes html bytes
+at offset 0 or a chunk piece at its offset. In the chunked path,
 ``array_sort(collect_list(struct(span_id first, …)))`` makes assembly
-independent of partition count / arrival order (determinism invariant the
-scaling test relies on, SURVEY.md §7.3).
+independent of partition count and arrival order (the determinism
+invariant the scaling test relies on, SURVEY.md §7.3).
 
 At production scale the scan is an Iceberg table bucketed by ``url`` hash;
-in-sandbox the same plan runs over parquet. Per-partition lineage counters
+in-sandbox the same plans run over parquet. Per-partition lineage counters
 and resumable checkpointing live in ``checkpoint.py``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
 from typing import Iterator
 
 import pandas as pd
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
 
-from ..operators.assemble import assemble_document, assemble_udf
-from ..operators.detect import (
-    chunk_document,
-    decode_page,
-    detect_document,
-    with_spans,
-)
-from ..operators.recognize import recognize_span, recognize_spans_udf, recognize_udf
+from ..operators.assemble import assemble_document
+from ..operators.detect import chunk_document, decode_page, detect_document
+from ..operators.recognize import recognize_span
 from ..schema import CONTENT_SPAN_SCHEMA, DETECT_CONF_THRESHOLD
 
 __all__ = [
-    "detect_stage",
-    "recognize_stage",
-    "assemble_stage",
     "extract_pages",
     "extract_pages_chunked",
     "span_table",
 ]
 
-#: deterministic salt for the url-hash repartition (any constant works; the
-#: point is decorrelating from upstream layout, not secrecy)
-SALT = 0x7E57E11E
-
 _SPAN_COLS = ("span_id", "block_id", "kind", "char_start", "char_end", "confidence", "raw")
-
-
-def detect_stage(pages: DataFrame, partitions: int | None = None) -> DataFrame:
-    """(url, html, …) → exploded spans, hash-partitioned by url.
-
-    ONE shuffle for the whole pipeline: ``repartition(p, url)`` both
-    balances the scan (urls are unique, so hashing them decorrelates any
-    upstream layout skew) and pre-clusters for the final ``groupBy(url)``,
-    which then reuses this partitioning — no second exchange.  The explicit
-    partition count matters twice: it pins parallelism for the Python-UDF
-    stages (AQE's size-based coalescing is blind to per-row UDF cost and
-    would otherwise collapse them to a handful of tasks), and it is the
-    skew knob at production scale.
-    """
-    p = partitions or int(pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    balanced = pages.repartition(p, F.col("url"))
-    # explode_outer keeps span-less pages (empty/undecodable html) so they
-    # reach the output and the resume checkpoint — otherwise every re-run
-    # would re-process them forever.
-    return (
-        with_spans(balanced)
-        .select("url", F.explode_outer("spans").alias("span"))
-        .select("url", "span.*")
-    )
-
-
-def recognize_stage(spans: DataFrame) -> DataFrame:
-    """Exploded spans → + content. Width-sorted batching: sorting each
-    partition by payload length keeps Arrow batches size-homogeneous (the
-    reference sorts recognition crops by aspect ratio for the same reason)."""
-    return spans.sortWithinPartitions(F.length("raw")).withColumn(
-        "content", recognize_udf(F.col("kind"), F.col("raw"))
-    )
-
-
-def assemble_stage(recognized: DataFrame) -> DataFrame:
-    """Recognized spans → one row per url with ordered spans + final text.
-
-    ``span_id`` is RE-DENSIFIED to the 0-based position in the sorted array
-    (a free ``transform`` — no shuffle), so assembled output always carries
-    dense ordinal ids regardless of which path produced the spans: the
-    chunked path rebases ids by char offset (sparse but order-preserving),
-    and without this a mixed flagship/chunked output table (CLI ``--resume``
-    can interleave both) would break consumers that index by ``span_id``.
-    """
-    # collect_list skips nulls → span-less urls yield spans=[] and text="".
-    return (
-        recognized.groupBy("url")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.when(
-                        F.col("kind").isNotNull(),
-                        F.struct(*_SPAN_COLS, "content"),
-                    )
-                )
-            ).alias("spans")
-        )
-        .withColumn(
-            "spans",
-            F.transform(
-                "spans",
-                lambda s, i: F.struct(
-                    i.cast("int").alias("span_id"),
-                    *[s[c].alias(c) for c in _SPAN_COLS[1:]],
-                    s["content"].alias("content"),
-                ),
-            ),
-        )
-        .withColumn("extracted_text", assemble_udf(F.col("spans")))
-    )
-
-
-def span_table(pages: DataFrame, partitions: int | None = None) -> DataFrame:
-    """Exploded recognized spans — the persisted intermediate table analog
-    of the reference's crop sink (S5): one row per span, width-sorted
-    recognition batches."""
-    return recognize_stage(detect_stage(pages, partitions))
 
 
 _EXTRACT_RESULT = T.StructType(
@@ -151,21 +67,13 @@ _EXTRACT_RESULT = T.StructType(
 def extract_page_kernel(html) -> tuple[list[dict], str]:
     """The fused per-page kernel: detect → recognize → assemble, one pass.
 
-    Pure composition of the three tested operator kernels; fusing them into
-    one UDF means ONE Arrow round trip per page (html in, spans+text out)
-    instead of three round trips of the full span payload — the dominant
-    cost at high core counts is Arrow (de)serialization on JVM threads, not
-    the Python work itself.
+    Fusing the stages into one UDF means ONE Arrow round trip per page
+    (html in, spans+text out) instead of one round trip of the full span
+    payload per stage — the dominant cost at high core counts is Arrow
+    (de)serialization on JVM threads, not the Python work itself.
     """
-    spans = detect_document(decode_page(html))
-    recognized = []
-    for s in spans:
-        if s.confidence < DETECT_CONF_THRESHOLD:
-            continue
-        d = s._asdict()
-        d["content"] = recognize_span(s.kind, s.raw)
-        recognized.append(d)
-    return recognized, assemble_document(recognized)
+    spans = recognize_piece_kernel(decode_page(html), 0)
+    return spans, assemble_document(spans)
 
 
 def _extract_batches(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
@@ -221,10 +129,12 @@ def make_chunk_udf(max_chunk_chars: int):
 
 
 def recognize_piece_kernel(piece: str, off: int) -> list[dict]:
-    """Detect + recognize one chunk; char offsets and span/block ids are
-    rebased by the chunk's char offset (monotonic across chunks, so
+    """Detect + threshold + recognize one decoded document or chunk.
+
+    Char offsets and span/block ids are rebased by the chunk's char offset
+    ``off`` (0 for a whole page). The rebase is monotonic across chunks, so
     block-equality grouping and span ordering match the unchunked scan —
-    int32-safe for documents < 2^31 chars, enforced by chunk_document)."""
+    int32-safe for documents < 2^31 chars, enforced by chunk_document."""
     out = []
     for s in detect_document(piece):
         if s.confidence < DETECT_CONF_THRESHOLD:
@@ -244,14 +154,83 @@ def _recognize_piece_batches(
 ) -> Iterator[pd.Series]:
     for off_col, piece_col in it:
         yield pd.Series(
-            [recognize_piece_kernel(p, int(o)) for o, p in zip(off_col, piece_col)],
+            [
+                recognize_piece_kernel(decode_page(p), int(o))
+                for o, p in zip(off_col, piece_col)
+            ],
             dtype="object",
         )
 
 
+#: the span UDF: (char offset, html bytes or decoded piece) → recognized spans
 recognize_piece_udf = pandas_udf(
     _recognize_piece_batches, returnType=T.ArrayType(CONTENT_SPAN_SCHEMA)
 )
+
+
+def page_spans() -> Column:
+    """Recognized spans of each page's ``html``: the span UDF at offset 0."""
+    return recognize_piece_udf(F.lit(0), F.col("html"))
+
+
+def span_table(pages: DataFrame, partitions: int | None = None) -> DataFrame:
+    """Exploded recognized spans — the persisted intermediate table analog
+    of the reference's crop sink (S5): one row per span, ``(url, span
+    fields…, content)``. ``explode_outer`` keeps span-less pages (empty or
+    undecodable html) as one all-null span row, so they still reach the
+    output. A map over the scan like :func:`extract_pages`, with the same
+    rule: pass ``partitions`` to opt into a repartition(url)."""
+    balanced = pages.repartition(partitions, F.col("url")) if partitions else pages
+    return balanced.select(
+        "url", F.explode_outer(page_spans()).alias("span")
+    ).select("url", "span.*")
+
+
+def _assemble_batches(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    for spans_col in it:
+        yield spans_col.map(assemble_document)
+
+
+#: scalar pandas UDF: array<struct spans+content> → extracted_text
+assemble_udf = pandas_udf(_assemble_batches, returnType=T.StringType())
+
+
+def _assemble_by_url(recognized: DataFrame) -> DataFrame:
+    """Recognized chunk spans → one row per url with ordered spans + text.
+
+    ``span_id`` is RE-DENSIFIED to the 0-based position in the sorted array
+    (a free ``transform`` — no shuffle), so the chunked output carries the
+    same dense ordinal ids as the flagship: the chunk rebase leaves ids
+    sparse (but order-preserving), and a mixed flagship/chunked output
+    table (CLI ``--resume`` can interleave both) would otherwise break
+    consumers that index by ``span_id``.
+    """
+    # collect_list skips nulls → span-less urls yield spans=[] and text="".
+    return (
+        recognized.groupBy("url")
+        .agg(
+            F.array_sort(
+                F.collect_list(
+                    F.when(
+                        F.col("kind").isNotNull(),
+                        F.struct(*_SPAN_COLS, "content"),
+                    )
+                )
+            ).alias("spans")
+        )
+        .withColumn(
+            "spans",
+            F.transform(
+                "spans",
+                lambda s, i: F.struct(
+                    i.cast("int").alias("span_id"),
+                    *[s[c].alias(c) for c in _SPAN_COLS[1:]],
+                    s["content"].alias("content"),
+                ),
+            ),
+        )
+        .withColumn("extracted_text", assemble_udf(F.col("spans")))
+    )
 
 
 def extract_pages_chunked(
@@ -267,8 +246,8 @@ def extract_pages_chunked(
     math regions — see :func:`texteller_spark.operators.detect.
     safe_split_points`; the byte-domain analog of the reference's sliced
     detection, predict_det.py:198-297) into ≈``max_chunk_chars`` pieces,
-    redistributes the pieces across tasks, detects+recognizes each piece
-    independently with offsets re-projected, and reassembles per url.
+    redistributes the pieces across tasks, runs the span UDF on each piece
+    at its offset, and reassembles per url.
     Because spans cannot straddle a safe point, the pixel-domain
     overlap+boundary-dedup machinery degenerates: piece-wise detection is
     EXACT (equivalence property-tested against the unchunked kernel,
@@ -295,7 +274,7 @@ def extract_pages_chunked(
         )
         .select("url", "span.*")
     )
-    return assemble_stage(spans)
+    return _assemble_by_url(spans)
 
 
 def extract_pages(
@@ -319,9 +298,8 @@ def extract_pages(
     partitioning propagation → second exchange, which AQE then coalesced to
     ONE partition — AQE sizes partitions by shuffle bytes and is blind to
     per-row Python-UDF cost), and three chained span-array UDFs (3× Arrow
-    round trips of the full span payload).  The exploded span-granular plan
-    lives on in :func:`span_table` (checkpointable intermediate,
-    width-sorted recognition batches).
+    round trips of the full span payload).  :func:`span_table` is the same
+    kernel exploded to one row per span (the checkpointable intermediate).
 
     (Design echoes the public literature: UDF-pipeline operator fusion
     ["Optimizing UDF Queries in SQL Data Engines", EDBT'26; "ML Inference

@@ -1888,8 +1888,8 @@ FROM documents
 
 
 def q_span_table(spark, sf):
-    """S5: the exploded span-table checkpoint (width-sorted recognition
-    batches) — span counts by kind over pages derived from documents.
+    """S5: the exploded span-table checkpoint (one row per recognized span,
+    from the span UDF) — span counts by kind over pages derived from documents.
     The doc subset is a stable predicate (``doc_id < 200``), not a
     ``limit`` (layout-dependent), so the oracle can mirror the per-doc
     span structure (5 text + 1 embedding + 1 isolated per ``doc_blocks``)."""

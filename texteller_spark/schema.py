@@ -47,9 +47,6 @@ SPAN_FIELDS = [
     T.StructField("raw", T.StringType(), False),
 ]
 
-SPAN_SCHEMA = T.StructType(SPAN_FIELDS)
-SPANS_ARRAY = T.ArrayType(SPAN_SCHEMA, containsNull=False)
-
 #: span + recognized/normalized payload (post-recognition)
 CONTENT_SPAN_SCHEMA = T.StructType(
     SPAN_FIELDS + [T.StructField("content", T.StringType(), False)]
@@ -60,15 +57,5 @@ EXTRACTED_SCHEMA = T.StructType(
         T.StructField("url", T.StringType(), False),
         T.StructField("spans", T.ArrayType(CONTENT_SPAN_SCHEMA), False),
         T.StructField("extracted_text", T.StringType(), False),
-    ]
-)
-
-#: per-stage, per-partition lineage counters (north rule: checkpointed metrics)
-METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("n_rows", T.LongType(), False),
-        T.StructField("n_bytes", T.LongType(), True),
     ]
 )

@@ -90,22 +90,9 @@ def _build(
         # shuffle (32 MB ≈ a few thousand pages per task)
         .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
         # Iterative operators (the cluster-closure loop) generate a fresh
-        # codegen class per round; at the default 100-entry codegen cache
-        # they evict every other query's compiled+JITed class, and the NEXT
-        # run of an evicted query pays Janino recompile plus a cold C2 JIT
-        # warm-up — measured 13.3 s vs 5.0 s on the 100k-page curation scan
-        # right after three closure runs (executors idle, C2 thread at 31 s
-        # CPU). The entries are small (compiled classes; Metaspace-side,
-        # a few KB each) — sized so a full multi-pass bench sweep (42
-        # entries x 3 interleaved passes, each closure pass generating
-        # dozens of per-round classes) stays resident with margin. Note
-        # (r5): an apparent eviction signature in the full sweep (one scan
-        # query 4 s fresh vs 15-18 s in-sweep) was root-caused NOT to this
-        # cache but to hypervisor CPU steal — 32% steal and 4.5x per-vCPU
-        # skew measured under 32-core load in the degraded window
-        # (BENCH.md "Host steal"); the raise from 4096 is kept as cheap
-        # headroom, it is not load-bearing for that symptom
-        .config("spark.sql.codegen.cache.maxEntries", "65536")
+        # codegen class per round; 4096 entries keep a full multi-pass bench
+        # sweep resident instead of the default 100 evicting it
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .getOrCreate()

@@ -1,9 +1,10 @@
 """Structured Streaming lift of the extraction pipeline.
 
-All three kernels (detect / recognize / assemble) are stateless per-row or
-per-group, so they lift to streaming unchanged: ``readStream`` on the pages
-source → same detect/recognize stages → windowed or ``update``-mode
-assembly.  Late pages are governed by a ``warc_ts`` watermark.
+The span kernel is stateless per page, so it lifts to streaming unchanged:
+``readStream`` on the pages source → the same span UDF as
+:func:`texteller_spark.plans.pipeline.span_table`, exploded per page →
+windowed or ``update``-mode aggregation downstream. Late pages are
+governed by a ``warc_ts`` watermark.
 
 The batch reference has no streaming counterpart (the closest is the Ray
 Serve request loop, ``/root/reference/src/server.py:137-157``); this module
@@ -19,31 +20,33 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.detect import with_spans
-from ..operators.recognize import recognize_udf
+from ..plans.pipeline import page_spans
 
 __all__ = ["streaming_extract", "streaming_span_rates", "streaming_dedup_first_seen"]
 
 
 def streaming_extract(pages_stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Streaming pages → recognized spans (append-mode safe: no global
-    aggregation; per-url assembly happens downstream per micro-batch via
-    ``foreachBatch`` or in update mode)."""
-    spans = (
-        with_spans(pages_stream.withWatermark("warc_ts", watermark))
-        .select("url", "warc_ts", F.explode_outer("spans").alias("span"))
+    """Streaming pages → recognized spans:
+    :func:`~texteller_spark.plans.pipeline.span_table`'s rows plus
+    ``warc_ts`` (append-mode safe: no global aggregation; per-url assembly
+    happens downstream per micro-batch via ``foreachBatch`` or in update
+    mode)."""
+    return (
+        pages_stream.withWatermark("warc_ts", watermark)
+        .select("url", "warc_ts", F.explode_outer(page_spans()).alias("span"))
         .select("url", "warc_ts", "span.*")
     )
-    return spans.withColumn("content", recognize_udf(F.col("kind"), F.col("raw")))
 
 
 def streaming_span_rates(pages_stream: DataFrame, watermark: str = "1 hour",
                          window: str = "10 minutes") -> DataFrame:
     """Windowed aggregate over the stream: span counts by kind per
-    ``warc_ts`` window (late data beyond the watermark drops)."""
+    ``warc_ts`` window (late data beyond the watermark drops). Span-less
+    pages contribute no row. The span UDF recognizes every span it counts:
+    Spark cannot prune unused fields out of a Python UDF's output."""
     spans = (
-        with_spans(pages_stream.withWatermark("warc_ts", watermark))
-        .select("warc_ts", F.explode("spans").alias("span"))
+        pages_stream.withWatermark("warc_ts", watermark)
+        .select("warc_ts", F.explode(page_spans()).alias("span"))
         .select("warc_ts", "span.kind")
     )
     return spans.groupBy(F.window("warc_ts", window), "kind").agg(

@@ -113,14 +113,19 @@ def main():
                 queries, corpus, cents, k=1_000_000, nprobe=nprobe, engine="arrow"
             ).persist()
             n_cand = res.count()  # forces the full join end-to-end
-            top = res.filter(F.col("rnk") <= K + 1).collect()
+            top = (
+                res.filter(F.col("rnk") <= K + 1)
+                .select("query_id", "rnk", "neighbor_id")
+                .collect()
+            )
             wall = time.monotonic() - t0
             res.unpersist()
             release_caches()
+            # top-K by rank, not by collect order
             byq = {}
-            for r in top:
-                if r["neighbor_id"] != r["query_id"]:
-                    byq.setdefault(r["query_id"], []).append(r["neighbor_id"])
+            for q, _, n in sorted(map(tuple, top)):
+                if n != q:
+                    byq.setdefault(q, []).append(n)
             hits = sum(len(set(byq.get(q, [])[:K]) & e) for q, e in exact.items())
             row = {
                 "nlist": nlist,
