@@ -83,14 +83,11 @@ N_PDFS = int(os.environ.get("SPARK_GRAFT_BENCH_PDFS", "20000"))
 PDF_CORPUS = os.environ.get(
     "SPARK_GRAFT_BENCH_PDF_CORPUS", f"/tmp/texteller_pdfs_{N_PDFS}"
 )
-#: link-rich page corpus (anchors across 1000 registrable domains) and a
-#: 64-dim embedding corpus — both deterministic (hash-derived), both
-#: materialized once untimed like CORPUS/PDF_CORPUS
+#: link-rich page corpus (anchors across 1000 registrable domains) —
+#: deterministic (hash-derived), materialized once untimed like
+#: CORPUS/PDF_CORPUS; the 64-dim embedding corpus is tools/bench_ann_recall's
 LINK_CORPUS = os.environ.get(
     "SPARK_GRAFT_BENCH_LINK_CORPUS", f"/tmp/texteller_links_{N_DOCS}"
-)
-EMB_CORPUS = os.environ.get(
-    "SPARK_GRAFT_BENCH_EMB_CORPUS", f"/tmp/texteller_embs_{N_DOCS}"
 )
 
 
@@ -107,6 +104,7 @@ def main() -> None:
     from texteller_spark.plans.pipeline import extract_pages, extract_pages_chunked
     from texteller_spark.session import build_session
     from texteller_spark.sources.pages import pages_df
+    from tools.bench_ann_recall import EMB_CORPUS, ensure_emb_corpus
 
     spark = build_session("bench", cpus=CPUS)
     sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in SF_DIR else -1.0
@@ -178,31 +176,6 @@ def main() -> None:
         d.select(url.alias("url"), html.alias("html_str")).repartition(64).write.mode(
             "overwrite"
         ).parquet(LINK_CORPUS)
-
-    def ensure_emb_corpus():
-        # N_DOCS 64-dim vectors in 128 hash-placed blobs (blob = vec_id %
-        # 128) with +-0.3 noise: the clustered geometry semantic dedup
-        # presumes. Uniform random data would be wrong twice over — Voronoi
-        # cells of arbitrary seeds in 64-dim are massively skewed (one
-        # mega-cluster ~ half the corpus, re-deriving the O(n^2) pair join
-        # this operator exists to avoid), and near-dup structure wouldn't
-        # exist to find. Rows 0..127 are blob centers themselves, so Forgy
-        # seeds land one per blob.
-        if os.path.exists(EMB_CORPUS):
-            return
-        blob = F.col("id") % 128
-
-        def comp(i):
-            center = (F.pmod(F.hash(blob, F.lit(i)), F.lit(2001)) - 1000) / 1000.0
-            noise = (F.pmod(F.hash(F.col("id"), F.lit(i + 64)), F.lit(601)) - 300) / 1000.0
-            return (center + F.when(F.col("id") < 128, 0.0).otherwise(noise)).cast(
-                "float"
-            )
-
-        arr = F.array(*[comp(i) for i in range(64)])
-        spark.range(N_DOCS).select(
-            F.col("id").alias("vec_id"), arr.alias("embedding")
-        ).repartition(64).write.mode("overwrite").parquet(EMB_CORPUS)
 
     def wide(path):
         # ~25 MB of tiny parquet files collapses to 1-2 scan partitions
@@ -370,7 +343,7 @@ def main() -> None:
     if "web_domain_rank" in builders:
         ensure_link_corpus()
     if "cluster_kmeans" in builders or "dedup_semantic" in builders:
-        ensure_emb_corpus()
+        ensure_emb_corpus(spark)
 
     # --- calibration query: fixed pure-JVM work (crc32 + length over every
     # corpus text byte; no Python workers, no shuffle, no UDF), so its time

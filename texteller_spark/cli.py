@@ -13,7 +13,7 @@ import argparse
 
 from pyspark.sql import SparkSession
 
-from .plans.checkpoint import resume_pending, write_extracted
+from .plans.checkpoint import read_done_urls, resume_pending, write_extracted
 from .plans.pipeline import extract_pages, extract_pages_chunked
 from .session import build_session, ship_package
 from .sources.pages import pages_df
@@ -64,7 +64,7 @@ def main(argv: list[str] | None = None) -> None:
         else extract_pages(pages, partitions=args.partitions)
     )
     write_extracted(out, args.output, args.run_id)
-    n = spark.read.parquet(f"{args.output}/extracted").count()
+    n = read_done_urls(spark, args.output).count()
     print(f"extracted table now holds {n} urls")
 
 

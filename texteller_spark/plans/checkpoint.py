@@ -32,16 +32,16 @@ from .io import append_table, read_table, table_target
 __all__ = ["stage_metrics", "write_extracted", "resume_pending", "read_done_urls"]
 
 
-def stage_metrics(df: DataFrame, stage: str, bytes_col: str | None = None) -> DataFrame:
-    """Per-partition counters for ``df`` at this point of the plan."""
-    agg = [F.count(F.lit(1)).alias("n_rows")]
-    agg.append(
-        (F.sum(F.length(F.col(bytes_col))) if bytes_col else F.lit(None).cast("long")).alias("n_bytes")
-    )
+def stage_metrics(df: DataFrame, stage: str, bytes_col: str) -> DataFrame:
+    """Per-partition row count and summed ``length(bytes_col)`` for ``df``
+    at this point of the plan."""
     return (
-        df.select(F.spark_partition_id().alias("partition_id"), *( [F.col(bytes_col)] if bytes_col else [] ))
+        df.select(F.spark_partition_id().alias("partition_id"), bytes_col)
         .groupBy("partition_id")
-        .agg(*agg)
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(F.length(F.col(bytes_col))).alias("n_bytes"),
+        )
         .select(F.lit(stage).alias("stage"), "partition_id", "n_rows", "n_bytes")
     )
 

@@ -13,6 +13,9 @@ Conventions for cross-engine value equality:
 
 from __future__ import annotations
 
+import json
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -3525,13 +3528,12 @@ FROM built
 """
 
 
-# The thematic catalog. Exposed as QUERIES below in
-# least-recently-externally-verified-first order (see _DRIVER_LAST_CHECKED):
-# the external correctness driver walks the dict in insertion order and
-# records at most ~50 entries per round, so this rotation guarantees every
-# entry cycles through external verification on a bounded cadence — no
-# entry can sit permanently past the cap. The FULL catalog always runs
-# uncapped in tests/test_oracle_catalog.py regardless of ordering.
+# The thematic catalog. Exposed as QUERIES below, ordered by the last round
+# that recorded each entry in the committed CORRECTNESS_r{N}.json files,
+# oldest first: the external correctness check walks the dict in insertion
+# order and records at most ~50 entries per round, so every entry cycles
+# through external verification and none sits permanently past the cap. The
+# FULL catalog always runs uncapped in tests/test_oracle_catalog.py.
 _CATALOG = {
     "flagship_extract": flagship,
     "cluster_kmeans": q_cluster_kmeans,
@@ -3619,104 +3621,21 @@ _CATALOG = {
     "f_date_ops": q_date_ops,
 }
 
-#: Round in which the external correctness driver last RECORDED each entry,
-#: read off the committed CORRECTNESS_r{N}.json files (absent = never
-#: driver-checked). Entries the driver's ~50-entry cap clipped in a round
-#: keep their older stamp and therefore sort to the head next round —
-#: update this table when a new CORRECTNESS file lands.
-_DRIVER_LAST_CHECKED = {
-    # recorded in CORRECTNESS_r03.json
-    **dict.fromkeys(
-        [
-            "flagship_extract", "cluster_kmeans", "dedup_semantic",
-            "dedup_semantic_fitted", "j3_range_join", "j4_sessionize",
-            "web_link_graph", "web_domain_rank", "curation_sample_mixture",
-            "curation_quality_lr", "dedup_paragraphs", "text_pii_redact",
-            "text_nfc_normalize", "text_vocab_topk", "curation_gopher_rules",
-            "p10_pack_sequences", "curation_blocklist", "text_bpe_tokens",
-            "text_quality", "text_url_ops", "text_repetition",
-            "text_top_gram_share", "curation_domain_quota", "p4_train_filter",
-            "p7_train_split", "p8_training_prep", "j6_semi_anti",
-            "j7_asof_join", "dedup_embedding_cosine", "dedup_embedding_lsh",
-            "w4_rank_frames", "s4_fixture_scan", "s5_span_table",
-            "s9_pdf_extract", "w5_chunked_extract", "stream_span_rates",
-            "stream_first_seen", "dedup_minhash_lsh", "dedup_clusters",
-            "dedup_incremental", "dedup_lines", "decon_ngram_overlap",
-            "p9_near_dup_prep", "dedup_simhash", "dedup_ngram_jaccard",
-            "sim_ann_lsh", "sim_ann_join", "mm_media_features",
-            "mm_media_frames", "mm_media_resize",
-        ],
-        3,
-    ),
-    # last recorded in CORRECTNESS_r02.json (clipped by the cap in r03)
-    **dict.fromkeys(
-        [
-            "q1_pricing_summary", "j2_region_rollup", "q9_profit_star",
-            "w2_interval_merge", "k1_topk_per_group", "dedup_exact",
-            "sim_cosine_topk", "skew_salted_agg", "a3_rollup",
-            "text_lang_id", "text_fingerprint", "q17_small_qty",
-            "a2_ordered_concat", "w1_first_per_group", "text_token_stats",
-            "j5_next_event", "q3_shipping_priority", "j1_zip_positional",
-            "q6_revenue_scalar", "a1_mode", "k2_global_topk", "set_ops",
-            "set_distinct", "f_json_extract", "f_array_stats", "f_date_ops",
-        ],
-        2,
-    ),
-    # recorded in CORRECTNESS_r04.json (all 50 green except flagship's
-    # permanent rows-only cell) — overrides the older stamps above, so the
-    # 29 entries the r04 cap clipped sort to the head for round 5
-    **dict.fromkeys(
-        [
-            "dedup_embedding_lsh", "dedup_minhash_lsh", "dedup_clusters",
-            "dedup_incremental", "dedup_exact_substring",
-            "dedup_exact_substring_keep1", "p9_near_dup_prep",
-            "p11_substring_prep", "dedup_simhash", "sim_ann_join",
-            "q1_pricing_summary", "j2_region_rollup", "q9_profit_star",
-            "w2_interval_merge", "k1_topk_per_group", "dedup_exact",
-            "sim_cosine_topk", "skew_salted_agg", "a3_rollup",
-            "text_lang_id", "text_fingerprint", "q17_small_qty",
-            "a2_ordered_concat", "w1_first_per_group", "text_token_stats",
-            "j5_next_event", "q3_shipping_priority", "j1_zip_positional",
-            "q6_revenue_scalar", "a1_mode", "k2_global_topk", "set_ops",
-            "set_distinct", "f_json_extract", "f_array_stats", "f_date_ops",
-            "flagship_extract", "cluster_kmeans", "dedup_semantic",
-            "dedup_semantic_fitted", "j3_range_join", "j4_sessionize",
-            "web_link_graph", "web_domain_rank", "curation_sample_mixture",
-            "curation_quality_lr", "dedup_paragraphs", "text_pii_redact",
-            "text_nfc_normalize", "text_vocab_topk",
-        ],
-        4,
-    ),
-}
+def _recorded_rounds() -> dict[str, int]:
+    """Highest CORRECTNESS_r{N}.json round that records each entry. Empty
+    where the files are absent (an executor importing the shipped zip)."""
+    rounds: dict[str, int] = {}
+    for path in Path(__file__).resolve().parents[2].glob("CORRECTNESS_r*.json"):
+        n = int(path.stem.removeprefix("CORRECTNESS_r"))
+        for name in json.loads(path.read_text()):
+            rounds[name] = max(n, rounds.get(name, 0))
+    return rounds
 
-#: Entries whose IMPLEMENTATION changed materially after their last driver
-#: check — their stamp is voided so the changed code re-verifies externally
-#: next round, regardless of rotation position. Clear when the next
-#: CORRECTNESS file records them.
-#: r4 set cleared (all 7 recorded green in r04). r5: the p9/p11/clusters
-#: chains were factored through _fuzzy_canon/_p9_admission/_p11_admission
-#: for the star variants — generated oracle SQL is byte-identical
-#: (asserted at refactor time) and plans unchanged, but the code path
-#: moved, so their stamps are voided for external re-verification.
-_CHANGED_SINCE_CHECK: set[str] = {
-    "dedup_clusters",
-    "p9_near_dup_prep",
-    "p11_substring_prep",
-    # r5: ann_join's exact-rerank tail factored into _exact_rerank (shared
-    # with the new ivf_ann_join) — plan unchanged, but the code path moved
-    "sim_ann_join",
-}
 
-# Least-recently-verified first; Python's sort is stable, so entries with
-# the same stamp keep their thematic _CATALOG order.
-QUERIES = dict(
-    sorted(
-        _CATALOG.items(),
-        key=lambda kv: 0
-        if kv[0] in _CHANGED_SINCE_CHECK
-        else _DRIVER_LAST_CHECKED.get(kv[0], 0),
-    )
-)
+_ROUNDS = _recorded_rounds()
+# Never-recorded entries get round 0; the sort is stable, so entries of the
+# same round keep their thematic _CATALOG order.
+QUERIES = dict(sorted(_CATALOG.items(), key=lambda kv: _ROUNDS.get(kv[0], 0)))
 
 ORACLES = {
     "q1_pricing_summary": _SQL_PRICING,

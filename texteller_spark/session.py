@@ -40,7 +40,7 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
-def _build(
+def build_session(
     app: str = "texteller_spark",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
@@ -73,7 +73,7 @@ def _build(
             f"-XX:ActiveProcessorCount={cores} -XX:+AlwaysPreTouch "
             "-XX:+UseParallelGC -XX:ParallelGCThreads=4",
         )
-    return (
+    spark = (
         builder.appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle))
         # WARC-Date is UTC by spec; pinning the session tz makes every
@@ -97,13 +97,5 @@ def _build(
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
-
-
-def build_session(
-    app: str = "texteller_spark",
-    cpus: int | None = None,
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
-    spark = _build(app, cpus, shuffle_partitions)
     ship_package(spark)
     return spark

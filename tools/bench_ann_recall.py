@@ -5,10 +5,10 @@ fixtures — "a decontamination run at 10^9 rows needs a recall/cost curve
 (bits × bands × probes) measured at the 100k bench scale, or users will
 tune blind". This tool measures exactly that:
 
-- corpus: the SAME 100k×64 clustered-blob embedding corpus bench.py uses
-  (recipe copied verbatim from bench.py `ensure_emb_corpus` — 128
-  hash-placed blob centers, ±0.3 noise), the geometry a near-dup /
-  decontamination workload actually has;
+- corpus: the 100k×64 clustered-blob embedding corpus of
+  `ensure_emb_corpus` below (128 hash-placed blob centers, ±0.3 noise),
+  which bench.py and the other embedding tools share — the geometry a
+  near-dup / decontamination workload actually has;
 - queries: every 397th corpus vector (252 queries), self-match excluded on
   both sides;
 - exact baseline: numpy brute-force cosine top-k per query (rounded to 4
@@ -53,7 +53,14 @@ CONFIGS = [
 
 
 def ensure_emb_corpus(spark):
-    # identical recipe to bench.py ensure_emb_corpus (keep in sync)
+    """Write N_DOCS 64-dim vectors in 128 hash-placed blobs (blob = vec_id %
+    128, ±0.3 noise) to EMB_CORPUS once: the clustered geometry semantic
+    dedup presumes. Uniform random data would be wrong twice over — Voronoi
+    cells of arbitrary seeds in 64-dim are massively skewed (one
+    mega-cluster ~ half the corpus, re-deriving the O(n^2) pair join the
+    operators exist to avoid), and near-dup structure wouldn't exist to
+    find. Rows 0..127 are blob centers themselves, so Forgy seeds land one
+    per blob."""
     from pyspark.sql import functions as F
 
     if os.path.exists(EMB_CORPUS):

@@ -13,7 +13,8 @@ background ~W·N/P dwarfs the hot key; skew binds when P ≫ windows/doc —
 exactly the cluster configuration the north rule targets):
 
 1. UNSALTED: the straggler is real — max/median task runtime of the
-   occurrence-join stage, from the REST API task summaries.
+   occurrence-join stage, from the status-store task summaries
+   (tools/stages.py).
 2. SALTED (salt_buckets=32): the hot key spreads across 32 tasks —
    same output rows, bounded max/median.
 3. AQE eligibility: OptimizeSkewedJoin does NOT match the shipped shape
@@ -37,85 +38,21 @@ import os
 import re
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.stages import completed_stages  # noqa: E402
 
 N_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "100000"))
 HOT_FRAC = 0.3
 SHUFFLE_PARTS = int(os.environ.get("SPARK_GRAFT_SKEW_PARTS", "256"))
 SALT = 32
-UI_PORT = 4059
 CORPUS = os.environ.get(
     "SPARK_GRAFT_SKEW_CORPUS", f"/tmp/texteller_hotkey_{N_DOCS}"
 )
 
 
-def _app_id(ui: str) -> str:
-    apps = json.load(urllib.request.urlopen(f"{ui}/api/v1/applications"))
-    return apps[0]["id"]
-
-
-def stage_task_summaries(ui: str, app_id: str, after_stage: int):
-    """[(stage_id, name, n_tasks, med_run_ms, max_run_ms)] for COMPLETE
-    stages with id > after_stage, from the REST task summaries."""
-    stages = json.load(
-        urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app_id}/stages"
-            "?withSummaries=true&quantiles=0.5,1.0&status=complete"
-        )
-    )
-    out = []
-    for s in stages:
-        if s["stageId"] <= after_stage:
-            continue
-        dist = s.get("taskMetricsDistributions") or {}
-        run = dist.get("executorRunTime")
-        if not run:
-            continue
-        out.append(
-            (s["stageId"], s["name"].split("\n")[0], s["numCompleteTasks"],
-             run[0], run[-1])
-        )
-    return out
-
-
-def join_stage(ui: str, app_id: str, after_stage: int):
-    """The occurrence-join stage = the new stage with the largest shuffle
-    READ volume (it consumes both the keyed and dup exchanges); returns
-    its task-runtime median/max from the REST summaries."""
-    stages = json.load(
-        urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app_id}/stages"
-            "?withSummaries=true&quantiles=0.5,1.0&status=complete"
-        )
-    )
-    best, best_read = None, -1
-    for s in stages:
-        if s["stageId"] <= after_stage:
-            continue
-        if s.get("shuffleReadBytes", 0) > best_read:
-            best, best_read = s, s.get("shuffleReadBytes", 0)
-    dist = best.get("taskMetricsDistributions") or {}
-    run = dist.get("executorRunTime") or [0, 0]
-    return {
-        "stage": best["stageId"],
-        "tasks": best["numCompleteTasks"],
-        "shuffle_read_mb": round(best_read / 1e6, 1),
-        "med_task_ms": run[0],
-        "max_task_ms": run[-1],
-    }
-
-
-def last_stage_id(ui: str, app_id: str) -> int:
-    stages = json.load(
-        urllib.request.urlopen(f"{ui}/api/v1/applications/{app_id}/stages")
-    )
-    return max((s["stageId"] for s in stages), default=-1)
-
-
 def main():
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from texteller_spark.operators.dedup import (
@@ -124,19 +61,12 @@ def main():
         release_caches,
         remove_repeated_substrings,
     )
+    from texteller_spark.session import build_session
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("bench-exactsubstr-skew")
-        .config("spark.sql.shuffle.partitions", str(SHUFFLE_PARTS))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", str(UI_PORT))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
+    spark = build_session(
+        "bench-exactsubstr-skew", cpus=cpus, shuffle_partitions=SHUFFLE_PARTS
     )
-    ui = f"http://localhost:{UI_PORT}"
 
     if not os.path.exists(CORPUS):
         n_hot = int(N_DOCS * HOT_FRAC)
@@ -164,7 +94,6 @@ def main():
         hot.unionByName(cold).repartition(64).write.mode("overwrite").parquet(CORPUS)
     docs = spark.read.parquet(CORPUS)
 
-    app_id = _app_id(ui)
     # AQE partition coalescing OFF for the salt legs: it targets COMPRESSED
     # bytes, and near-identical hot rows compress ~50x, so locally it merges
     # the hot partitions with cold ones and hides the row skew the cluster
@@ -180,14 +109,26 @@ def main():
     rows_out = {}
     for label, salt in (("unsalted", 0), (f"salted_{SALT}", SALT)):
         release_caches()
-        mark = last_stage_id(ui, app_id)
+        mark = max((s["stage"] for s in completed_stages(spark)), default=-1)
         t0 = time.perf_counter()
         out = remove_repeated_substrings(docs, window=50, salt_buckets=salt)
         rows_out[label] = out.filter(F.col("n_dropped_tokens") > 0).count()
         wall = round(time.perf_counter() - t0, 2)
         release_caches()
-        straggler = join_stage(ui, app_id, mark)
-        results[label] = {"wall_sec": wall, **straggler}
+        # the occurrence-join stage: the new stage with the largest shuffle
+        # READ volume (it consumes both the keyed and dup exchanges)
+        join = max(
+            (s for s in completed_stages(spark) if s["stage"] > mark),
+            key=lambda s: s["shuffle_read_bytes"],
+        )
+        results[label] = {
+            "wall_sec": wall,
+            "stage": join["stage"],
+            "tasks": join["tasks"],
+            "shuffle_read_mb": round(join["shuffle_read_bytes"] / 1e6, 1),
+            "med_task_ms": join["med_task_ms"],
+            "max_task_ms": join["max_task_ms"],
+        }
         print(json.dumps({"leg": label, **results[label]}))
 
     assert rows_out["unsalted"] == rows_out[f"salted_{SALT}"], rows_out

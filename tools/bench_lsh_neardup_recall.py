@@ -95,19 +95,13 @@ def ensure_corpus(spark, base, mut):
 
 
 def main():
-    from pyspark.sql import SparkSession
-
     from texteller_spark.operators.dedup import release_caches
     from texteller_spark.operators.similarity import lsh_near_dup_pairs
+    from texteller_spark.session import build_session
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("bench-lsh-neardup-recall")
-        .config("spark.sql.shuffle.partitions", str(2 * cpus))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
+    spark = build_session(
+        "bench-lsh-neardup-recall", cpus=cpus, shuffle_partitions=2 * cpus
     )
     base, mut, true_cos = build_vectors()
     ensure_corpus(spark, base, mut)

@@ -7,8 +7,8 @@ embedding corpus under both plan shapes — the pre-rewrite shape (the
 vector + norm ride the band self-join ``bands`` times, reconstructed
 byte-for-byte from the pre-fix source) and the shipped vector-free shape
 (`similarity.lsh_near_dup_pairs`) — and reads per-stage shuffle-write
-totals from the Spark REST API (UI enabled here only). Identical pair
-output is asserted.
+totals from Spark's status store (tools/stages.py). Identical pair output
+is asserted. The corpus is tools/bench_ann_recall.py's.
 
 Usage: python tools/bench_lsh_shuffle.py. Prints one JSON line.
 """
@@ -19,48 +19,16 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-N_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "100000"))
-EMB_CORPUS = os.environ.get(
-    "SPARK_GRAFT_BENCH_EMB_CORPUS", f"/tmp/texteller_embs_{N_DOCS}"
-)
+from tools.bench_ann_recall import EMB_CORPUS, N_DOCS, ensure_emb_corpus  # noqa: E402
+from tools.stages import completed_stages  # noqa: E402
+
 DIM, BITS, BANDS, THRESHOLD = 64, 32, 4, 0.9
 
 
-def shuffle_write_bytes(ui_url: str) -> int:
-    apps = json.load(urllib.request.urlopen(f"{ui_url}/api/v1/applications"))
-    app_id = apps[0]["id"]
-    stages = json.load(
-        urllib.request.urlopen(f"{ui_url}/api/v1/applications/{app_id}/stages")
-    )
-    return sum(s.get("shuffleWriteBytes", 0) for s in stages)
-
-
-def ensure_emb_corpus(spark):
-    """The bench.py clustered-blob recipe, verbatim (128 hash-placed blob
-    centers, ±0.3 noise)."""
-    from pyspark.sql import functions as F
-
-    if os.path.exists(EMB_CORPUS):
-        return
-    blob = F.col("id") % 128
-
-    def comp(i):
-        center = (F.pmod(F.hash(blob, F.lit(i)), F.lit(2001)) - 1000) / 1000.0
-        noise = (F.pmod(F.hash(F.col("id"), F.lit(i + 64)), F.lit(601)) - 300) / 1000.0
-        return (center + F.when(F.col("id") < 128, 0.0).otherwise(noise)).cast("float")
-
-    arr = F.array(*[comp(i) for i in range(DIM)])
-    spark.range(N_DOCS).select(
-        F.col("id").alias("vec_id"), arr.alias("embedding")
-    ).write.mode("overwrite").parquet(EMB_CORPUS)
-
-
 def main():
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from texteller_spark.operators.dedup import _materialize, release_caches
@@ -68,19 +36,10 @@ def main():
         lsh_near_dup_pairs,
         with_lsh_bands,
     )
+    from texteller_spark.session import build_session
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("bench-lsh-shuffle")
-        .config("spark.sql.shuffle.partitions", str(2 * cpus))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", "4058")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
-    ui = "http://localhost:4058"
+    spark = build_session("bench-lsh-shuffle", cpus=cpus, shuffle_partitions=2 * cpus)
     ensure_emb_corpus(spark)
     corpus = spark.read.parquet(EMB_CORPUS)
 
@@ -147,12 +106,12 @@ def main():
         )),
         ("old_vector_rides_bands", lambda: old_style_pairs(corpus)),
     ):
-        before = shuffle_write_bytes(ui)
+        before = sum(s["shuffle_write_bytes"] for s in completed_stages(spark))
         t0 = time.perf_counter()
         n = build().count()
         wall = round(time.perf_counter() - t0, 1)
         release_caches()
-        after = shuffle_write_bytes(ui)
+        after = sum(s["shuffle_write_bytes"] for s in completed_stages(spark))
         results[label] = {
             "pairs": n,
             "shuffle_write_mb": round((after - before) / 1e6, 1),

@@ -6,8 +6,8 @@ shape shuffled the full 64-long signature once per band (16x at the
 default) through the band self-join. This tool measures total shuffle
 WRITE bytes for the same pair query under both shapes on the same corpus
 (the planted-mutation corpus of tools/bench_minhash_recall.py), reading
-per-stage metrics from the Spark REST API (UI enabled here only — the
-engine's sessions keep it off).
+per-stage metrics from Spark's status store (tools/stages.py) under the
+engine's own session settings.
 
 The OLD shape is reconstructed inline (band rows carry the signature
 column through the exchange; est_jaccard computed directly on the joined
@@ -24,27 +24,17 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.bench_minhash_recall import CORPUS, ensure_corpus  # noqa: E402
+from tools.stages import completed_stages  # noqa: E402
 
 BANDS = 16
 THRESHOLD = 0.5
 
 
-def shuffle_write_bytes(ui_url: str) -> int:
-    apps = json.load(urllib.request.urlopen(f"{ui_url}/api/v1/applications"))
-    app_id = apps[0]["id"]
-    stages = json.load(
-        urllib.request.urlopen(f"{ui_url}/api/v1/applications/{app_id}/stages")
-    )
-    return sum(s.get("shuffleWriteBytes", 0) for s in stages)
-
-
 def main():
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from texteller_spark.operators.dedup import (
@@ -54,19 +44,10 @@ def main():
         release_caches,
         with_minhash,
     )
+    from texteller_spark.session import build_session
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("bench-minhash-shuffle")
-        .config("spark.sql.shuffle.partitions", str(2 * cpus))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", "4057")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
-    ui = "http://localhost:4057"
+    spark = build_session("bench-minhash-shuffle", cpus=cpus, shuffle_partitions=2 * cpus)
     ensure_corpus(spark)
     corpus = spark.read.parquet(CORPUS)
 
@@ -118,12 +99,12 @@ def main():
         )),
         ("old_signature_rides_bands", lambda: old_style_pairs(corpus)),
     ):
-        before = shuffle_write_bytes(ui)
+        before = sum(s["shuffle_write_bytes"] for s in completed_stages(spark))
         t0 = time.perf_counter()
         n = build().count()
         wall = round(time.perf_counter() - t0, 1)
         release_caches()
-        after = shuffle_write_bytes(ui)
+        after = sum(s["shuffle_write_bytes"] for s in completed_stages(spark))
         results[label] = {
             "pairs": n,
             "shuffle_write_mb": round((after - before) / 1e6, 1),

@@ -35,11 +35,9 @@ def norm_cell(v):
 
 
 def multiset(rows, cols):
+    """Order-insensitive value multiset, columns taken in name order."""
     order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = []
-    for r in rows:
-        out.append(tuple(norm_cell(r[i]) for i in order))
-    return sorted(out, key=repr)
+    return sorted((tuple(norm_cell(r[i]) for i in order) for r in rows), key=repr)
 
 
 def main():
