@@ -98,6 +98,16 @@ def test_decode_page_total():
     assert decode_page(memoryview(b"<p>x</p>")) == "<p>x</p>"
 
 
+def test_deep_mathml_degrades_to_text():
+    """1000-deep <mrow> nesting overflows the recursive MathML walk; the
+    page still extracts, with the formula's visible text."""
+    from texteller_spark.plans.pipeline import extract_page_kernel
+
+    math = "<math>" + "<mrow>" * 1000 + "<mi>x</mi>" + "</mrow>" * 1000 + "</math>"
+    _, text = extract_page_kernel(f"<p>deep {math} end</p>".encode())
+    assert "x" in text
+
+
 def test_cli_end_to_end(tmp_path, spark):
     """The spark-submit surface: synth → extract → resume is a no-op."""
     from texteller_spark import cli

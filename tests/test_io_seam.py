@@ -38,6 +38,27 @@ def test_parquet_roundtrip_and_missing(spark, tmp_path):
     assert got is not None and got.count() == 10
 
 
+def test_crash_before_first_commit_reads_as_missing(spark, tmp_path):
+    """A directory holding only the commit protocol's ``_temporary/`` has
+    no committed rows yet."""
+    t = table_target(str(tmp_path), "t")
+    (tmp_path / "t" / "_temporary" / "0").mkdir(parents=True)
+    assert read_table(spark, t) is None
+
+
+def test_unreadable_table_raises(spark, tmp_path):
+    """A corrupt checkpoint must not read as "no checkpoint": a resumed run
+    would re-extract and append every page again."""
+    from py4j.protocol import Py4JJavaError
+
+    t = table_target(str(tmp_path), "t")
+    append_table(spark.range(3).withColumnRenamed("id", "url"), t)
+    # sorts before Spark's own part file, so schema inference reads it
+    (tmp_path / "t" / "part-00000-0-junk.snappy.parquet").write_bytes(b"junk\n")
+    with pytest.raises(Py4JJavaError):
+        read_table(spark, t)
+
+
 def test_checkpoint_resume_through_seam(spark, tmp_path):
     """resume_pending over the seam: after checkpointing 3 urls, only the
     remainder of the scan is pending."""

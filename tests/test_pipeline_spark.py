@@ -2,9 +2,10 @@
 resumable checkpointing, plan shape."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from texteller_spark.plans.checkpoint import resume_pending, stage_metrics, write_extracted
-from texteller_spark.plans.pipeline import extract_pages
+from texteller_spark.plans.pipeline import extract_pages, extract_pages_chunked
 from texteller_spark.schema import PAGES_SCHEMA
 from texteller_spark.sources.pages import expected_extraction, pages_df, tiny_corpus
 
@@ -62,6 +63,7 @@ def test_resume_anti_join(spark, tiny_df, tmp_path):
     out_dir = str(tmp_path / "out")
     first = extract_pages(tiny_df.limit(5))
     write_extracted(first, out_dir, run_id="r1")
+    r1_urls = {r["url"] for r in spark.read.parquet(f"{out_dir}/extracted").collect()}
     pending = resume_pending(tiny_df, out_dir)
     assert pending.count() == tiny_df.count() - 5
     # completing the run leaves nothing pending
@@ -71,6 +73,44 @@ def test_resume_anti_join(spark, tiny_df, tmp_path):
     m = spark.read.parquet(f"{out_dir}/_metrics")
     assert m.count() > 0
     assert set(m.columns) == {"stage", "partition_id", "n_rows", "n_bytes"}
+    # r2's counters describe exactly the rows r2 appended: the metrics job
+    # must not re-run the anti-join against the table it just grew
+    r2 = m.filter(F.col("stage") == "assemble:r2").agg(
+        F.sum("n_rows").alias("rows"), F.sum("n_bytes").alias("bytes")
+    ).first()
+    r2_texts = [
+        r["extracted_text"]
+        for r in spark.read.parquet(f"{out_dir}/extracted").collect()
+        if r["url"] not in r1_urls
+    ]
+    assert r2["rows"] == tiny_df.count() - 5 == len(r2_texts)
+    assert r2["bytes"] == sum(len(t) for t in r2_texts)
+
+
+def test_write_extracted_runs_kernel_once_per_page(spark, tiny_df, tmp_path):
+    """The write and its metrics come from one kernel pass: a counting UDF
+    in front of the kernel logs one line per row it sees."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    log = tmp_path / "rows.log"
+
+    # defined in the test body so the worker unpickles it by value
+    @pandas_udf("binary")
+    def count_rows(html: pd.Series) -> pd.Series:
+        with open(log, "a") as f:
+            f.write("row\n" * len(html))
+        return html
+
+    n = tiny_df.count()
+    counted = tiny_df.withColumn("html", count_rows("html"))
+    write_extracted(extract_pages(counted), str(tmp_path / "whole"), run_id="w")
+    assert len(log.read_text().splitlines()) == n
+    log.unlink()
+    write_extracted(
+        extract_pages_chunked(counted, 200), str(tmp_path / "chunked"), run_id="c"
+    )
+    assert len(log.read_text().splitlines()) == n
 
 
 def test_stage_metrics_counts(spark, tiny_df):

@@ -204,13 +204,13 @@ def _el_tex(el: ElementTree.Element) -> str:
 def mathml_to_latex(src: str) -> str:
     """Transliterate a ``<math>…</math>`` element source to LaTeX.
 
-    Total function: on parse failure, returns the tag-stripped visible text.
+    Total function: on parse failure, or nesting deeper than the recursive
+    walk can go, returns the tag-stripped visible text.
     """
     cleaned = _pre_clean(src)
     try:
-        root = ElementTree.fromstring(cleaned)
-    except ElementTree.ParseError:
+        tex = _el_tex(ElementTree.fromstring(cleaned))
+    except (ElementTree.ParseError, RecursionError):
         stripped = re.sub(r"<[^>]*>?", " ", cleaned)  # also eats dangling tags
         return re.sub(r"\s+", " ", _sym(stripped)).strip()
-    tex = _el_tex(root)
     return re.sub(r"\s+", " ", tex).strip()

@@ -6,7 +6,16 @@ North-rule requirements: "per-partition lineage and counters are checkpointed
 * :func:`stage_metrics` — per-partition row/byte counters for any stage,
   computed with ``spark_partition_id()`` + a plain groupBy (map-side partial
   aggregation; the only shuffle is P→few rows).
-* :func:`write_extracted` — append results + the per-run metrics table.
+* :func:`write_extracted` — append results + the per-run metrics table from
+  one pass of the kernel. The frame is local-checkpointed lazily: the write
+  job computes each row once and keeps its blocks on the executors, and the
+  metrics job reads those blocks instead of re-running scan, resume
+  anti-join and kernel. ``persist()`` cannot stand in for it. Written first,
+  the append to ``extracted`` re-caches a ``--resume`` plan (it reads that
+  path through the anti-join), so the metrics job would count 0 rows; with
+  metrics first, AQE may not coalesce a cached plan's partitions
+  (``canChangeCachedPlanOutputPartitioning`` is off), so the write would
+  fan out into one file per shuffle partition.
 * :func:`resume_pending` — anti-join the input scan against already-
   checkpointed urls, so a re-run only processes the remainder. On Iceberg
   this is ``pages.join(done, 'url', 'left_anti')`` against the snapshot-
@@ -47,9 +56,20 @@ def stage_metrics(df: DataFrame, stage: str, bytes_col: str) -> DataFrame:
 
 
 def write_extracted(extracted: DataFrame, out_dir: str, run_id: str) -> None:
-    """Append the extraction output + metrics through the IO seam
-    (parquet path in-sandbox; ``writeTo().append()`` under
-    ``SPARK_GRAFT_TABLE_FORMAT=iceberg``)."""
+    """Append the extraction output, then its ``assemble:<run_id>`` metrics,
+    through the IO seam (parquet path in-sandbox; ``writeTo().append()``
+    under ``SPARK_GRAFT_TABLE_FORMAT=iceberg``).
+
+    The kernel runs once per row: ``localCheckpoint(eager=False)`` cuts the
+    lineage at this frame, so the metrics job reads the blocks the write
+    job left on the executors and counts exactly the rows it wrote, while
+    AQE still plans the write's partitions (the module docstring says why
+    not ``persist()``). The blocks live in executor storage, not on a
+    reliable filesystem: if an executor is lost between the two jobs, the
+    metrics job fails loudly instead of recomputing. Spark frees the blocks
+    when the frame is garbage-collected.
+    """
+    extracted = extracted.localCheckpoint(eager=False)
     append_table(extracted, table_target(out_dir, "extracted"))
     m = stage_metrics(extracted, f"assemble:{run_id}", bytes_col="extracted_text")
     append_table(m, table_target(out_dir, "_metrics"))

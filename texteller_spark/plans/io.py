@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 __all__ = ["table_format", "table_target", "append_table", "read_table"]
@@ -58,13 +59,24 @@ def append_table(df: DataFrame, target: str, fmt: str | None = None) -> None:
         df.writeTo(target).using("iceberg").create()
 
 
+# read errors that mean "nothing committed yet": no path (first run), or a
+# directory holding only ``_temporary/`` (a crash before the first commit)
+_NOT_YET_WRITTEN = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
 def read_table(spark: SparkSession, target: str, fmt: str | None = None) -> DataFrame | None:
-    """Read ``target``; None when it does not exist yet (first run)."""
+    """Read ``target``; None when nothing has been committed to it yet.
+
+    Any other failure (e.g. a corrupt file) raises: treating an unreadable
+    checkpoint as empty would make a resumed run re-extract and append
+    every page again."""
     if table_format(fmt) == "parquet":
         try:
             return spark.read.parquet(target)
-        except Exception:
-            return None
+        except AnalysisException as e:
+            if e.getCondition() in _NOT_YET_WRITTEN:
+                return None
+            raise
     if not spark.catalog.tableExists(target):
         return None
     return spark.read.table(target)
