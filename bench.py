@@ -1,5 +1,5 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
+local[$SPARK_GRAFT_CPUS]; prints ONE compact JSON summary line.
 
 Methodology (parity with the reference's warmup-skipped timing,
 det_model/inference.py:117-121): a small warmup run primes the JVM, Python
@@ -12,25 +12,28 @@ windows, so consecutive per-query reps sample ONE window and
 round-over-round cells become unfalsifiable. The timed section therefore
 runs >=SPARK_GRAFT_BENCH_PASSES (default 3) FULL INTERLEAVED PASSES over
 the whole query list — the same discipline tools/bench_scaling.py already
-uses for the N→4N legs — and reports the per-query MEDIAN ACROSS PASSES.
+uses for its levels — and reports the per-query MEDIAN ACROSS PASSES.
 Each pass opens with a fixed pure-JVM calibration scan (crc32+length over
-the whole corpus: no Python, no shuffle, constant work) whose per-pass
-times are committed into the JSON, so an external reader can separate host
-regime from code: if round R's calibration is 1.5× round R-1's, the window
-was 1.5× slower — normalize before comparing query cells. Raw per-pass
-samples for every query are also committed (`queries_passes`) so any cell's
-spread is inspectable, not just its median.
+the whole corpus: no Python, no shuffle, constant work) so an external
+reader can separate host regime from code: if round R's calibration is
+1.5× round R-1's, the window was 1.5× slower — normalize before comparing
+query cells.
 
-Round-5 addition: per-pass /proc/stat deltas (`host.per_pass_cpu`:
-steal%/busy%) — the noise regimes were root-caused to hypervisor CPU
-steal, which engages under sustained multi-core load and which a short
-calibration scan under-detects (BENCH.md "Host steal"); steal% is the
-direct window-quality metric an external reader should gate on.
+Round-5 addition: per-pass /proc/stat deltas (steal%/busy%) — the noise
+regimes were root-caused to hypervisor CPU steal, which engages under
+sustained multi-core load and which a short calibration scan under-detects
+(BENCH.md "Host steal"); steal% is the direct window-quality metric an
+external reader should gate on.
+
+The last stdout line is a summary (per-query medians, calibration median,
+median and max steal%, docs/s) that stays under 1500 chars; the raw
+per-pass samples of every query, the calibration scan and the host go to
+PASSES_FILE, which the summary names.
 
 The flagship metric is extraction docs/sec over the deterministic synthetic
 corpus (SPARK_GRAFT_BENCH_DOCS pages, default 100000). The scaling protocol
-(tools/bench_scaling.py) runs this file at two parallelism levels for the
-N→4N efficiency figure.
+(tools/bench_scaling.py) runs this file at several parallelism levels for
+the N→4N efficiency figure.
 """
 
 from __future__ import annotations
@@ -42,15 +45,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# glibc tuning inherited by Python workers (must be set before the JVM
-# starts): avoid mmap/munmap per large html string — munmap TLB-shootdown
-# IPIs scale badly with worker count (+19% at 32 cores, measured)
-os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "-1")
-os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "134217728")
-os.environ.setdefault("MALLOC_ARENA_MAX", "2")
+from perfbench.inputs import materialize  # noqa: E402
+from perfbench.probe import host_cpu, host_window  # noqa: E402
+from texteller_spark.session import default_parallelism  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_parallelism()
 N_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "100000"))
 #: restrict to a comma-separated subset (scaling experiment runs only the
 #: pipeline); empty = all
@@ -65,101 +65,73 @@ PASSES = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3"))
 #: flagship extraction runs per pass (total samples = PASSES x this); the
 #: headline docs/sec deserves a wider median than the query cells
 FLAGSHIP_PER_PASS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
-#: warmup passes before timing (multi-executor runs need 2: each fresh
-#: executor JVM JITs the whole codepath independently)
-WARMUP = int(os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "1"))
-#: store html gzip-compressed (WARC-faithful; default on) — the kernel
-#: decompresses worker-side, so compressed bytes cross the Arrow feed
-GZIP_HTML = os.environ.get("SPARK_GRAFT_BENCH_GZIP", "1") == "1"
-#: materialized synthetic corpus (generated once, untimed — production reads
-#: an existing table; generating inside the timed path would measure synth)
-CORPUS = os.environ.get(
-    "SPARK_GRAFT_BENCH_CORPUS",
-    f"/tmp/texteller_pages_{N_DOCS}" + ("_gzip" if GZIP_HTML else ""),
-)
-#: PDF throughput corpus (north rule: "PDF/layout parse") — synthesized
-#: once from the deterministic page text (untimed), like CORPUS
+#: PDF throughput corpus size (north rule: "PDF/layout parse")
 N_PDFS = int(os.environ.get("SPARK_GRAFT_BENCH_PDFS", "20000"))
-PDF_CORPUS = os.environ.get(
-    "SPARK_GRAFT_BENCH_PDF_CORPUS", f"/tmp/texteller_pdfs_{N_PDFS}"
-)
-#: link-rich page corpus (anchors across 1000 registrable domains) —
-#: deterministic (hash-derived), materialized once untimed like
-#: CORPUS/PDF_CORPUS; the 64-dim embedding corpus is tools/bench_ann_recall's
-LINK_CORPUS = os.environ.get(
-    "SPARK_GRAFT_BENCH_LINK_CORPUS", f"/tmp/texteller_links_{N_DOCS}"
-)
+#: synthetic corpora are materialized here once, untimed (production reads
+#: an existing table; generating inside the timed path would measure synth)
+CACHE = "/tmp"
+#: raw per-pass samples; the summary line names this file
+PASSES_FILE = "/tmp/texteller_bench_passes.json"
 
 
 def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def main() -> None:
-    from pyspark.sql import functions as F
-
-    from texteller_spark.operators import textops as T
-    from texteller_spark.operators.dedup import release_caches
-    from texteller_spark.plans import queries as Q
-    from texteller_spark.plans.pipeline import extract_pages, extract_pages_chunked
-    from texteller_spark.session import build_session
+def pages_corpus(spark) -> str:
+    """N_DOCS synthetic pages, html stored gzip-compressed (WARC-faithful):
+    the kernel decompresses worker-side, so compressed bytes cross the
+    Arrow feed."""
     from texteller_spark.sources.pages import pages_df
-    from tools.bench_ann_recall import EMB_CORPUS, ensure_emb_corpus
 
-    spark = build_session("bench", cpus=CPUS)
-    sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in SF_DIR else -1.0
-
-    if not os.path.exists(CORPUS):
+    def build(out):
         # fixed partition count: corpus file layout must not depend on the
         # generating session's parallelism (scan splits = files here, since
         # snappy-compressed row groups are far below maxPartitionBytes)
-        pages_df(spark, N_DOCS, partitions=64, gzip_html=GZIP_HTML).write.mode(
+        pages_df(spark, N_DOCS, partitions=64, gzip_html=True).write.mode(
             "overwrite"
-        ).parquet(CORPUS)
-    corpus = spark.read.parquet(CORPUS)
+        ).parquet(out)
 
-    def ensure_pdf_corpus():
-        # one PDF per page (text re-flowed to 80-char lines), FlateDecode on
-        # even ids — generated on executors, materialized once (untimed)
-        import pandas as pd
+    return materialize(CACHE, f"texteller_pages_{N_DOCS}_gzip", build)
 
-        from texteller_spark.sources.pdf import build_pdf
 
-        if os.path.exists(PDF_CORPUS):
-            return
+def pdf_corpus(spark) -> str:
+    """One PDF per page (text re-flowed to 80-char lines), FlateDecode on
+    even ids — generated on executors."""
+    import pandas as pd
 
-        def to_pdf(batches):
-            for pdf in batches:
-                rows = {
-                    "url": pdf["url"],
-                    "pdf": [
-                        build_pdf(
-                            [[t[i : i + 80] for i in range(0, max(len(t), 1), 80)]],
-                            compress=(j % 2 == 0),
-                        )
-                        for j, t in enumerate(pdf["text"])
-                    ],
-                }
-                yield pd.DataFrame(rows)
+    from texteller_spark.sources.pages import pages_df
+    from texteller_spark.sources.pdf import build_pdf
 
+    def to_pdf(batches):
+        for pdf in batches:
+            rows = {
+                "url": pdf["url"],
+                "pdf": [
+                    build_pdf(
+                        [[t[i : i + 80] for i in range(0, max(len(t), 1), 80)]],
+                        compress=(j % 2 == 0),
+                    )
+                    for j, t in enumerate(pdf["text"])
+                ],
+            }
+            yield pd.DataFrame(rows)
+
+    def build(out):
         pages_df(spark, N_PDFS, partitions=64).select("url", "text").mapInPandas(
             to_pdf, schema="url string, pdf binary"
-        ).write.mode("overwrite").parquet(PDF_CORPUS)
+        ).write.mode("overwrite").parquet(out)
 
-    def extract_pdfs():
-        from texteller_spark.sources.pdf import make_extract_pdf_udf
+    return materialize(CACHE, f"texteller_pdfs_{N_PDFS}", build)
 
-        pdfs = spark.read.parquet(PDF_CORPUS)
-        return pdfs.select(
-            "url", make_extract_pdf_udf()(F.col("pdf")).alias("text")
-        )
 
-    def ensure_link_corpus():
-        # N_DOCS pages over 1000 registrable domains, three anchors each
-        # (two cross-domain, one www-host variant) — page:domain ratio ~100,
-        # the shape of a real crawl's host graph at this scale
-        if os.path.exists(LINK_CORPUS):
-            return
+def link_corpus(spark) -> str:
+    """N_DOCS pages over 1000 registrable domains, three anchors each (two
+    cross-domain, one www-host variant) — page:domain ratio ~100, the shape
+    of a real crawl's host graph at this scale."""
+    from pyspark.sql import functions as F
+
+    def build(out):
         d = spark.range(N_DOCS).select(F.col("id").alias("doc_id"))
         a1 = (F.col("doc_id") * 7 + 3) % 1000
         a2 = (F.col("doc_id") * 13 + 5) % 1000
@@ -175,7 +147,30 @@ def main() -> None:
         )
         d.select(url.alias("url"), html.alias("html_str")).repartition(64).write.mode(
             "overwrite"
-        ).parquet(LINK_CORPUS)
+        ).parquet(out)
+
+    return materialize(CACHE, f"texteller_links_{N_DOCS}", build)
+
+
+def query_builders(spark, corpus) -> dict:
+    """Every headline query: name -> zero-argument builder of its
+    DataFrame. Building the dict touches neither ``spark`` nor ``corpus``;
+    a builder materializes the corpus it reads on its first call, which is
+    the untimed warmup."""
+    from pyspark.sql import functions as F
+
+    from texteller_spark.operators import textops as T
+    from texteller_spark.plans import queries as Q
+    from texteller_spark.plans.pipeline import extract_pages, extract_pages_chunked
+    from tools.bench_ann_recall import ensure_emb_corpus
+
+    def extract_pdfs():
+        from texteller_spark.sources.pdf import make_extract_pdf_udf
+
+        pdfs = spark.read.parquet(pdf_corpus(spark))
+        return pdfs.select(
+            "url", make_extract_pdf_udf()(F.col("pdf")).alias("text")
+        )
 
     def wide(path):
         # ~25 MB of tiny parquet files collapses to 1-2 scan partitions
@@ -189,14 +184,14 @@ def main() -> None:
         # aggregation -> 3 PageRank rounds over the ~1000-node host graph
         from texteller_spark.operators.graph import link_edges, pagerank
 
-        return pagerank(link_edges(wide(LINK_CORPUS)), iters=3)
+        return pagerank(link_edges(wide(link_corpus(spark))), iters=3)
 
     def kmeans_corpus():
         # distributed Lloyd over N_DOCS x 64-dim: map-only assignment under
         # the broadcast centroid row + one 64-key exchange per round
         from texteller_spark.operators.clustering import kmeans_fit
 
-        return kmeans_fit(wide(EMB_CORPUS), k=64, iters=2, engine="arrow")
+        return kmeans_fit(wide(ensure_emb_corpus(spark)), k=64, iters=2, engine="arrow")
 
     def semantic_dedup_corpus():
         # SemDeDup at corpus scale: k=128 seed clusters bound the pair
@@ -206,7 +201,7 @@ def main() -> None:
             semantic_dedup,
         )
 
-        e = wide(EMB_CORPUS)
+        e = wide(ensure_emb_corpus(spark))
         return semantic_dedup(e, seed_centroids(e, 128), threshold=0.9, engine="arrow")
 
     def curation_signals():
@@ -278,7 +273,7 @@ def main() -> None:
         )
         return remove_repeated_substrings(docs, window=50)
 
-    builders = {
+    return {
         "pipeline_extract": lambda: extract_pages(corpus),
         # secondary: text-only consumers skip the span payload on the
         # worker→JVM feed (same kernel, byte-identical extracted_text)
@@ -336,19 +331,76 @@ def main() -> None:
         "mm_media_features": lambda: Q.q_media_features(spark, SF_DIR),
     }
 
+
+def median(xs: list[float]) -> float:
+    s = sorted(xs)
+    return round(s[len(s) // 2], 3)
+
+
+def summary_line(
+    samples: dict, calib: list[float], host_passes: list[dict], sf: float
+) -> str:
+    """The last stdout line: per-query medians across passes and the
+    headline figures, without the raw samples (they go to PASSES_FILE), so
+    it fits a driver's 2000-char tail with every query."""
+    timings = {name: median(runs) for name, runs in samples.items()}
+    steal = [h["steal_pct"] for h in host_passes]
+    summary = {
+        "metric": "total_headline_sec",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": timings,
+        "sf": sf,
+        "cpus": CPUS,
+        "passes": PASSES,
+        "calibration_median_sec": median(calib),
+        "steal_pct_median": median(steal),
+        "steal_pct_max": max(steal),
+        "extract_docs": N_DOCS,
+        "extract_docs_per_sec": (
+            round(N_DOCS / timings["pipeline_extract"], 1)
+            if "pipeline_extract" in timings
+            else None
+        ),
+        "extract_pdfs_per_sec": (
+            round(N_PDFS / timings["pipeline_extract_pdf"], 1)
+            if "pipeline_extract_pdf" in timings
+            else None
+        ),
+        "raw": PASSES_FILE,
+    }
+    return json.dumps(summary, separators=(",", ":"))
+
+
+def main() -> None:
+    # glibc tuning inherited by Python workers (must be set before the JVM
+    # starts): avoid mmap/munmap per large html string — munmap TLB-shootdown
+    # IPIs scale badly with worker count (+19% at 32 cores, measured)
+    os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "-1")
+    os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "134217728")
+    os.environ.setdefault("MALLOC_ARENA_MAX", "2")
+
+    from pyspark.sql import functions as F
+
+    from texteller_spark.operators.dedup import release_caches
+    from texteller_spark.plans.pipeline import extract_pages
+    from texteller_spark.session import build_session
+
+    spark = build_session("bench", cpus=CPUS)
+    sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in SF_DIR else -1.0
+    # warmup passes before timing: each fresh executor JVM of a
+    # local-cluster master JITs the whole codepath independently
+    warmup = 2 if spark.sparkContext.master.startswith("local-cluster") else 1
+
+    corpus = spark.read.parquet(pages_corpus(spark))
+    builders = query_builders(spark, corpus)
     if ONLY:
         builders = {k: v for k, v in builders.items() if k in ONLY}
-    if "pipeline_extract_pdf" in builders:
-        ensure_pdf_corpus()
-    if "web_domain_rank" in builders:
-        ensure_link_corpus()
-    if "cluster_kmeans" in builders or "dedup_semantic" in builders:
-        ensure_emb_corpus(spark)
 
     # --- calibration query: fixed pure-JVM work (crc32 + length over every
     # corpus text byte; no Python workers, no shuffle, no UDF), so its time
-    # moves ONLY with the host window. Committed per-pass into the JSON —
-    # the normalizer that makes round-over-round cells falsifiable.
+    # moves ONLY with the host window. Its per-pass times are the
+    # normalizer that makes round-over-round cells falsifiable.
     def calibration():
         return corpus.select(
             F.sum(F.crc32(F.col("text"))).alias("crc"),
@@ -361,7 +413,7 @@ def main() -> None:
     # needed: a partial warmup leaves most scan splits cold and the first
     # timed run then absorbs one-time costs (measured: first full pass up
     # to 3x steady state on this host).
-    for _ in range(WARMUP):
+    for _ in range(warmup):
         force(calibration())
         if "pipeline_extract" in builders:
             force(extract_pages(corpus))
@@ -370,40 +422,20 @@ def main() -> None:
             force(b())
             release_caches()  # signature-stage persists don't accumulate across reps
 
-    # --- host-window ground truth: /proc/stat deltas per pass. The
+    # --- timed section (steady state): PASSES full interleaved passes, each
+    # opened by the calibration scan; per-query median across passes. Each
+    # pass also records the host's steal%/busy% (/proc/stat): the
     # calibration scan alone under-detects the dominant noise source on
     # this host — hypervisor CPU STEAL, which engages under sustained
     # multi-core load (measured: 32% steal and 4.5x per-vCPU skew on an
     # identical 32-process spin loop during a degraded window, while a
     # 0.2 s calibration scan stayed nominal because short bursts fit
-    # between throttle periods). Committing steal%/busy% per pass lets an
-    # external reader grade the window directly.
-    def _cpu_snap():
-        try:
-            with open("/proc/stat") as f:
-                return list(map(int, f.readline().split()[1:]))
-        except (OSError, ValueError):
-            return None
-
-    def _cpu_delta(a, b):
-        if not a or not b:
-            return None
-        d = [y - x for x, y in zip(a, b)]
-        tot = sum(d) or 1
-        idle = d[3] + (d[4] if len(d) > 4 else 0)
-        steal = d[7] if len(d) > 7 else 0
-        return {
-            "steal_pct": round(100 * steal / tot, 1),
-            "busy_pct": round(100 * (tot - idle - steal) / tot, 1),
-        }
-
-    # --- timed section (steady state): PASSES full interleaved passes, each
-    # opened by the calibration scan; per-query median across passes
+    # between throttle periods).
     samples: dict[str, list[float]] = {name: [] for name in builders}
     calib: list[float] = []
-    host_passes: list[dict | None] = []
+    host_passes: list[dict] = []
     for _ in range(PASSES):
-        cpu0 = _cpu_snap()
+        cpu0 = host_cpu()
         t0 = time.perf_counter()
         force(calibration())
         calib.append(round(time.perf_counter() - t0, 3))
@@ -414,50 +446,26 @@ def main() -> None:
                 force(b())
                 samples[name].append(round(time.perf_counter() - t0, 3))
                 release_caches()
-        host_passes.append(_cpu_delta(cpu0, _cpu_snap()))
+        host_passes.append(
+            {k: round(v, 1) for k, v in host_window(cpu0, host_cpu()).items()}
+        )
 
-    def median(xs: list[float]) -> float:
-        s = sorted(xs)
-        return round(s[len(s) // 2], 3)
-
-    timings = {name: median(runs) for name, runs in samples.items()}
-    total = round(sum(timings.values()), 3)
-    docs_per_sec = (
-        round(N_DOCS / timings["pipeline_extract"], 1)
-        if "pipeline_extract" in timings
-        else None
-    )
-    print(
-        json.dumps(
+    with open(PASSES_FILE, "w") as f:
+        json.dump(
             {
-                "metric": "total_headline_sec",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "sf": sf,
-                "cpus": CPUS,
                 "protocol": {
                     "passes": PASSES,
                     "interleaved": True,
                     "flagship_runs_per_pass": FLAGSHIP_PER_PASS,
+                    "warmup": warmup,
                 },
-                "calibration": {
-                    "name": "jvm_crc32_scan",
-                    "per_pass_sec": calib,
-                    "median_sec": median(calib),
-                },
+                "calibration": {"name": "jvm_crc32_scan", "per_pass_sec": calib},
                 "host": {"per_pass_cpu": host_passes},
                 "queries_passes": samples,
-                "extract_docs": N_DOCS,
-                "extract_docs_per_sec": docs_per_sec,
-                "extract_pdfs_per_sec": (
-                    round(N_PDFS / timings["pipeline_extract_pdf"], 1)
-                    if "pipeline_extract_pdf" in timings
-                    else None
-                ),
-            }
+            },
+            f,
         )
-    )
+    print(summary_line(samples, calib, host_passes, sf))
     spark.stop()
 
 

@@ -11,9 +11,9 @@ tune blind". This tool measures exactly that:
   near-dup / decontamination workload actually has;
 - queries: every 397th corpus vector (252 queries), self-match excluded on
   both sides;
-- exact baseline: numpy brute-force cosine top-k per query (rounded to 4
-  digits, the operator's own determinism convention) — 252×100k×64 flops,
-  driver-side, bench-tool-only;
+- exact baseline: `exact_topk` below, numpy brute-force cosine top-k per
+  query (rounded to 4 digits, the operator's own determinism convention)
+  — 252×100k×64 flops, driver-side, shared with tools/bench_ivf_recall.py;
 - per config (bits × bands × probes): ONE ann_join run with k large enough
   to return every admitted candidate; recall@10 is derived from rnk<=10,
   candidate cost from the full result size; wall time is the forced
@@ -34,10 +34,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np  # noqa: E402
 
+from perfbench.inputs import materialize  # noqa: E402
+
 N_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "100000"))
-EMB_CORPUS = os.environ.get(
-    "SPARK_GRAFT_BENCH_EMB_CORPUS", f"/tmp/texteller_embs_{N_DOCS}"
-)
 QUERY_STRIDE = 397
 K = 10
 # keep r = bits/bands >= 8: at 100k rows a band with 2^r buckets admits
@@ -52,30 +51,62 @@ CONFIGS = [
 ]
 
 
-def ensure_emb_corpus(spark):
-    """Write N_DOCS 64-dim vectors in 128 hash-placed blobs (blob = vec_id %
-    128, ±0.3 noise) to EMB_CORPUS once: the clustered geometry semantic
-    dedup presumes. Uniform random data would be wrong twice over — Voronoi
-    cells of arbitrary seeds in 64-dim are massively skewed (one
-    mega-cluster ~ half the corpus, re-deriving the O(n^2) pair join the
-    operators exist to avoid), and near-dup structure wouldn't exist to
-    find. Rows 0..127 are blob centers themselves, so Forgy seeds land one
-    per blob."""
+def ensure_emb_corpus(spark, uniform: bool = False) -> str:
+    """Materialize N_DOCS 64-dim vectors once and return their path.
+
+    Default: 128 hash-placed blobs (blob = vec_id % 128, ±0.3 noise), the
+    clustered geometry semantic dedup presumes. Uniform random data would
+    be wrong twice over — Voronoi cells of arbitrary seeds in 64-dim are
+    massively skewed (one mega-cluster ~ half the corpus, re-deriving the
+    O(n^2) pair join the operators exist to avoid), and near-dup structure
+    wouldn't exist to find. Rows 0..127 are blob centers themselves, so
+    Forgy seeds land one per blob.
+
+    ``uniform=True``: the unclustered control of tools/bench_ivf_recall.py
+    — the same hash recipe with no blob centers."""
     from pyspark.sql import functions as F
 
-    if os.path.exists(EMB_CORPUS):
-        return
     blob = F.col("id") % 128
 
     def comp(i):
+        if uniform:
+            u = (F.pmod(F.hash(F.col("id"), F.lit(i)), F.lit(2001)) - 1000) / 1000.0
+            return u.cast("float")
         center = (F.pmod(F.hash(blob, F.lit(i)), F.lit(2001)) - 1000) / 1000.0
         noise = (F.pmod(F.hash(F.col("id"), F.lit(i + 64)), F.lit(601)) - 300) / 1000.0
         return (center + F.when(F.col("id") < 128, 0.0).otherwise(noise)).cast("float")
 
-    arr = F.array(*[comp(i) for i in range(64)])
-    spark.range(N_DOCS).select(
-        F.col("id").alias("vec_id"), arr.alias("embedding")
-    ).repartition(64).write.mode("overwrite").parquet(EMB_CORPUS)
+    def build(out):
+        arr = F.array(*[comp(i) for i in range(64)])
+        spark.range(N_DOCS).select(
+            F.col("id").alias("vec_id"), arr.alias("embedding")
+        ).repartition(64).write.mode("overwrite").parquet(out)
+
+    key = f"texteller_embs_{N_DOCS}" + ("_uniform" if uniform else "")
+    return materialize("/tmp", key, build)
+
+
+def exact_topk(corpus) -> dict[int, set[int]]:
+    """The exact baseline: cosine top-K of every QUERY_STRIDE-th vector,
+    self-match excluded, by numpy brute force on the driver (bench tools
+    only), with cosines rounded to 4 digits like the operators'. Prints the
+    corpus and query counts."""
+    rows = corpus.orderBy("vec_id").collect()
+    ids = np.array([r["vec_id"] for r in rows])
+    mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+    q_mask = ids % QUERY_STRIDE == 0
+    sims = np.round(unit[q_mask] @ unit.T, 4)
+    exact = {}
+    for qi, qid in enumerate(ids[q_mask]):
+        # K + 1 candidates leave K after dropping the self-match
+        order = np.argsort(-sims[qi], kind="stable")[: K + 1]
+        exact[int(qid)] = set([int(ids[j]) for j in order if ids[j] != qid][:K])
+    print(
+        json.dumps({"n_corpus": int(len(ids)), "n_queries": len(exact)}),
+        flush=True,
+    )
+    return exact
 
 
 def main():
@@ -87,28 +118,9 @@ def main():
 
     spark = build_session()
     spark.sparkContext.setLogLevel("ERROR")
-    ensure_emb_corpus(spark)
-    corpus = spark.read.parquet(EMB_CORPUS)
+    corpus = spark.read.parquet(ensure_emb_corpus(spark))
     queries = corpus.filter(F.col("vec_id") % QUERY_STRIDE == 0)
-
-    # exact baseline (numpy, driver-side — bench tool only)
-    rows = corpus.orderBy("vec_id").collect()
-    ids = np.array([r["vec_id"] for r in rows])
-    mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    nrm = np.linalg.norm(mat, axis=1, keepdims=True)
-    unit = mat / nrm
-    q_mask = ids % QUERY_STRIDE == 0
-    q_ids = ids[q_mask]
-    sims = np.round(unit[q_mask] @ unit.T, 4)
-    exact = {}
-    for qi, qid in enumerate(q_ids):
-        order = np.argsort(-sims[qi], kind="stable")
-        top = [int(ids[j]) for j in order if ids[j] != qid][:K]
-        exact[int(qid)] = set(top)
-    print(
-        json.dumps({"n_corpus": int(len(ids)), "n_queries": int(len(q_ids))}),
-        flush=True,
-    )
+    exact = exact_topk(corpus)
 
     results = []
     for bits, bands, probes in CONFIGS:

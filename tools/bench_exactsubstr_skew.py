@@ -41,15 +41,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from perfbench.inputs import materialize  # noqa: E402
 from tools.stages import completed_stages  # noqa: E402
 
 N_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "100000"))
 HOT_FRAC = 0.3
 SHUFFLE_PARTS = int(os.environ.get("SPARK_GRAFT_SKEW_PARTS", "256"))
 SALT = 32
-CORPUS = os.environ.get(
-    "SPARK_GRAFT_SKEW_CORPUS", f"/tmp/texteller_hotkey_{N_DOCS}"
-)
 
 
 def main():
@@ -63,12 +61,9 @@ def main():
     )
     from texteller_spark.session import build_session
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
-    spark = build_session(
-        "bench-exactsubstr-skew", cpus=cpus, shuffle_partitions=SHUFFLE_PARTS
-    )
+    spark = build_session("bench-exactsubstr-skew", shuffle_partitions=SHUFFLE_PARTS)
 
-    if not os.path.exists(CORPUS):
+    def build(out):
         n_hot = int(N_DOCS * HOT_FRAC)
         block = " ".join(f"hot{i}" for i in range(50))
         # block repeated 5x per hot doc (the navigation-boilerplate
@@ -91,8 +86,9 @@ def main():
                 ),
             ).alias("text"),
         )
-        hot.unionByName(cold).repartition(64).write.mode("overwrite").parquet(CORPUS)
-    docs = spark.read.parquet(CORPUS)
+        hot.unionByName(cold).repartition(64).write.mode("overwrite").parquet(out)
+
+    docs = spark.read.parquet(materialize("/tmp", f"texteller_hotkey_{N_DOCS}", build))
 
     # AQE partition coalescing OFF for the salt legs: it targets COMPRESSED
     # bytes, and near-identical hot rows compress ~50x, so locally it merges

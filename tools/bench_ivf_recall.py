@@ -27,21 +27,19 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import numpy as np  # noqa: E402
+from tools.bench_ann_recall import (  # noqa: E402
+    K,
+    QUERY_STRIDE,
+    ensure_emb_corpus,
+    exact_topk,
+)
 
-N_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "100000"))
 #: UNIFORM=1 swaps the clustered-blob corpus for an unclustered
 #: hash-derived uniform corpus (same recipe as the blob noise, no blob
 #: centers) — the control measuring the claim that IVF's advantage is the
 #: LEARNED structure: with nothing to learn, k-means lists are arbitrary
 #: Voronoi cells and probing few lists must lose mid-cosine neighbors
 UNIFORM = os.environ.get("SPARK_GRAFT_BENCH_EMB_UNIFORM", "0") == "1"
-EMB_CORPUS = os.environ.get(
-    "SPARK_GRAFT_BENCH_EMB_CORPUS",
-    f"/tmp/texteller_embs_{N_DOCS}" + ("_uniform" if UNIFORM else ""),
-)
-QUERY_STRIDE = 397
-K = 10
 #: (nlist, [nprobe...]) — one quantizer fit per nlist, shared across probes
 GRID = [
     (64, [1, 2, 4]),
@@ -53,7 +51,6 @@ GRID = [
 def main():
     from pyspark.sql import functions as F
 
-    from bench_ann_recall import ensure_emb_corpus
     from texteller_spark.operators.clustering import kmeans_fit
     from texteller_spark.operators.dedup import release_caches
     from texteller_spark.operators.similarity import ivf_ann_join
@@ -61,41 +58,9 @@ def main():
 
     spark = build_session()
     spark.sparkContext.setLogLevel("ERROR")
-    if UNIFORM:
-        if not os.path.exists(EMB_CORPUS):
-            noise = F.array(
-                *[
-                    (
-                        (F.pmod(F.hash(F.col("id"), F.lit(i)), F.lit(2001)) - 1000)
-                        / 1000.0
-                    ).cast("float")
-                    for i in range(64)
-                ]
-            )
-            spark.range(N_DOCS).select(
-                F.col("id").alias("vec_id"), noise.alias("embedding")
-            ).repartition(64).write.mode("overwrite").parquet(EMB_CORPUS)
-    else:
-        ensure_emb_corpus(spark)
-    corpus = spark.read.parquet(EMB_CORPUS)
+    corpus = spark.read.parquet(ensure_emb_corpus(spark, uniform=UNIFORM))
     queries = corpus.filter(F.col("vec_id") % QUERY_STRIDE == 0)
-
-    # exact baseline (numpy, driver-side — bench tool only)
-    rows = corpus.orderBy("vec_id").collect()
-    ids = np.array([r["vec_id"] for r in rows])
-    mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    q_mask = ids % QUERY_STRIDE == 0
-    q_ids = ids[q_mask]
-    sims = np.round(unit[q_mask] @ unit.T, 4)
-    exact = {}
-    for qi, qid in enumerate(q_ids):
-        order = np.argsort(-sims[qi], kind="stable")
-        exact[int(qid)] = set([int(ids[j]) for j in order if ids[j] != qid][:K])
-    print(
-        json.dumps({"n_corpus": int(len(ids)), "n_queries": int(len(q_ids))}),
-        flush=True,
-    )
+    exact = exact_topk(corpus)
 
     results = []
     for nlist, probes_list in GRID:

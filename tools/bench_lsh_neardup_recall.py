@@ -36,6 +36,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np  # noqa: E402
 
+from perfbench.inputs import materialize  # noqa: E402
+
 N_BASE = int(os.environ.get("SPARK_GRAFT_LSH_RECALL_BASE", "50000"))
 DIM = 64
 MUT_ID_OFFSET = 10_000_000
@@ -54,9 +56,6 @@ CONFIGS = [
     ).split(",")
 ]
 BUCKETS = ((0.45, 0.6), (0.6, 0.8), (0.8, 0.93), (0.93, 0.97), (0.97, 0.995), (0.995, 1.01))
-CORPUS = os.environ.get(
-    "SPARK_GRAFT_LSH_RECALL_CORPUS", f"/tmp/texteller_lshnd_recall_{N_BASE}"
-)
 
 
 def build_vectors() -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -77,35 +76,32 @@ def build_vectors() -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return base.astype(np.float32), mut.astype(np.float32), true_cos
 
 
-def ensure_corpus(spark, base, mut):
+def ensure_corpus(spark, base, mut) -> str:
     import pandas as pd
 
-    if os.path.exists(CORPUS):
-        return
-    ids = np.arange(N_BASE)
-    pdf = pd.DataFrame(
-        {
-            "vec_id": np.concatenate([ids, ids + MUT_ID_OFFSET]),
-            "embedding": list(base) + list(mut),
-        }
-    )
-    spark.createDataFrame(pdf).repartition(64).write.mode("overwrite").parquet(
-        CORPUS
-    )
+    def build(out):
+        ids = np.arange(N_BASE)
+        pdf = pd.DataFrame(
+            {
+                "vec_id": np.concatenate([ids, ids + MUT_ID_OFFSET]),
+                "embedding": list(base) + list(mut),
+            }
+        )
+        spark.createDataFrame(pdf).repartition(64).write.mode("overwrite").parquet(out)
+
+    return materialize("/tmp", f"texteller_lshnd_recall_{N_BASE}", build)
 
 
 def main():
     from texteller_spark.operators.dedup import release_caches
     from texteller_spark.operators.similarity import lsh_near_dup_pairs
-    from texteller_spark.session import build_session
+    from texteller_spark.session import build_session, default_parallelism
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
     spark = build_session(
-        "bench-lsh-neardup-recall", cpus=cpus, shuffle_partitions=2 * cpus
+        "bench-lsh-neardup-recall", shuffle_partitions=2 * default_parallelism()
     )
     base, mut, true_cos = build_vectors()
-    ensure_corpus(spark, base, mut)
-    df = spark.read.parquet(CORPUS)
+    df = spark.read.parquet(ensure_corpus(spark, base, mut))
 
     # planted ground truth at the operator's own admission convention
     planted = {

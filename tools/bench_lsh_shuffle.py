@@ -22,7 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.bench_ann_recall import EMB_CORPUS, N_DOCS, ensure_emb_corpus  # noqa: E402
+from tools.bench_ann_recall import N_DOCS, ensure_emb_corpus  # noqa: E402
 from tools.stages import completed_stages  # noqa: E402
 
 DIM, BITS, BANDS, THRESHOLD = 64, 32, 4, 0.9
@@ -36,12 +36,12 @@ def main():
         lsh_near_dup_pairs,
         with_lsh_bands,
     )
-    from texteller_spark.session import build_session
+    from texteller_spark.session import build_session, default_parallelism
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
-    spark = build_session("bench-lsh-shuffle", cpus=cpus, shuffle_partitions=2 * cpus)
-    ensure_emb_corpus(spark)
-    corpus = spark.read.parquet(EMB_CORPUS)
+    spark = build_session(
+        "bench-lsh-shuffle", shuffle_partitions=2 * default_parallelism()
+    )
+    corpus = spark.read.parquet(ensure_emb_corpus(spark))
 
     def old_style_pairs(df):
         """Pre-rewrite plan shape: _v/_nrm ride the band self-join."""

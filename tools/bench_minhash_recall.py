@@ -41,10 +41,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pandas as pd  # noqa: E402
 
+from perfbench.inputs import materialize  # noqa: E402
+
 N_BASE = int(os.environ.get("SPARK_GRAFT_BENCH_MINHASH_BASE", "50000"))
-CORPUS = os.environ.get(
-    "SPARK_GRAFT_BENCH_MINHASH_CORPUS", f"/tmp/texteller_minhash_recall_{N_BASE}"
-)
 DOC_TOKENS = 120
 VOCAB = 50000
 MUT_ID_OFFSET = 10_000_000
@@ -81,9 +80,9 @@ def build_texts(doc_id: int) -> tuple[str, str]:
     return " ".join(base), " ".join(mut)
 
 
-def ensure_corpus(spark):
-    if os.path.exists(CORPUS):
-        return
+def ensure_corpus(spark) -> str:
+    """Materialize the N_BASE base docs and their mutants once; return the
+    path."""
 
     def gen(batches):
         for pdf in batches:
@@ -94,9 +93,12 @@ def ensure_corpus(spark):
                 rows["text"] += [b, m]
             yield pd.DataFrame(rows)
 
-    spark.range(N_BASE).toDF("doc_id").repartition(64).mapInPandas(
-        gen, schema="doc_id long, text string"
-    ).write.mode("overwrite").parquet(CORPUS)
+    def build(out):
+        spark.range(N_BASE).toDF("doc_id").repartition(64).mapInPandas(
+            gen, schema="doc_id long, text string"
+        ).write.mode("overwrite").parquet(out)
+
+    return materialize("/tmp", f"texteller_minhash_recall_{N_BASE}", build)
 
 
 def exact_planted_jaccard(spark, corpus):
@@ -137,10 +139,8 @@ def main():
     from texteller_spark.operators.dedup import minhash_lsh_pairs, release_caches
     from texteller_spark.session import build_session
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = build_session("bench-minhash-recall", cpus=cpus)
-    ensure_corpus(spark)
-    corpus = spark.read.parquet(CORPUS)
+    spark = build_session("bench-minhash-recall")
+    corpus = spark.read.parquet(ensure_corpus(spark))
 
     truth = exact_planted_jaccard(spark, corpus).cache()
     truth_hist = {

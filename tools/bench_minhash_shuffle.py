@@ -27,7 +27,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.bench_minhash_recall import CORPUS, ensure_corpus  # noqa: E402
+from tools.bench_minhash_recall import ensure_corpus  # noqa: E402
 from tools.stages import completed_stages  # noqa: E402
 
 BANDS = 16
@@ -44,12 +44,12 @@ def main():
         release_caches,
         with_minhash,
     )
-    from texteller_spark.session import build_session
+    from texteller_spark.session import build_session, default_parallelism
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
-    spark = build_session("bench-minhash-shuffle", cpus=cpus, shuffle_partitions=2 * cpus)
-    ensure_corpus(spark)
-    corpus = spark.read.parquet(CORPUS)
+    spark = build_session(
+        "bench-minhash-shuffle", shuffle_partitions=2 * default_parallelism()
+    )
+    corpus = spark.read.parquet(ensure_corpus(spark))
 
     def old_style_pairs(df):
         """Pre-rewrite plan shape: the signature rides the band exchange."""
