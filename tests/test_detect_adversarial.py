@@ -91,6 +91,27 @@ def test_crlf_and_entities_in_text_runs():
     assert recognize_text(spans[0].raw) == "line1 line2 & more"
 
 
+def test_str_split_whitespace_is_regex_whitespace():
+    """``recognize_text`` collapses whitespace with ``str.split()``; that
+    equals ``re.sub(r"\\s+", " ", s).strip()`` because ``re``'s ``\\s`` and
+    ``str.isspace`` agree on every code point."""
+    import re
+    import sys
+
+    ws = re.compile(r"\s")
+    differ = [
+        hex(c)
+        for c in range(sys.maxunicode + 1)
+        if (ws.fullmatch(chr(c)) is not None) != chr(c).isspace()
+    ]
+    assert differ == []
+    spaces = "".join(chr(c) for c in range(sys.maxunicode + 1) if chr(c).isspace())
+    s = f"{spaces}a{spaces}b &nbsp; c{spaces}"
+    from texteller_spark.operators.recognize import recognize_text
+
+    assert recognize_text(s) == re.sub(r"\s+", " ", s.replace("&nbsp;", "\xa0")).strip()
+
+
 def test_decode_page_total():
     assert decode_page(None) == ""
     assert decode_page(b"") == ""

@@ -12,6 +12,7 @@ from pathlib import Path
 
 import pytest
 
+from texteller_spark.functions import katex
 from texteller_spark.functions.katex import (
     debold_inline,
     latex_to_katex,
@@ -95,5 +96,64 @@ def test_hypothesis_like_fuzz_never_crashes():
         out = latex_to_katex(s)
         assert isinstance(out, str)
         assert latex_to_katex(out) is not None
+
+    run()
+
+
+# --- the gate in front of the ordered program -------------------------------
+
+_STEPS = katex._PROGRAM_HEAD + katex._PROGRAM_TAIL
+_BRACED = [s for s in _STEPS if len(s) == 6]
+_REGEX = [s[0] for s in _STEPS if len(s) == 2]
+
+
+def test_gate_matches_every_braced_needle():
+    """Each braced step's probe (``cmd + open_ch``, the one
+    ``rewrite_all`` makes) matches the gate, read from the program itself."""
+    for cmd, _, open_ch, *_ in _BRACED:
+        assert katex._GATE_RE.search(cmd + open_ch), cmd + open_ch
+
+
+@pytest.mark.parametrize(
+    "pattern", [*_REGEX, katex._DOLLAR_RUN], ids=lambda p: p.pattern
+)
+def test_gate_matches_every_regex_step(pattern):
+    """Every string a regex step (or the ``$``-wrapper strip) can rewrite
+    passes the gate (``"$" in r`` or ``_GATE_RE``)."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    @settings(max_examples=60, deadline=None)
+    @given(st.from_regex(pattern))
+    def run(s):
+        assert "$" in s or katex._GATE_RE.search(s)
+
+    run()
+
+
+_FRAGMENTS = sorted(
+    {cmd for cmd, *_ in _BRACED}
+    | {"{", "}", "$", " ", "  ", "x", "1.5", "pt", "-", "\\", "[", "]", "\n"}
+    | {r"\[", r"\]", r"\newline", r"\,", r"\!", r"\;", r"\:", r"\vspace"}
+    | {r"\text", r"\bf ", r"\bf", r"\hbox to ", r"\raise ", r"\makebox "}
+    | {r"\frac", r"\rightarrow", r"\textit", "^", "_"}
+)
+
+
+def test_gate_skips_only_what_the_program_leaves_alone():
+    """Gated and ungated runs agree: a formula the gate turns away would
+    not have been changed by any step of the ordered program."""
+    import re
+    from unittest import mock
+
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    @settings(max_examples=500, deadline=None)
+    @given(st.lists(st.sampled_from(_FRAGMENTS), max_size=12).map("".join))
+    def run(s):
+        with mock.patch.object(katex, "_GATE_RE", re.compile("")):
+            ungated = latex_to_katex(s)
+        assert latex_to_katex(s) == ungated
 
     run()

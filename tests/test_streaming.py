@@ -88,7 +88,7 @@ def test_streaming_dedup_first_seen_across_batches(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got = {r["url"]: r for r in spark.sql("SELECT * FROM dedup_out").collect()}
     assert set(got) == {"https://a.test/", "https://b.test/", "https://c.test/"}
     # exactly one row per url, and a.test kept its first-ever timestamp

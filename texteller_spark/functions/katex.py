@@ -15,10 +15,14 @@ pinned in ``tests/data/katex_goldens.json`` and enforced by
 
 Design notes
 ------------
-* These are pure string functions.  On the Spark side they are applied to
-  whole Arrow batches inside a scalar ``pandas_udf`` (see
-  ``texteller_spark/operators/recognize.py``) — there is never a per-row
-  Python UDF at the Spark level.
+* These are pure string functions.  On the Spark side they run inside the
+  fused per-page kernel, which the ``pandas_udf`` wrappers in
+  ``texteller_spark/plans/pipeline.py`` apply to whole Arrow batches —
+  there is never a per-row Python UDF at the Spark level.
+* :func:`latex_to_katex` is an ordered program of rewrite steps kept as
+  data (``_PROGRAM_HEAD``/``_PROGRAM_TAIL``).  One compiled alternation of
+  every step's needle (``_GATE_RE``) runs first, so a formula no step can
+  change costs one C scan instead of 55 steps.
 * ``rewrite_braced`` cannot be expressed with ``regexp_replace`` because the
   argument is brace-balanced with backslash escapes and the rewrite recurses
   to a fixpoint; this is the one genuinely custom kernel the engine owns
@@ -128,11 +132,9 @@ def rewrite_all(
     Occurrence start offsets are collected up front and processed
     right-to-left, each time rewriting the suffix beginning at that offset —
     so nested arguments are rewritten before their enclosing command sees
-    them (parity with the reference's ``change_all``).
-
-    Fast path: most formulas contain none of the ~46 chained rewrite
-    targets, so a plain substring probe (C-speed) short-circuits before any
-    regex/buffer work — measured ~2× on the whole normalization chain.
+    them (parity with the reference's ``change_all``).  A string without
+    ``cmd + open_ch`` is returned as is; that probe is the step's needle in
+    :func:`latex_to_katex`'s gate.
     """
     needle = cmd + open_ch
     if needle not in s:
@@ -211,21 +213,85 @@ _RE_MAKEBOX = re.compile(r"\\makebox ?\[\d+\.\d+(pt)?\]\{")
 _RE_RAISEBOX = re.compile(r"\\raisebox\{-? ?\d+\.\d+(pt)?\}\{")
 _RE_SCALEBOX = re.compile(r"\\scalebox\{-? ?\d+\.\d+(pt)?\}\{")
 _RE_DISPLAY_BRACKETS = re.compile(r"\\\[(.*?)\\\]")
+# Every step pattern starts with a literal backslash (a run is written
+# ``\\,(?:\\,)*``, not ``(\\,)+``), so ``re`` factors that backslash out of
+# the gate's alternation below and skips to candidate positions in C.
 _RE_THIN_SPACES = [
-    re.compile(r"(\\,){1,}"),
-    re.compile(r"(\\!){1,}"),
-    re.compile(r"(\\;){1,}"),
-    re.compile(r"(\\:){1,}"),
+    re.compile(r"\\,(?:\\,)*"),
+    re.compile(r"\\!(?:\\!)*"),
+    re.compile(r"\\;(?:\\;)*"),
+    re.compile(r"\\:(?:\\:)*"),
 ]
 _RE_VSPACE = re.compile(r"\\vspace\{.*?}")
-_RE_TEXT_RUN = re.compile(r"(\\text\{[^}]*\}\s*){2,}")
+_RE_TEXT_RUN = re.compile(r"\\text\{[^}]*\}\s*(?:\\text\{[^}]*\}\s*)+")
 _RE_TEXT_ARG = re.compile(r"\\text\{([^}]*)\}")
+_RE_BF = re.compile(r"\\bf ")
 _RE_MULTISPACE = re.compile(r" +")
 
 
 def _merge_text_run(m: re.Match) -> str:
     merged = "".join(_RE_TEXT_ARG.findall(m.group(0)))
     return "\\text{" + merged + "}"
+
+
+#: the program before the trailing-``\newline`` drop, in order. A step is
+#: either a braced rewrite — the arguments of :func:`rewrite_all`, ``(cmd,
+#: new_cmd, open_ch, close_ch, new_open, new_close)`` — or a regex rewrite
+#: ``(pattern, replacement)``.
+_PROGRAM_HEAD = (
+    (r"\mbox ", r" ", "{", "}", "", ""),
+    (r"\mbox", r" ", "{", "}", "", ""),
+    (_RE_HBOX_TO, r"\\hbox{"),
+    (r"\hbox", r" ", "{", "}", "", " "),
+    (_RE_RAISE, " "),
+    (_RE_MAKEBOX, r"\\makebox{"),
+    (r"\makebox", r" ", "{", "}", "", " "),
+    (_RE_RAISEBOX, r"\\raisebox{"),
+    (_RE_SCALEBOX, r"\\scalebox{"),
+    (r"\scalebox", r" ", "{", "}", "", " "),
+    (r"\raisebox", r" ", "{", "}", "", " "),
+    (r"\vbox", r" ", "{", "}", "", " "),
+    *((cmd, cmd, "$", "$", "{", "}") for cmd in _SIZE_CMDS),
+    (r"\boldmath ", r"\bm", "{", "}", "{", "}"),
+    (r"\boldmath", r"\bm", "{", "}", "{", "}"),
+    (r"\boldmath ", r"\bm", "$", "$", "{", "}"),
+    (r"\boldmath", r"\bm", "$", "$", "{", "}"),
+    (r"\scriptsize", r"\scriptsize", "$", "$", "{", "}"),
+    (r"\emph", r"\textit", "{", "}", "{", "}"),
+    (r"\emph ", r"\textit", "{", "}", "{", "}"),
+    *((cmd, cmd, "{", "}", "", "") for cmd in _DELIM_SIZERS),
+    (_RE_DISPLAY_BRACKETS, r"\1\\newline"),
+)
+
+#: the program after the trailing-``\newline`` drop; plain ``$`` wrappers
+#: are stripped after it (:func:`strip_plain_dollar_wrappers`)
+_PROGRAM_TAIL = (
+    *((pat, " ") for pat in _RE_THIN_SPACES),
+    (_RE_VSPACE, ""),
+    (_RE_TEXT_RUN, _merge_text_run),
+    (_RE_BF, ""),
+)
+
+
+def _needle(step: tuple) -> str:
+    """The regex that matches wherever ``step`` can change a string: the
+    probe :func:`rewrite_all` makes, or the step's own pattern."""
+    if len(step) == 2:
+        return step[0].pattern
+    cmd, _, open_ch = step[:3]
+    return re.escape(cmd + open_ch)
+
+
+#: one probe for the whole program: a formula it does not match, and with
+#: no ``$`` for :func:`strip_plain_dollar_wrappers`, is changed by no step,
+#: so only the ``\newline`` drop, space collapse and strip apply
+_GATE_RE = re.compile("|".join(map(_needle, _PROGRAM_HEAD + _PROGRAM_TAIL)))
+
+
+def _run(r: str, steps: tuple) -> str:
+    for step in steps:
+        r = step[0].sub(step[1], r) if len(step) == 2 else rewrite_all(r, *step)
+    return r
 
 
 def latex_to_katex(formula: str) -> str:
@@ -237,47 +303,17 @@ def latex_to_katex(formula: str) -> str:
     after ``\\left``/``\\right``/``\\big…``; ``\\[…\\]``→``…\\newline``; drop a
     trailing ``\\newline``; collapse thin-space runs; drop ``\\vspace``; merge
     adjacent ``\\text{}``; drop ``\\bf``; strip plain ``$`` wrappers; collapse
-    spaces.
+    spaces. Only a formula that :data:`_GATE_RE` matches runs the rewrites.
     """
     r = formula
-    r = rewrite_all(r, r"\mbox ", r" ", "{", "}", "", "")
-    r = rewrite_all(r, r"\mbox", r" ", "{", "}", "", "")
-    r = _RE_HBOX_TO.sub(r"\\hbox{", r)
-    r = rewrite_all(r, r"\hbox", r" ", "{", "}", "", " ")
-    r = _RE_RAISE.sub(" ", r)
-    r = _RE_MAKEBOX.sub(r"\\makebox{", r)
-    r = rewrite_all(r, r"\makebox", r" ", "{", "}", "", " ")
-    r = _RE_RAISEBOX.sub(r"\\raisebox{", r)
-    r = _RE_SCALEBOX.sub(r"\\scalebox{", r)
-    r = rewrite_all(r, r"\scalebox", r" ", "{", "}", "", " ")
-    r = rewrite_all(r, r"\raisebox", r" ", "{", "}", "", " ")
-    r = rewrite_all(r, r"\vbox", r" ", "{", "}", "", " ")
-
-    for cmd in _SIZE_CMDS:
-        r = rewrite_all(r, cmd, cmd, "$", "$", "{", "}")
-    r = rewrite_all(r, r"\boldmath ", r"\bm", "{", "}", "{", "}")
-    r = rewrite_all(r, r"\boldmath", r"\bm", "{", "}", "{", "}")
-    r = rewrite_all(r, r"\boldmath ", r"\bm", "$", "$", "{", "}")
-    r = rewrite_all(r, r"\boldmath", r"\bm", "$", "$", "{", "}")
-    r = rewrite_all(r, r"\scriptsize", r"\scriptsize", "$", "$", "{", "}")
-    r = rewrite_all(r, r"\emph", r"\textit", "{", "}", "{", "}")
-    r = rewrite_all(r, r"\emph ", r"\textit", "{", "}", "{", "}")
-
-    for cmd in _DELIM_SIZERS:
-        r = rewrite_all(r, cmd, cmd, "{", "}", "", "")
-
-    r = _RE_DISPLAY_BRACKETS.sub(r"\1\\newline", r)
+    gated = "$" in r or _GATE_RE.search(r) is not None
+    if gated:
+        r = _run(r, _PROGRAM_HEAD)
     if r.endswith(r"\newline"):
         r = r[: -len(r"\newline")]
-
-    for pat in _RE_THIN_SPACES:
-        r = pat.sub(" ", r)
-    r = _RE_VSPACE.sub("", r)
-    r = _RE_TEXT_RUN.sub(_merge_text_run, r)
-    r = r.replace(r"\bf ", "")
-    r = strip_plain_dollar_wrappers(r)
-    r = _RE_MULTISPACE.sub(" ", r)
-    return r.strip()
+    if gated:
+        r = strip_plain_dollar_wrappers(_run(r, _PROGRAM_TAIL))
+    return _RE_MULTISPACE.sub(" ", r).strip()
 
 
 _INLINE_DEBOLD_CMDS = (

@@ -64,11 +64,6 @@ _SUPPRESS_TAGS = frozenset(
     "form button select option object embed".split()
 )
 
-#: void elements — never open a subtree
-_VOID_TAGS = frozenset(
-    "br hr img meta link input area base col source track wbr".split()
-)
-
 #: tags that delimit a visual row / block (same_row boundary)
 _BLOCK_TAGS = frozenset(
     "p div h1 h2 h3 h4 h5 h6 li ul ol table thead tbody tr td th br hr "
@@ -76,8 +71,27 @@ _BLOCK_TAGS = frozenset(
     "address center body html".split()
 )
 
-_TAG_RE = re.compile(r"<!--.*?-->|<!\[CDATA\[.*?\]\]>|<[^>]*>", re.DOTALL)
-_TAG_NAME_RE = re.compile(r"<\s*(/?)\s*([a-zA-Z][a-zA-Z0-9]*)")
+
+def _names(tags: frozenset) -> str:
+    """``tags`` as an alternation, sorted: set order varies per process."""
+    return "|".join(sorted(tags))
+
+
+#: the one tag grammar: comments and CDATA first (their bodies are opaque),
+#: then a named tag whose group says what it does — ``math``, ``sup``
+#: (opens/closes a suppressed subtree; checked before ``blk``) or ``blk`` —
+#: then any other ``<…>``, which only separates text nodes. Names match
+#: ASCII-case-insensitively (``(?ai:…)``: plain ``(?i)`` would also fold
+#: ``ſ`` into ``s`` and the Kelvin sign U+212A into ``k``) and end where
+#: ``[a-zA-Z0-9]`` ends.
+_TOKEN_RE = re.compile(
+    r"<!--.*?-->|<!\[CDATA\[.*?\]\]>"
+    r"|<\s*(?P<close>/?)\s*"
+    rf"(?ai:(?P<math>math)|(?P<sup>{_names(_SUPPRESS_TAGS)})|(?P<blk>{_names(_BLOCK_TAGS)}))"
+    r"(?![a-zA-Z0-9])[^>]*>"
+    r"|<[^>]*>",
+    re.DOTALL,
+)
 _MATH_CLOSE_RE = re.compile(r"</\s*math\s*>", re.IGNORECASE)
 _MATH_DISPLAY_RE = re.compile(r"""display\s*=\s*["']?\s*block""", re.IGNORECASE)
 
@@ -153,100 +167,112 @@ def _classify_tex(m: re.Match) -> tuple[str, float]:
     return "embedding", (0.9 if _TEXY_RE.search(inner) else 0.3)
 
 
+def _walk(doc: str):
+    """Tokenize ``doc`` once and yield its depth-0 structure as
+    ``(start, end, kind)`` in document order:
+
+    * ``"text"`` — a text node ``doc[start:end]`` outside suppressed subtrees;
+    * ``"block"`` — a block-level tag starting at ``start``;
+    * ``"isolated"`` / ``"embedding"`` — a whole ``<math>…</math>`` element
+      (to the end of the document when unclosed), by its ``display``.
+
+    Suppressed subtrees nest by depth (a stray closing tag never goes
+    below 0, a self-closing one opens nothing) and yield nothing; the
+    tokenizer restarts only after a ``<math>`` element, whose body it skips.
+    """
+    n = len(doc)
+    suppress = 0  # depth inside suppressed subtrees
+    pos = 0
+    while True:
+        for m in _TOKEN_RE.finditer(doc, pos):
+            start = m.start()
+            if start > pos and not suppress:
+                yield pos, start, "text"
+            pos = m.end()
+            tag = m.lastgroup
+            if tag is None:
+                continue
+            if tag == "sup":
+                if m.group("close"):
+                    if suppress:
+                        suppress -= 1
+                elif doc[pos - 2] != "/":
+                    suppress += 1
+            elif suppress:
+                continue
+            elif tag == "blk":
+                yield start, pos, "block"
+            elif not m.group("close"):
+                close = _MATH_CLOSE_RE.search(doc, pos)
+                end = close.end() if close else n
+                display = _MATH_DISPLAY_RE.search(doc, start, pos)
+                yield start, end, ("isolated" if display else "embedding")
+                pos = end
+                break
+        else:
+            break
+    if pos < n and not suppress:
+        yield pos, n, "text"
+
+
 def detect_document(doc: str) -> list[Span]:
     """One linear pass over the decoded document: tokenize tags, suppress
     boilerplate subtrees, segment blocks, and surface math + merged text
     runs as ordered spans."""
     spans: list[Span] = []
-    n = len(doc)
     block_id = 0
-    suppress = 0  # depth inside suppressed subtrees
 
     # pending text run within the current block
     run_parts: list[str] = []
-    run_start = -1
-    run_end = -1
+    run_start = run_end = -1
 
     def flush_run() -> None:
-        nonlocal run_parts, run_start, run_end
+        nonlocal run_parts
         if run_parts:
             content = "".join(run_parts)
             if content.strip():
                 spans.append(
-                    Span(0, block_id, "text", run_start, run_end, 1.0, content)
+                    Span(len(spans), block_id, "text", run_start, run_end, 1.0, content)
                 )
             run_parts = []
-            run_start = -1
-            run_end = -1
 
-    def add_text(piece: str, start: int, end: int) -> None:
-        nonlocal run_start, run_end
-        if not piece:
-            return
-        if not run_parts:
-            run_start = start
-        run_parts.append(piece)
-        run_end = end
-
-    def scan_text_node(start: int, end: int) -> None:
-        """Split a text node into math spans and surrounding text pieces."""
-        node = doc[start:end]
-        if "$" not in node and "\\(" not in node and "\\[" not in node:
-            add_text(node, start, end)  # fast path: no math delimiters at all
-            return
-        pos = 0
-        for m in _MATH_RE.finditer(node):
-            kind, conf = _classify_tex(m)
-            if conf < DETECT_CONF_THRESHOLD:
-                continue  # stays part of the text run (mask-as-text)
-            add_text(node[pos : m.start()], start + pos, start + m.start())
-            flush_run()
-            spans.append(
-                Span(0, block_id, kind, start + m.start(), start + m.end(), conf, m.group(0))
-            )
-            pos = m.end()
-        add_text(node[pos:], start + pos, end)
-
-    i = 0
-    while i < n:
-        m = _TAG_RE.search(doc, i)
-        text_end = m.start() if m else n
-        if text_end > i and suppress == 0:
-            scan_text_node(i, text_end)
-        if m is None:
-            break
-        tag = m.group(0)
-        i = m.end()
-        if tag.startswith("<!") or tag.startswith("<?"):
-            continue
-        nm = _TAG_NAME_RE.match(tag)
-        if nm is None:
-            continue
-        closing, name = nm.group(1) == "/", nm.group(2).lower()
-
-        if name == "math" and not closing and suppress == 0:
-            close = _MATH_CLOSE_RE.search(doc, m.end())
-            end = close.end() if close else n
-            flush_run()
-            kind = "isolated" if _MATH_DISPLAY_RE.search(tag) else "embedding"
-            spans.append(Span(0, block_id, kind, m.start(), end, 1.0, doc[m.start() : end]))
-            i = end
-            continue
-
-        if name in _SUPPRESS_TAGS and name not in _VOID_TAGS:
-            self_closing = tag.rstrip().endswith("/>")
-            if closing:
-                suppress = max(0, suppress - 1)
-            elif not self_closing:
-                suppress += 1
-            continue
-
-        if name in _BLOCK_TAGS and suppress == 0:
+    for start, end, kind in _walk(doc):
+        if kind == "block":
             flush_run()
             block_id += 1
+            continue
+        if kind != "text":
+            flush_run()
+            spans.append(Span(len(spans), block_id, kind, start, end, 1.0, doc[start:end]))
+            continue
+        # a text node: split out its TeX math spans, the rest joins the run
+        node = doc[start:end]
+        if "$" in node or "\\(" in node or "\\[" in node:
+            pos = 0
+            for m in _MATH_RE.finditer(node):
+                mkind, conf = _classify_tex(m)
+                if conf < DETECT_CONF_THRESHOLD:
+                    continue  # stays part of the text run (mask-as-text)
+                if m.start() > pos:
+                    if not run_parts:
+                        run_start = start + pos
+                    run_parts.append(node[pos : m.start()])
+                    run_end = start + m.start()
+                flush_run()
+                spans.append(
+                    Span(len(spans), block_id, mkind, start + m.start(), start + m.end(), conf, m.group(0))
+                )
+                pos = m.end()
+            if pos == len(node):
+                continue
+            node, start = node[pos:], start + pos
+        if not run_parts:
+            run_start = start
+        run_parts.append(node)
+        run_end = end
 
     flush_run()
-    return [s._replace(span_id=idx) for idx, s in enumerate(spans)]
+    return spans
 
 
 def safe_split_points(doc: str, target_chars: int) -> list[int]:
@@ -256,7 +282,8 @@ def safe_split_points(doc: str, target_chars: int) -> list[int]:
     thrid_party/paddleocr/infer/predict_det.py:198-297``).
 
     A safe point is the start of a BLOCK-level tag at suppress depth 0,
-    outside ``<math>`` regions / comments / CDATA. At such a point the
+    outside ``<math>`` regions / comments / CDATA — a ``"block"`` event of
+    the same tag walk :func:`detect_document` runs. At such a point the
     parser state is empty by construction: the pending text run was just
     flushed (block tags always flush), no math region is open, and no
     suppressed subtree is open — so detection restarted there produces
@@ -272,34 +299,10 @@ def safe_split_points(doc: str, target_chars: int) -> list[int]:
     """
     points: list[int] = []
     next_target = target_chars
-    n = len(doc)
-    suppress = 0
-    i = 0
-    while i < n:
-        m = _TAG_RE.search(doc, i)
-        if m is None:
-            break
-        tag = m.group(0)
-        i = m.end()
-        if tag.startswith("<!") or tag.startswith("<?"):
-            continue
-        nm = _TAG_NAME_RE.match(tag)
-        if nm is None:
-            continue
-        closing, name = nm.group(1) == "/", nm.group(2).lower()
-        if name == "math" and not closing and suppress == 0:
-            close = _MATH_CLOSE_RE.search(doc, m.end())
-            i = close.end() if close else n
-            continue
-        if name in _SUPPRESS_TAGS and name not in _VOID_TAGS:
-            if closing:
-                suppress = max(0, suppress - 1)
-            elif not tag.rstrip().endswith("/>"):
-                suppress += 1
-            continue
-        if name in _BLOCK_TAGS and suppress == 0 and m.start() >= next_target:
-            points.append(m.start())
-            next_target = m.start() + target_chars
+    for start, _, kind in _walk(doc):
+        if kind == "block" and start >= next_target:
+            points.append(start)
+            next_target = start + target_chars
     return points
 
 

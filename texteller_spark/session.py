@@ -51,7 +51,7 @@ def build_session(
     # experiment to run the identical job under local-cluster[N,cores,mem]
     # (N separate executor JVMs on this host, each with its own Arrow feed
     # path — the closest in-sandbox approximation of a multi-executor
-    # cluster; see tools/bench_cluster_scaling.py)
+    # cluster; see tools/bench_scaling.py)
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{n}]")
     builder = SparkSession.builder.master(master)
     if master.startswith("local-cluster"):
