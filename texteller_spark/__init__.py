@@ -48,8 +48,12 @@ from .plans.pipeline import (  # noqa: F401
     extract_pages_chunked,
     span_table,
 )
-from .session import build_session  # noqa: F401
+from .session import build_session, guard_zipimport_invalidation  # noqa: F401
 from .sources.warc import read_pages_warc, read_text_wet  # noqa: F401
+
+# every worker that unpickles a texteller UDF imports this package first, so
+# its later tasks skip the per-task zip directory re-reads (session.py)
+guard_zipimport_invalidation()
 
 __version__ = "0.3.0"
 

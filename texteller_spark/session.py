@@ -6,17 +6,94 @@ skew-join splitting + partition coalescing), Arrow enabled with bounded
 batch sizes (the memory-ceiling analog of the reference's recognition batch
 size 6), and Python worker reuse (per-executor kernel warm-up amortized, the
 model-session-caching analog).
+
+Reused workers also pay a per-task import cost that no setting removes.
+Spark's Python worker calls ``importlib.invalidate_caches()`` at the start of
+every task (``pyspark/worker_util.py::setup_spark_files``). Before CPython
+3.13 (gh-103200 made it lazy) that makes every cached ``zipimporter`` re-read
+its whole archive directory: a worker holds 22 of them on four archives,
+among them ``pyspark.zip`` (1,328 entries) and the ``spark-core`` jar (5,359)
+that Spark puts on the worker's path. Measured in real workers (Python 3.11,
+local[4] on a 4-vCPU host, 8 ``extract_pages`` jobs), that was 22 directory
+reads and 0.20-0.23 CPU s per task, paid before the UDF runs. Importing this
+package installs ``guard_zipimport_invalidation``: an archive's directory is
+re-read only when the archive's stat changed since the last read, so from a
+worker's second task on an unchanged archive is read 0 times per task (per
+worker over 9 tasks: 1.8-2.1 -> 0.26-0.33 CPU s). perfbench ``crawl_mix``
+(12 alternated pairs) went from 5,437 to 6,758 docs/s and from 0.64 to 0.51
+CPU s/kdoc by median.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
+import sys
 import tempfile
+import zipimport
 
 from pyspark.sql import SparkSession
 
-__all__ = ["build_session", "default_parallelism", "ship_package"]
+__all__ = [
+    "build_session",
+    "default_parallelism",
+    "guard_zipimport_invalidation",
+    "ship_package",
+]
+
+
+def _zip_stamp(archive: str) -> tuple[int, int, int] | None:
+    try:
+        st = os.stat(archive)
+    except OSError:
+        return None
+    return (st.st_mtime_ns, st.st_size, st.st_ino)
+
+
+def guard_zipimport_invalidation() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive's directory
+    only when the archive changed: its ``(st_mtime_ns, st_size, st_ino)``
+    differs from the last read, or it left ``zipimport._zip_directory_cache``.
+    Otherwise the importer rebinds to the cached directory. A changed archive
+    is read once per change, not once per importer; this is the freshness
+    contract CPython uses for ``.pyc`` validation. Idempotent; does nothing
+    on Python >= 3.13, where the invalidation is already lazy.
+
+    Archives already cached are read once here, with their stamp taken
+    first, so the stamps never trust a directory read before the guard."""
+    if sys.version_info >= (3, 13):
+        return
+    eager = zipimport.zipimporter.invalidate_caches
+    if hasattr(eager, "__wrapped__"):
+        return
+    cache = zipimport._zip_directory_cache
+    stamps: dict[str, tuple[int, int, int]] = {}
+    for archive in list(cache):
+        stamp = _zip_stamp(archive)
+        try:
+            cache[archive] = zipimport._read_directory(archive)
+        except zipimport.ZipImportError:
+            continue
+        if stamp is not None:
+            stamps[archive] = stamp
+
+    @functools.wraps(eager)
+    def invalidate_caches(self):
+        archive = self.archive
+        stamp = _zip_stamp(archive)
+        files = cache.get(archive)
+        if stamp is not None and files is not None and stamps.get(archive) == stamp:
+            self._files = files
+            return
+        # stamped before the read: a write during it shows at the next stat
+        eager(self)
+        if stamp is not None and archive in cache:
+            stamps[archive] = stamp
+        else:
+            stamps.pop(archive, None)
+
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 def ship_package(spark: SparkSession) -> None:
