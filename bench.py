@@ -165,12 +165,10 @@ def query_builders(spark, corpus) -> dict:
     from tools.bench_ann_recall import ensure_emb_corpus
 
     def extract_pdfs():
-        from texteller_spark.sources.pdf import make_extract_pdf_udf
+        from texteller_spark.sources.pdf import extract_pdf_udf
 
         pdfs = spark.read.parquet(pdf_corpus(spark))
-        return pdfs.select(
-            "url", make_extract_pdf_udf()(F.col("pdf")).alias("text")
-        )
+        return pdfs.select("url", extract_pdf_udf(F.col("pdf")).alias("text"))
 
     def wide(path):
         # ~25 MB of tiny parquet files collapses to 1-2 scan partitions

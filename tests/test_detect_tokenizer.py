@@ -12,6 +12,7 @@ from texteller_spark.operators.detect import (
     detect_document,
     safe_split_points,
 )
+from texteller_spark.schema import DETECT_CONF_THRESHOLD
 
 #: every name the tokenizer classifies, plus near misses: inline tags,
 #: prefixes and extensions of block names, namespaced ``math``, and names
@@ -73,7 +74,10 @@ _SOUP = st.lists(
 @given(_SOUP)
 @settings(max_examples=600, deadline=None)
 def test_detect_document_matches_per_tag_loop(doc):
-    assert detect_document(doc) == ref.detect_document(doc)
+    spans = detect_document(doc)
+    assert spans == ref.detect_document(doc)
+    # detection drops sub-threshold TeX itself: the span kernel filters nothing
+    assert all(s.confidence >= DETECT_CONF_THRESHOLD for s in spans)
 
 
 @given(_SOUP, st.integers(1, 200))

@@ -1,6 +1,8 @@
 """Spark-level pipeline tests: byte identity e2e, partition invariance,
 resumable checkpointing, plan shape."""
 
+import datetime
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -57,6 +59,52 @@ def test_distributed_generator_matches_local(spark):
         row = rows[local["url"]]
         assert bytes(row["html"]) == local["html"]
         assert row["lang"] == local["lang"]
+
+
+def test_page_rows_carry_aware_utc_warc_ts(spark):
+    """The page-row functions behind ``pages_df`` and ``pages_from_documents``
+    return aware UTC datetimes: the row UDF's output converter reads a naive
+    one in the worker host's local zone, not the session's."""
+    from texteller_spark.sources.pages import page_from_doc, pages_from_documents, synth_page
+
+    utc = datetime.timezone.utc
+    for ts in (synth_page(7)["warc_ts"], page_from_doc(7, "a b c", "en")["warc_ts"]):
+        assert ts.tzinfo is not None and ts.utcoffset() == datetime.timedelta(0)
+    for row in pages_df(spark, 12, partitions=3).collect():
+        i = int(row["url"].rsplit("doc", 1)[1])
+        assert row["warc_ts"].astimezone(utc) == synth_page(i)["warc_ts"]
+    docs = spark.createDataFrame(
+        [(5, "x y", "de"), (9, "z", None)], "doc_id long, text string, lang string"
+    )
+    for row in pages_from_documents(docs).collect():
+        i = int(row["url"].rsplit("/", 1)[1])
+        assert row["warc_ts"].astimezone(utc) == page_from_doc(i, "", "")["warc_ts"]
+
+
+def test_every_row_udf_is_arrow_batched():
+    """Each per-row Python map of the extraction surface is Spark's
+    Arrow-batched row UDF (``ArrowEvalPython``), never the pickled
+    row-at-a-time one Spark falls back to without pyarrow."""
+    from pyspark.util import PythonEvalType
+
+    from texteller_spark.operators import normalize
+    from texteller_spark.plans import pipeline
+    from texteller_spark.sources import pages, pdf
+
+    udfs = {
+        "extract_udf": pipeline.extract_udf,
+        "extract_text_udf": pipeline.extract_text_udf,
+        "chunk_udf": pipeline.chunk_udf,
+        "recognize_piece_udf": pipeline.recognize_piece_udf,
+        "assemble_udf": pipeline.assemble_udf,
+        "_gzip_udf": pages._gzip_udf,
+        "_page_udf": pages._page_udf,
+        "_doc_page_udf": pages._doc_page_udf,
+        "nfc_udf": normalize.nfc_udf,
+        "extract_pdf_udf": pdf.extract_pdf_udf,
+    }
+    for name, udf in udfs.items():
+        assert udf.evalType == PythonEvalType.SQL_ARROW_BATCHED_UDF, name
 
 
 def test_resume_anti_join(spark, tiny_df, tmp_path):

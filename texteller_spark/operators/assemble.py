@@ -44,15 +44,13 @@ def _fold_tag(md: str, tag_text: str) -> str:
 
 
 def assemble_document(spans: Sequence) -> str:
-    """Fold recognized spans (each with .block_id/.kind/.char_start/.content
-    or dict-like) into the final extracted string."""
-    items = []
-    for s in spans:
-        get = s.get if hasattr(s, "get") else s.__getitem__
-        items.append(
-            (int(get("char_start")), int(get("block_id")), get("kind"), get("content"))
-        )
-    items.sort(key=lambda t: t[0])
+    """Fold recognized spans into the final extracted string. Each span is
+    read by key (``char_start``, ``block_id``, ``kind``, ``content``): a
+    kernel dict or a Spark ``Row``."""
+    items = sorted(
+        ((s["char_start"], s["block_id"], s["kind"], s["content"]) for s in spans),
+        key=lambda t: t[0],
+    )
     if not items:
         return ""
 

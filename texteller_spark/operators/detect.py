@@ -25,8 +25,8 @@ Contract
   tags stripped); math-span ``raw`` is the exact document slice.
 
 No Spark here: these are pure kernels. The span kernel in
-``plans/pipeline.py`` runs :func:`detect_document` inside the one span UDF
-and keeps the spans at confidence ≥ 0.5 (P1).
+``plans/pipeline.py`` runs :func:`detect_document` inside the one span UDF;
+every span it gets already has confidence ≥ 0.5 (P1), so it filters nothing.
 """
 
 from __future__ import annotations

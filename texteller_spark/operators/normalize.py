@@ -6,8 +6,8 @@ dedup on visually identical documents).
 
 NFC runs as an Arrow-batched kernel — Spark has no built-in Unicode
 normalizer expression, so this is one of the package's few justified
-Python stages (same contract as the extraction kernel: iterator-of-series
-``pandas_udf``, one Python round-trip, no per-row overhead). The
+Python stages (same contract as the extraction kernel: a row function
+declared with ``F.udf(..., useArrow=True)``, fed whole Arrow batches). The
 zero-width scrub is a plain JVM ``regexp_replace`` that fuses into
 whole-stage codegen around the kernel. DuckDB's ``nfc_normalize`` computes
 the identical NFC form (verified over combining marks, ligature-carrying
@@ -18,35 +18,27 @@ value-exact.
 from __future__ import annotations
 
 import unicodedata
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
-__all__ = ["make_nfc_udf", "normalize_text", "ZERO_WIDTH_RE"]
+__all__ = ["nfc_udf", "normalize_text", "ZERO_WIDTH_RE"]
 
 #: zero-width space/joiners + BOM — invisible codepoints that survive NFC
 #: (they are not combining marks) and poison tokenization and dedup keys
 ZERO_WIDTH_RE = "[\u200b\u200c\u200d\ufeff]"
 
 
-def make_nfc_udf():
-    """Arrow-batched NFC normalizer (null-preserving)."""
+def _nfc(t: str | None) -> str | None:
+    return unicodedata.normalize("NFC", t) if t is not None else None
 
-    @pandas_udf(T.StringType())
-    def nfc(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in it:
-            yield s.map(
-                lambda t: unicodedata.normalize("NFC", t) if t is not None else None
-            )
 
-    return nfc
+#: Arrow-batched NFC normalizer (null-preserving)
+nfc_udf = F.udf(_nfc, T.StringType(), useArrow=True)
 
 
 def normalize_text(col: Column) -> Column:
     """NFC + zero-width scrub: the canonical text every downstream stage
     (token counts, digests, MinHash shingles) should key on. Idempotent."""
-    return F.regexp_replace(make_nfc_udf()(col), ZERO_WIDTH_RE, "")
+    return F.regexp_replace(nfc_udf(col), ZERO_WIDTH_RE, "")

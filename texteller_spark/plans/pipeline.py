@@ -2,17 +2,17 @@
 
 Spark-first re-expression of the reference's mix_inference dataflow
 (``src/models/utils/mix_inference.py:136-264``). One kernel,
-:func:`recognize_piece_kernel`, is the only detect → threshold (P1,
-confidence ≥ 0.5) → recognize loop. It runs over a whole decoded page at
-offset 0 or over one chunk of a page at the chunk's char offset, and every
-extraction path derives from it:
+:func:`recognize_piece_kernel`, is the only detect → recognize loop
+(``detect_document`` already applies the P1 confidence ≥ 0.5 threshold). It
+runs over a whole decoded page at offset 0 or over one chunk of a page at
+the chunk's char offset, and every extraction path derives from it:
 
 ::
 
     extract_pages          pages → extract_udf(html)              # + assemble_document:
                                                                   # one fused map, no exchange
     span_table             pages → explode_outer(recognize_piece_udf(0, html))
-    extract_pages_chunked  pages → explode(chunk_udf(html))
+    extract_pages_chunked  pages → explode(chunk_udf(html, n))
                              → repartition(url, chunk_id)
                              → explode_outer(recognize_piece_udf(off, piece))
                              → groupBy(url).agg(array_sort(collect_list(...)))
@@ -27,6 +27,10 @@ at offset 0 or a chunk piece at its offset. In the chunked path,
 independent of partition count and arrival order (the determinism
 invariant the scaling test relies on, SURVEY.md §7.3).
 
+Every UDF here is a row function over the pure kernels, declared with
+``F.udf(..., useArrow=True)``: Spark feeds it whole Arrow batches
+(``ArrowEvalPython``) and converts rows without pandas.
+
 At production scale the scan is an Iceberg table bucketed by ``url`` hash;
 in-sandbox the same plans run over parquet. Per-partition lineage counters
 and resumable checkpointing live in ``checkpoint.py``.
@@ -34,18 +38,14 @@ and resumable checkpointing live in ``checkpoint.py``.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.functions import pandas_udf
 
 from ..operators.assemble import assemble_document
 from ..operators.detect import chunk_document, decode_page, detect_document
 from ..operators.recognize import recognize_span
-from ..schema import CONTENT_SPAN_SCHEMA, DETECT_CONF_THRESHOLD
+from ..schema import CONTENT_SPAN_SCHEMA
 
 __all__ = [
     "extract_pages",
@@ -76,28 +76,17 @@ def extract_page_kernel(html) -> tuple[list[dict], str]:
     return spans, assemble_document(spans)
 
 
-def _extract_batches(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    for html_col in it:
-        spans_out, text_out = [], []
-        for html in html_col:
-            spans, text = extract_page_kernel(html)
-            spans_out.append(spans)
-            text_out.append(text)
-        yield pd.DataFrame({"spans": spans_out, "extracted_text": text_out})
+extract_udf = F.udf(extract_page_kernel, _EXTRACT_RESULT, useArrow=True)
 
 
-extract_udf = pandas_udf(_extract_batches, returnType=_EXTRACT_RESULT)
-
-
-def _extract_text_batches(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    for html_col in it:
-        yield pd.Series([extract_page_kernel(h)[1] for h in html_col])
+def _extract_text(html) -> str:
+    return extract_page_kernel(html)[1]
 
 
 #: text-only variant: the span payload (raw+content, ≈2× the document) never
 #: crosses the worker→JVM Arrow feed — the output-side twin of gzip-stored
 #: html for pipelines that only consume ``extracted_text``
-extract_text_udf = pandas_udf(_extract_text_batches, returnType=T.StringType())
+extract_text_udf = F.udf(_extract_text, T.StringType(), useArrow=True)
 
 
 _CHUNK_SCHEMA = T.ArrayType(
@@ -112,24 +101,16 @@ _CHUNK_SCHEMA = T.ArrayType(
 )
 
 
-def make_chunk_udf(max_chunk_chars: int):
-    @pandas_udf(_CHUNK_SCHEMA)
-    def chunk_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for html_col in it:
-            yield html_col.map(
-                lambda b: [
-                    {"chunk_id": k, "off": off, "piece": piece}
-                    for k, (off, piece) in enumerate(
-                        chunk_document(decode_page(b), max_chunk_chars)
-                    )
-                ]
-            )
+def _chunks(html, max_chunk_chars: int) -> list[tuple[int, int, str]]:
+    return [(k, *c) for k, c in enumerate(chunk_document(decode_page(html), max_chunk_chars))]
 
-    return chunk_udf
+
+#: (html, max chunk chars) → (chunk_id, char offset, decoded piece) per chunk
+chunk_udf = F.udf(_chunks, _CHUNK_SCHEMA, useArrow=True)
 
 
 def recognize_piece_kernel(piece: str, off: int) -> list[dict]:
-    """Detect + threshold + recognize one decoded document or chunk.
+    """Detect + recognize one decoded document or chunk.
 
     Char offsets and span/block ids are rebased by the chunk's char offset
     ``off`` (0 for a whole page). The rebase is monotonic across chunks, so
@@ -137,8 +118,6 @@ def recognize_piece_kernel(piece: str, off: int) -> list[dict]:
     int32-safe for documents < 2^31 chars, enforced by chunk_document."""
     out = []
     for s in detect_document(piece):
-        if s.confidence < DETECT_CONF_THRESHOLD:
-            continue
         d = s._asdict()
         d["span_id"] = s.span_id + off
         d["block_id"] = s.block_id + off
@@ -149,22 +128,13 @@ def recognize_piece_kernel(piece: str, off: int) -> list[dict]:
     return out
 
 
-def _recognize_piece_batches(
-    it: Iterator[tuple[pd.Series, pd.Series]],
-) -> Iterator[pd.Series]:
-    for off_col, piece_col in it:
-        yield pd.Series(
-            [
-                recognize_piece_kernel(decode_page(p), int(o))
-                for o, p in zip(off_col, piece_col)
-            ],
-            dtype="object",
-        )
+def _recognize_piece(off: int, piece) -> list[dict]:
+    return recognize_piece_kernel(decode_page(piece), off)
 
 
 #: the span UDF: (char offset, html bytes or decoded piece) → recognized spans
-recognize_piece_udf = pandas_udf(
-    _recognize_piece_batches, returnType=T.ArrayType(CONTENT_SPAN_SCHEMA)
+recognize_piece_udf = F.udf(
+    _recognize_piece, T.ArrayType(CONTENT_SPAN_SCHEMA), useArrow=True
 )
 
 
@@ -186,13 +156,8 @@ def span_table(pages: DataFrame, partitions: int | None = None) -> DataFrame:
     ).select("url", "span.*")
 
 
-def _assemble_batches(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    for spans_col in it:
-        yield spans_col.map(assemble_document)
-
-
-#: scalar pandas UDF: array<struct spans+content> → extracted_text
-assemble_udf = pandas_udf(_assemble_batches, returnType=T.StringType())
+#: array<struct spans+content> → extracted_text
+assemble_udf = F.udf(assemble_document, T.StringType(), useArrow=True)
 
 
 def _assemble_by_url(recognized: DataFrame) -> DataFrame:
@@ -259,9 +224,10 @@ def extract_pages_chunked(
     degrade to one chunk for that stretch.
     """
     p = partitions or int(pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    chunk_udf = make_chunk_udf(max_chunk_chars)
     chunks = (
-        pages.select("url", F.explode(chunk_udf(F.col("html"))).alias("c"))
+        pages.select(
+            "url", F.explode(chunk_udf(F.col("html"), F.lit(max_chunk_chars))).alias("c")
+        )
         .select("url", "c.*")
         .repartition(p, F.col("url"), F.col("chunk_id"))
     )

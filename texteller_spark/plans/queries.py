@@ -1183,16 +1183,14 @@ def q_pdf_extract(spark, sf):
     kernel in-plan, and the oracle pins the exact extracted text — so the
     whole literal-string/escape/TJ/Td layout model is under the hard
     value-exact gate."""
-    from ..sources.pdf import build_pdf, make_extract_pdf_udf
+    from ..sources.pdf import build_pdf, extract_pdf_udf
 
     rows = [
         (i, bytearray(build_pdf([lines], compress=(i % 2 == 0))))
         for i, lines in enumerate(_PDF_DOCS)
     ]
     df = spark.createDataFrame(rows, "pdf_id int, pdf binary")
-    return df.select(
-        "pdf_id", make_extract_pdf_udf()(F.col("pdf")).alias("text")
-    )
+    return df.select("pdf_id", extract_pdf_udf(F.col("pdf")).alias("text"))
 
 
 def _pdf_extract_sql() -> str:

@@ -18,12 +18,10 @@ latin-1 charset edge, formula-dense skew (~1000 spans), oversized (>1 MiB).
 from __future__ import annotations
 
 import datetime
+import gzip
 import random
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -328,30 +326,15 @@ _PAGE_SCHEMA = T.StructType(
 )
 
 
-@pandas_udf(T.BinaryType())
-def _gzip_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+def _gzip(html: bytes) -> bytes:
     """gzip level-1 per payload (WARC-faithful storage form)."""
-    import gzip as _gzip
-
-    for s in it:
-        yield s.map(lambda b: _gzip.compress(bytes(b), 1))
+    return gzip.compress(html, 1)
 
 
-@pandas_udf(_PAGE_SCHEMA)
-def _page_udf(idx: pd.Series) -> pd.DataFrame:
-    rows = []
-    for i in idx:
-        r = synth_page(int(i))
-        rows.append(
-            {
-                "url": r["url"],
-                "warc_ts": r["warc_ts"].replace(tzinfo=None),
-                "html": r["html"],
-                "text": r["text"],
-                "lang": r["lang"],
-            }
-        )
-    return pd.DataFrame(rows)
+_gzip_udf = F.udf(_gzip, T.BinaryType(), useArrow=True)
+
+#: row index → page row (the ground-truth keys are not in the schema)
+_page_udf = F.udf(synth_page, _PAGE_SCHEMA, useArrow=True)
 
 
 def doc_blocks(doc_id: int, text: str) -> list[list[tuple[str, str]]]:
@@ -379,24 +362,20 @@ def page_from_doc(doc_id: int, text: str, lang: str) -> dict:
     html_str = _render_html(blocks[0][0][1], blocks, rng)
     return {
         "url": f"https://synth.test/docs/{doc_id}",
-        "warc_ts": (EPOCH + datetime.timedelta(seconds=60 * doc_id)).replace(tzinfo=None),
+        "warc_ts": EPOCH + datetime.timedelta(seconds=60 * doc_id),
         "html": html_str.encode("utf-8"),
         "text": text,
         "lang": lang or "en",
     }
 
 
+_doc_page_udf = F.udf(page_from_doc, _PAGE_SCHEMA, useArrow=True)
+
+
 def pages_from_documents(docs: DataFrame) -> DataFrame:
     """(doc_id, text, lang) → deterministic pages table (Arrow-batched,
     executor-side rendering; the flagship-query bridge from the driver's
     ``documents`` parquet to the authoritative input shape)."""
-
-    @pandas_udf(_PAGE_SCHEMA)
-    def _doc_page_udf(doc_id: pd.Series, text: pd.Series, lang: pd.Series) -> pd.DataFrame:
-        return pd.DataFrame(
-            [page_from_doc(int(i), t, l) for i, t, l in zip(doc_id, text, lang)]
-        )
-
     return docs.select(
         _doc_page_udf(F.col("doc_id"), F.col("text"), F.col("lang")).alias("p")
     ).select("p.*")

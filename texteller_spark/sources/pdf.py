@@ -31,10 +31,12 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..schema import PAGES_SCHEMA
 
-__all__ = ["extract_pdf_text", "build_pdf", "read_pages_pdf"]
+__all__ = ["extract_pdf_text", "extract_pdf_udf", "build_pdf", "read_pages_pdf"]
 
 _STREAM_RE = re.compile(rb"stream\r?\n")
 
@@ -199,10 +201,10 @@ def _content_text(stream: bytes) -> list[str]:
     return lines
 
 
-def extract_pdf_text(data: bytes) -> str:
-    """PDF bytes → extracted text, lines joined with newlines. Non-PDF or
-    malformed input yields ''."""
-    if not data.startswith(b"%PDF-"):
+def extract_pdf_text(data: bytes | None) -> str:
+    """PDF bytes → extracted text, lines joined with newlines. Null, non-PDF
+    or malformed input yields ''."""
+    if data is None or not data.startswith(b"%PDF-"):
         return ""
     lines: list[str] = []
     for stream in _iter_streams(data):
@@ -210,17 +212,8 @@ def extract_pdf_text(data: bytes) -> str:
     return "\n".join(l for l in (ln.strip() for ln in lines) if l)
 
 
-def _extract_batches(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    for col in it:
-        yield col.map(lambda b: extract_pdf_text(bytes(b)) if b is not None else "")
-
-
-def make_extract_pdf_udf():
-    """Scalar pandas UDF: pdf binary → extracted text (Arrow-batched)."""
-    from pyspark.sql.pandas.functions import pandas_udf
-    from pyspark.sql.types import StringType
-
-    return pandas_udf(_extract_batches, returnType=StringType())
+#: pdf binary → extracted text (Arrow-batched row UDF)
+extract_pdf_udf = F.udf(extract_pdf_text, T.StringType(), useArrow=True)
 
 
 # --------------------------------------------------------------------------
