@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import zlib
 
+from texteller_spark.schema import PAGES_SCHEMA
 from texteller_spark.sources.pdf import (
     build_pdf,
     extract_pdf_text,
@@ -151,7 +152,9 @@ def test_spark_pdf_scan_pages_shape(spark, tmp_path):
         (tmp_path / f"doc{i}.pdf").write_bytes(
             build_pdf([[f"document {i} line one", "line two"]], compress=i % 2 == 0)
         )
-    got = read_pages_pdf(spark, str(tmp_path)).orderBy("url").collect()
+    scan = read_pages_pdf(spark, str(tmp_path))
+    assert scan.schema == PAGES_SCHEMA
+    got = scan.orderBy("url").collect()
     assert [r["text"] for r in got] == [
         f"document {i} line one\nline two" for i in range(3)
     ]

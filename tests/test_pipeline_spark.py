@@ -81,10 +81,24 @@ def test_page_rows_carry_aware_utc_warc_ts(spark):
         assert row["warc_ts"].astimezone(utc) == page_from_doc(i, "", "")["warc_ts"]
 
 
+def test_gzip_corpus_is_byte_reproducible(spark):
+    """``pages_df(gzip_html=True)`` stamps no wall clock into the gzip
+    member headers (bytes 4-8, ``mtime``), so two collects give equal html."""
+
+    def gzipped():
+        rows = pages_df(spark, 30, partitions=3, gzip_html=True).collect()
+        return sorted((r["url"], bytes(r["html"])) for r in rows)
+
+    first = gzipped()
+    assert all(html[:2] == b"\x1f\x8b" and html[4:8] == bytes(4) for _, html in first)
+    assert gzipped() == first
+
+
 def test_every_row_udf_is_arrow_batched():
-    """Each per-row Python map of the extraction surface is Spark's
-    Arrow-batched row UDF (``ArrowEvalPython``), never the pickled
-    row-at-a-time one Spark falls back to without pyarrow."""
+    """Each per-row Python map of the extraction surface is an Arrow UDF
+    built by ``schema.arrow_row_udf`` (``ArrowEvalPython``, Arrow arrays in
+    and out): neither the pandas-converting row UDF of ``F.udf(...,
+    useArrow=True)`` nor the pickled row-at-a-time one."""
     from pyspark.util import PythonEvalType
 
     from texteller_spark.operators import normalize
@@ -104,7 +118,7 @@ def test_every_row_udf_is_arrow_batched():
         "extract_pdf_udf": pdf.extract_pdf_udf,
     }
     for name, udf in udfs.items():
-        assert udf.evalType == PythonEvalType.SQL_ARROW_BATCHED_UDF, name
+        assert udf.evalType == PythonEvalType.SQL_SCALAR_ARROW_UDF, name
 
 
 def test_resume_anti_join(spark, tiny_df, tmp_path):

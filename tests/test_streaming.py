@@ -100,9 +100,9 @@ def test_streaming_dedup_first_seen_across_batches(spark, tmp_path):
 
 
 def test_streaming_dedup_ttl_wiring(spark, tmp_path):
-    """TTL variant: the ProcessingTimeTimeout path must run a batch cleanly
-    (the expiry itself needs wall-clock between micro-batches — the wiring,
-    state write, and timeout registration are what one batch can pin)."""
+    """TTL variant: the event-time timeout dedups within the batch and lets
+    the ``availableNow`` query terminate (a processing-time timeout kept it
+    running until ``awaitTermination`` gave up)."""
     import datetime
 
     from texteller_spark.streaming.stream import streaming_dedup_first_seen
@@ -124,7 +124,7 @@ def test_streaming_dedup_ttl_wiring(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got = {r["url"]: r["warc_ts"] for r in spark.sql("SELECT * FROM ttl_out").collect()}
     assert set(got) == {"https://a.test/", "https://b.test/"}
     assert got["https://a.test/"].hour == 0  # min warc_ts within the batch

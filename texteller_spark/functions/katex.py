@@ -16,10 +16,10 @@ pinned in ``tests/data/katex_goldens.json`` and enforced by
 Design notes
 ------------
 * These are pure string functions.  On the Spark side they run inside the
-  fused per-page kernel, which the Arrow-batched row UDFs
-  (``F.udf(..., useArrow=True)``) in ``texteller_spark/plans/pipeline.py``
-  apply to whole Arrow batches — never a pickled row-at-a-time
-  ``BatchEvalPython`` UDF.
+  fused per-page kernel, which the Arrow UDFs in
+  ``texteller_spark/plans/pipeline.py`` (``schema.arrow_row_udf``) apply to
+  whole Arrow batches — never a pickled row-at-a-time ``BatchEvalPython``
+  UDF.
 * :func:`latex_to_katex` is an ordered program of rewrite steps kept as
   data (``_PROGRAM_HEAD``/``_PROGRAM_TAIL``).  One compiled alternation of
   every step's needle (``_GATE_RE``) runs first, so a formula no step can

@@ -7,7 +7,7 @@ dedup on visually identical documents).
 NFC runs as an Arrow-batched kernel — Spark has no built-in Unicode
 normalizer expression, so this is one of the package's few justified
 Python stages (same contract as the extraction kernel: a row function
-declared with ``F.udf(..., useArrow=True)``, fed whole Arrow batches). The
+behind ``schema.arrow_row_udf``, Arrow batches in and out). The
 zero-width scrub is a plain JVM ``regexp_replace`` that fuses into
 whole-stage codegen around the kernel. DuckDB's ``nfc_normalize`` computes
 the identical NFC form (verified over combining marks, ligature-carrying
@@ -23,6 +23,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..schema import arrow_row_udf
+
 __all__ = ["nfc_udf", "normalize_text", "ZERO_WIDTH_RE"]
 
 #: zero-width space/joiners + BOM — invisible codepoints that survive NFC
@@ -35,7 +37,7 @@ def _nfc(t: str | None) -> str | None:
 
 
 #: Arrow-batched NFC normalizer (null-preserving)
-nfc_udf = F.udf(_nfc, T.StringType(), useArrow=True)
+nfc_udf = arrow_row_udf(_nfc, T.StringType())
 
 
 def normalize_text(col: Column) -> Column:

@@ -27,9 +27,11 @@ at offset 0 or a chunk piece at its offset. In the chunked path,
 independent of partition count and arrival order (the determinism
 invariant the scaling test relies on, SURVEY.md §7.3).
 
-Every UDF here is a row function over the pure kernels, declared with
-``F.udf(..., useArrow=True)``: Spark feeds it whole Arrow batches
-(``ArrowEvalPython``) and converts rows without pandas.
+Every UDF here is a pure kernel behind :func:`..schema.arrow_row_udf`, an
+``F.arrow_udf``: Spark feeds it whole Arrow batches (``ArrowEvalPython``),
+the kernel runs per row, and its results go straight back into one Arrow
+array. Declaring them imports no pandas, and a worker loads none to
+unpickle them.
 
 At production scale the scan is an Iceberg table bucketed by ``url`` hash;
 in-sandbox the same plans run over parquet. Per-partition lineage counters
@@ -45,7 +47,7 @@ from pyspark.sql import types as T
 from ..operators.assemble import assemble_document
 from ..operators.detect import chunk_document, decode_page, detect_document
 from ..operators.recognize import recognize_span
-from ..schema import CONTENT_SPAN_SCHEMA
+from ..schema import CONTENT_SPAN_SCHEMA, arrow_row_udf
 
 __all__ = [
     "extract_pages",
@@ -76,7 +78,7 @@ def extract_page_kernel(html) -> tuple[list[dict], str]:
     return spans, assemble_document(spans)
 
 
-extract_udf = F.udf(extract_page_kernel, _EXTRACT_RESULT, useArrow=True)
+extract_udf = arrow_row_udf(extract_page_kernel, _EXTRACT_RESULT)
 
 
 def _extract_text(html) -> str:
@@ -86,7 +88,7 @@ def _extract_text(html) -> str:
 #: text-only variant: the span payload (raw+content, ≈2× the document) never
 #: crosses the worker→JVM Arrow feed — the output-side twin of gzip-stored
 #: html for pipelines that only consume ``extracted_text``
-extract_text_udf = F.udf(_extract_text, T.StringType(), useArrow=True)
+extract_text_udf = arrow_row_udf(_extract_text, T.StringType())
 
 
 _CHUNK_SCHEMA = T.ArrayType(
@@ -106,7 +108,7 @@ def _chunks(html, max_chunk_chars: int) -> list[tuple[int, int, str]]:
 
 
 #: (html, max chunk chars) → (chunk_id, char offset, decoded piece) per chunk
-chunk_udf = F.udf(_chunks, _CHUNK_SCHEMA, useArrow=True)
+chunk_udf = arrow_row_udf(_chunks, _CHUNK_SCHEMA)
 
 
 def recognize_piece_kernel(piece: str, off: int) -> list[dict]:
@@ -133,9 +135,7 @@ def _recognize_piece(off: int, piece) -> list[dict]:
 
 
 #: the span UDF: (char offset, html bytes or decoded piece) → recognized spans
-recognize_piece_udf = F.udf(
-    _recognize_piece, T.ArrayType(CONTENT_SPAN_SCHEMA), useArrow=True
-)
+recognize_piece_udf = arrow_row_udf(_recognize_piece, T.ArrayType(CONTENT_SPAN_SCHEMA))
 
 
 def page_spans() -> Column:
@@ -157,7 +157,7 @@ def span_table(pages: DataFrame, partitions: int | None = None) -> DataFrame:
 
 
 #: array<struct spans+content> → extracted_text
-assemble_udf = F.udf(assemble_document, T.StringType(), useArrow=True)
+assemble_udf = arrow_row_udf(assemble_document, T.StringType())
 
 
 def _assemble_by_url(recognized: DataFrame) -> DataFrame:

@@ -14,7 +14,10 @@ plus ``text`` for OCR-text-block analogs.
 
 from __future__ import annotations
 
+import pyarrow as pa
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 #: Detection confidence threshold — parity with the reference detector's
 #: ``draw_threshold: 0.5`` (infer_cfg.yml:2).
@@ -59,3 +62,19 @@ EXTRACTED_SCHEMA = T.StructType(
         T.StructField("extracted_text", T.StringType(), False),
     ]
 )
+
+
+def arrow_row_udf(kernel, spark_type: T.DataType):
+    """A pure row kernel as a Spark ``arrow_udf`` (``ArrowEvalPython``,
+    evalType ``SQL_SCALAR_ARROW_UDF``): the kernel runs once per row of each
+    Arrow batch (nulls arrive as ``None``), and one ``pa.array`` call builds
+    its results into ``spark_type``'s Arrow type, with no pandas conversion.
+    pyarrow (16) still imports pandas inside a process's first ``pa.array``."""
+    arrow_type = to_arrow_type(spark_type)
+
+    def run(*cols):
+        rows = zip(*(c.to_pylist() for c in cols))
+        return pa.array([kernel(*row) for row in rows], type=arrow_type)
+
+    run.__name__ = kernel.__name__  # the UDF's name in plans and the UI
+    return F.arrow_udf(run, spark_type)

@@ -27,6 +27,7 @@ from pyspark.sql import types as T
 
 from ..operators.assemble import assemble_document
 from ..operators.recognize import recognize_span, recognize_text
+from ..schema import arrow_row_udf
 
 __all__ = ["synth_page", "expected_extraction", "pages_df", "tiny_corpus", "TINY_CLASSES"]
 
@@ -327,14 +328,15 @@ _PAGE_SCHEMA = T.StructType(
 
 
 def _gzip(html: bytes) -> bytes:
-    """gzip level-1 per payload (WARC-faithful storage form)."""
-    return gzip.compress(html, 1)
+    """gzip level-1 per payload (WARC-faithful storage form); ``mtime=0``
+    keeps the member header, and so the corpus, byte-reproducible."""
+    return gzip.compress(html, 1, mtime=0)
 
 
-_gzip_udf = F.udf(_gzip, T.BinaryType(), useArrow=True)
+_gzip_udf = arrow_row_udf(_gzip, T.BinaryType())
 
 #: row index → page row (the ground-truth keys are not in the schema)
-_page_udf = F.udf(synth_page, _PAGE_SCHEMA, useArrow=True)
+_page_udf = arrow_row_udf(synth_page, _PAGE_SCHEMA)
 
 
 def doc_blocks(doc_id: int, text: str) -> list[list[tuple[str, str]]]:
@@ -369,7 +371,7 @@ def page_from_doc(doc_id: int, text: str, lang: str) -> dict:
     }
 
 
-_doc_page_udf = F.udf(page_from_doc, _PAGE_SCHEMA, useArrow=True)
+_doc_page_udf = arrow_row_udf(page_from_doc, _PAGE_SCHEMA)
 
 
 def pages_from_documents(docs: DataFrame) -> DataFrame:

@@ -29,12 +29,11 @@ import re
 import zlib
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..schema import PAGES_SCHEMA
+from ..schema import arrow_row_udf
 
 __all__ = ["extract_pdf_text", "extract_pdf_udf", "build_pdf", "read_pages_pdf"]
 
@@ -213,7 +212,7 @@ def extract_pdf_text(data: bytes | None) -> str:
 
 
 #: pdf binary → extracted text (Arrow-batched row UDF)
-extract_pdf_udf = F.udf(extract_pdf_text, T.StringType(), useArrow=True)
+extract_pdf_udf = arrow_row_udf(extract_pdf_text, T.StringType())
 
 
 # --------------------------------------------------------------------------
@@ -275,21 +274,12 @@ def read_pages_pdf(spark: SparkSession, path_glob: str) -> DataFrame:
     """Scan ``*.pdf`` files into the authoritative pages shape: ``html``
     carries the raw PDF bytes, ``text`` the extracted reading-order text.
     One task per file (binaryFile); extraction is Arrow-batched."""
-    files = spark.read.format("binaryFile").load(path_glob)
-    cols = ["url", "warc_ts", "html", "text", "lang"]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                {
-                    "url": path,
-                    "warc_ts": None,
-                    "html": bytes(content),
-                    "text": extract_pdf_text(bytes(content)),
-                    "lang": None,
-                }
-                for path, content in zip(pdf["path"], pdf["content"])
-            ]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.select("path", "content").mapInPandas(run, schema=PAGES_SCHEMA)
+    return spark.read.format("binaryFile").load(path_glob).select(
+        # file scans report every column nullable; a path never is, and
+        # the coalesce restores PAGES_SCHEMA's non-null url
+        F.coalesce("path", F.lit("")).alias("url"),
+        F.lit(None).cast("timestamp").alias("warc_ts"),
+        F.col("content").alias("html"),
+        extract_pdf_udf("content").alias("text"),
+        F.lit(None).cast("string").alias("lang"),
+    )

@@ -71,11 +71,14 @@ def streaming_dedup_first_seen(
     emitted exactly once, in its arrival micro-batch.
 
     ``state_ttl_minutes`` bounds total state for unbounded url spaces
-    (10^12 distinct urls can't hold a row each forever): idle url state
-    expires via a processing-time timeout, so a url re-crawled after the
-    TTL is treated as first-seen again and RE-emitted — the standard
-    bounded-state dedup tradeoff (dedup window = TTL). Default ``None``
-    keeps exact forever-state semantics.
+    (10^12 distinct urls can't hold a row each forever). The TTL is in
+    event time, so ``availableNow`` runs terminate: a ``warc_ts`` watermark
+    lags the latest ``warc_ts`` by the TTL (older rows are dropped as late),
+    and url state expires once the watermark moves the TTL past its value
+    at the url's last sighting (0 in the first micro-batch). A url
+    re-crawled after that is RE-emitted — the standard bounded-state dedup
+    tradeoff (dedup window = TTL). Default ``None`` keeps exact
+    forever-state semantics, with no watermark.
     """
     import pandas as pd  # noqa: F401  (pandas batches cross the state op)
     from pyspark.sql.streaming.state import GroupStateTimeout
@@ -104,10 +107,14 @@ def streaming_dedup_first_seen(
                     first = batch_first
         state.update((n_prior + n_new,))
         if ttl_ms:
-            state.setTimeoutDuration(ttl_ms)
+            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + ttl_ms)
         if n_prior == 0 and first is not None:
             yield first[["url", "warc_ts", "text", "lang"]]
 
+    timeout = GroupStateTimeout.NoTimeout
+    if ttl_ms:
+        pages_stream = pages_stream.withWatermark("warc_ts", f"{state_ttl_minutes} minutes")
+        timeout = GroupStateTimeout.EventTimeTimeout
     return (
         pages_stream.select("url", "warc_ts", "text", "lang")
         .groupBy("url")
@@ -116,10 +123,6 @@ def streaming_dedup_first_seen(
             outputStructType=out_schema,
             stateStructType=state_schema,
             outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if ttl_ms
-                else GroupStateTimeout.NoTimeout
-            ),
+            timeoutConf=timeout,
         )
     )
