@@ -128,3 +128,45 @@ def test_streaming_dedup_ttl_wiring(spark, tmp_path):
     got = {r["url"]: r["warc_ts"] for r in spark.sql("SELECT * FROM ttl_out").collect()}
     assert set(got) == {"https://a.test/", "https://b.test/"}
     assert got["https://a.test/"].hour == 0  # min warc_ts within the batch
+
+
+def test_streaming_dedup_ttl_keeps_state_across_batches(spark, tmp_path):
+    """TTL across micro-batches (event time, TTL 60 min): a url re-crawled
+    within the TTL is not re-emitted and keeps its state through the final
+    no-data batch; a url unseen for longer than the TTL expires; a row more
+    than the TTL behind the latest ``warc_ts`` is dropped as late."""
+    import datetime
+
+    from texteller_spark.streaming.stream import streaming_dedup_first_seen
+
+    t0 = datetime.datetime(2024, 1, 1)
+    src = f"{tmp_path}/ttl_batches_src"
+
+    def write(batch, tag):
+        rows = [
+            (u, t0 + datetime.timedelta(minutes=m), b"<html></html>", f"{u} {tag}", "en")
+            for (u, m) in batch
+        ]
+        spark.createDataFrame(rows, PAGES_SCHEMA).coalesce(1).write.mode("append").parquet(src)
+
+    write([("a", 0), ("b", 0), ("e", -30)], "b1")
+    write([("c", 50)], "b2")
+    # a: re-crawl 55 min after its first sighting; d: 5 h behind the stream
+    write([("a", 55), ("d", -300)], "b3")
+    stream = spark.readStream.schema(PAGES_SCHEMA).option("maxFilesPerTrigger", 1).parquet(src)
+    q = (
+        streaming_dedup_first_seen(stream, state_ttl_minutes=60)
+        .writeStream.format("memory")
+        .queryName("ttl_batches_out")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    got = sorted((r["url"], r["text"]) for r in spark.table("ttl_batches_out").collect())
+    assert got == [("a", "a b1"), ("b", "b b1"), ("c", "c b2"), ("e", "e b1")]
+    ops = [p["stateOperators"][0] for p in q.recentProgress]
+    assert sum(op["numRowsDroppedByWatermark"] for op in ops) == 1  # d
+    # the latest warc_ts is +55 min: a (+55), b (0) and c (+50) are within
+    # the TTL of it, e (-30) is not
+    assert ops[-1]["numRowsTotal"] == 3

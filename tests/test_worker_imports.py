@@ -5,8 +5,7 @@ task; before Python 3.13 that re-read every cached zip archive's directory.
 The guard re-reads an archive only when its stat changed. These tests pin
 freshness (a rewritten archive is re-read and its new module imports) and
 the saving (an unchanged archive is read 0 times), as read counts. The last
-two pin that the extraction modules, and a worker that ran an extraction
-job, load no pandas.
+pins that the extraction modules import without pandas.
 """
 
 import importlib
@@ -241,83 +240,3 @@ def test_extraction_modules_import_no_pandas():
     )
     assert out.stdout.strip() == "False", out.stderr
 
-
-_PROBE = """
-import os
-import sys
-import traceback
-
-import pyarrow as pa
-import pyarrow.parquet as pq
-from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_type
-
-from texteller_spark import build_session, extract_pages
-from texteller_spark.schema import PAGES_SCHEMA
-from texteller_spark.sources.pages import tiny_corpus
-
-pages, out = sys.argv[1], sys.argv[2]
-
-
-# the probes are defined in __main__, so the worker unpickles them by value;
-# they return their input, so they convert no Python value to Arrow
-def hook(ids):
-    class FirstPandasImport:
-        def find_spec(self, name, path=None, target=None):
-            if name == "pandas" and not os.path.exists(f"{out}/stack"):
-                frames = traceback.extract_stack()[:-1]
-                with open(f"{out}/stack", "w") as f:
-                    f.write("\\n".join(f"{fr.filename}:{fr.name}" for fr in frames))
-            return None
-
-    with open(f"{out}/before", "w") as f:
-        f.write(f"{os.getpid()} {'pandas' in sys.modules}")
-    sys.meta_path.insert(0, FirstPandasImport())
-    return ids
-
-
-def after(ids):
-    with open(f"{out}/after", "w") as f:
-        f.write(f"{os.getpid()} {'texteller_spark' in sys.modules}")
-    return ids
-
-
-spark = build_session("worker-probe", cpus=1, shuffle_partitions=1)
-spark.range(1).select(F.arrow_udf(hook, "long")("id")).collect()
-os.makedirs(pages)
-rows = [{f: p[f] for f in PAGES_SCHEMA.names} for p in tiny_corpus()]
-arrow_schema = pa.schema(list(to_arrow_type(PAGES_SCHEMA)))
-pq.write_table(pa.Table.from_pylist(rows, schema=arrow_schema), f"{pages}/p.parquet")
-extract_pages(spark.read.parquet(pages)).write.format("noop").mode("overwrite").save()
-spark.range(1).select(F.arrow_udf(after, "long")("id")).collect()
-spark.stop()
-"""
-
-
-def test_extraction_worker_imports_pandas_only_through_pyarrow(tmp_path):
-    """A worker that runs an ``extract_pages`` job over parquet imports no
-    pandas to load the extraction UDFs. pyarrow (16) imports pandas lazily
-    at its first Python-to-Arrow conversion, so if pandas arrives at all,
-    it arrives there: inside the adapter's ``pa.array`` call.
-
-    A session of its own (local[1], one reused worker), in a subprocess: the
-    tests' shared session keeps workers that other tests' pandas UDFs have
-    already loaded pandas into."""
-    script = tmp_path / "probe.py"
-    script.write_text(_PROBE)
-    env = {**os.environ, "PYTHONPATH": _REPO}
-    env.pop("SPARK_GRAFT_MASTER", None)
-    run = subprocess.run(
-        [sys.executable, str(script), str(tmp_path / "pages"), str(tmp_path)],
-        cwd=_REPO, env=env, capture_output=True, text=True, timeout=300,
-    )
-    assert run.returncode == 0, run.stderr[-3000:]
-    pid, had_pandas = (tmp_path / "before").read_text().split()
-    assert had_pandas == "False"  # a fresh worker
-    assert (tmp_path / "after").read_text().split() == [pid, "True"]  # same worker ran it
-    stack_file = tmp_path / "stack"
-    if stack_file.exists():
-        frames = stack_file.read_text().splitlines()
-        ours = [fr for fr in frames if "texteller_spark" in fr]
-        assert not [fr for fr in ours if fr.endswith(":<module>")], frames
-        assert ours and ours[-1].endswith("schema.py:run"), frames

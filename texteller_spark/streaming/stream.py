@@ -65,7 +65,7 @@ def streaming_dedup_first_seen(
     the url FIRST ARRIVES (arrival-order semantics: append mode cannot
     retract, so an out-of-order earlier crawl delivered in a *later* batch
     only bumps the state counter — it does not replace the emitted row).
-    One tiny ``(n_seen,)`` state row per url lives in the state store
+    One tiny ``(n_seen, last_ts_ms)`` state row per url lives in the state store
     (RocksDB-backed and partitioned by key at cluster scale, so state size
     scales with distinct urls per executor, not stream length). A url is
     emitted exactly once, in its arrival micro-batch.
@@ -73,55 +73,57 @@ def streaming_dedup_first_seen(
     ``state_ttl_minutes`` bounds total state for unbounded url spaces
     (10^12 distinct urls can't hold a row each forever). The TTL is in
     event time, so ``availableNow`` runs terminate: a ``warc_ts`` watermark
-    lags the latest ``warc_ts`` by the TTL (older rows are dropped as late),
-    and url state expires once the watermark moves the TTL past its value
-    at the url's last sighting (0 in the first micro-batch). A url
-    re-crawled after that is RE-emitted — the standard bounded-state dedup
-    tradeoff (dedup window = TTL). Default ``None`` keeps exact
-    forever-state semantics, with no watermark.
+    lags the stream's latest ``warc_ts`` by the TTL, and each url's state
+    keeps its own latest ``warc_ts`` and expires once the watermark passes
+    it, i.e. once the url is unseen for a TTL of event time. Rows behind the
+    watermark fall outside that dedup window and are dropped as late
+    (counted in the query progress as ``numRowsDroppedByWatermark``), even
+    a url's first sighting: Spark filters the input of an event-time
+    timeout by its watermark. A url re-crawled after its state expired is
+    RE-emitted — the standard bounded-state dedup tradeoff (dedup window =
+    TTL). Default ``None`` keeps exact forever-state semantics, with no
+    watermark and no row dropped.
     """
     import pandas as pd  # noqa: F401  (pandas batches cross the state op)
     from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        LongType,
-        StructField,
-        StructType,
-    )
 
     out_schema = pages_stream.select("url", "warc_ts", "text", "lang").schema
-    state_schema = StructType([StructField("n_seen", LongType())])
-    ttl_ms = state_ttl_minutes * 60_000 if state_ttl_minutes else None
 
     def first_seen(key, pdfs, state):
         if state.hasTimedOut:
             state.remove()  # idle url expired — next sighting is first-seen again
             return
-        n_prior = state.get[0] if state.exists else 0
+        n_prior, last_ts_ms = state.get if state.exists else (0, 0)
         first = None
         n_new = 0
         for pdf in pdfs:
             n_new += len(pdf)
             if len(pdf):
+                last_ts_ms = max(last_ts_ms, int(pdf["ts_ms"].fillna(0).max()))
                 batch_first = pdf.sort_values("warc_ts").iloc[[0]]
                 if first is None or batch_first.iloc[0]["warc_ts"] < first.iloc[0]["warc_ts"]:
                     first = batch_first
-        state.update((n_prior + n_new,))
-        if ttl_ms:
-            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + ttl_ms)
+        state.update((n_prior + n_new, last_ts_ms))
+        if state_ttl_minutes:
+            # a null warc_ts has no place on the event clock: it expires with
+            # the next watermark advance (a timeout must be > 0 and >= it)
+            state.setTimeoutTimestamp(max(last_ts_ms, state.getCurrentWatermarkMs(), 1))
         if n_prior == 0 and first is not None:
             yield first[["url", "warc_ts", "text", "lang"]]
 
     timeout = GroupStateTimeout.NoTimeout
-    if ttl_ms:
+    if state_ttl_minutes:
         pages_stream = pages_stream.withWatermark("warc_ts", f"{state_ttl_minutes} minutes")
         timeout = GroupStateTimeout.EventTimeTimeout
     return (
-        pages_stream.select("url", "warc_ts", "text", "lang")
+        pages_stream.select(
+            "url", "warc_ts", "text", "lang", F.unix_millis("warc_ts").alias("ts_ms")
+        )
         .groupBy("url")
         .applyInPandasWithState(
             first_seen,
             outputStructType=out_schema,
-            stateStructType=state_schema,
+            stateStructType="n_seen long, last_ts_ms long",
             outputMode="append",
             timeoutConf=timeout,
         )
