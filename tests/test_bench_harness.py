@@ -31,7 +31,6 @@ KNOBS = {
     "SPARK_GRAFT_SF_DIR",
     "SPARK_GRAFT_SKEW_PARTS",
     "SPARK_GRAFT_TABLE_FORMAT",
-    "TEXTELLER_HASH_CACHE_SIZE",
 }
 
 

@@ -587,6 +587,22 @@ def test_brute_force_vs_lsh_recall(spark):
     assert recall >= 0.5
 
 
+@pytest.mark.parametrize("rows", [
+    [[1.0, 2.0], [3.0], [4.0, 5.0, 6.0]],  # 6 values: would fit (3, 2)
+    [[1.0, 2.0], None, [4.0, 5.0]],
+])
+def test_vector_kernel_rejects_ragged_or_null_rows(spark, rows):
+    """A vector kernel sees a batch as one (n, d) matrix; a short, long or
+    null row fails the task instead of being reshaped across rows."""
+    from texteller_spark.operators.similarity import with_lsh_bucket
+
+    df = spark.createDataFrame(
+        list(enumerate(rows)), "vec_id long, embedding array<double>"
+    ).coalesce(1)  # one batch
+    with pytest.raises(Exception, match="same shape|equal length"):
+        with_lsh_bucket(df, dim=2, bits=4).collect()
+
+
 def test_lsh_near_dup_recall_and_no_false_positives(spark):
     """Planted high-cosine near-dups: the banded-LSH path must (a) emit only
     pairs the exact all-pairs baseline emits (the in-bucket predicate is the

@@ -286,16 +286,27 @@ def test_span_table_is_one_span_udf_over_the_scan(spark):
 
 def test_no_row_at_a_time_python_in_any_catalog_plan(spark, Q):
     """Global hygiene: NO catalog query may plan a BatchEvalPython node
-    (row-at-a-time Python UDF — the 10-100x slow path). Arrow-batched
-    nodes (ArrowEvalPython / mapInPandas / FlatMapGroupsInPandas) are the
-    only sanctioned Python surfaces. Streaming entries execute eagerly on
-    build, so they are exercised by their oracle tests instead."""
+    (row-at-a-time Python UDF — the 10-100x slow path), and every Python
+    node takes and returns Arrow: ArrowEvalPython of an ``arrow_udf``,
+    MapInArrow or FlatMapGroupsInArrow. No pandas-backed node
+    (MapInPandas, FlatMapGroupsInPandas) and no ArrowEvalPython of a
+    pandas eval type (``pandas_udf``, ``F.udf(useArrow=True)``). Streaming
+    entries execute eagerly on build, so they are exercised by their
+    oracle tests instead."""
+    import re
+
+    from pyspark.util import PythonEvalType
+
+    arrow_eval = {PythonEvalType.SQL_SCALAR_ARROW_UDF, PythonEvalType.SQL_SCALAR_ARROW_ITER_UDF}
     skip = {"stream_span_rates", "stream_first_seen"}
     for name, fn in Q.QUERIES.items():
         if name in skip:
             continue
         p = plan_of(fn(spark, SF))
         assert "BatchEvalPython" not in p, name
+        assert "MapInPandas" not in p and "FlatMapGroupsInPandas" not in p, name
+        evals = re.findall(r"ArrowEvalPython \[.*\], (\d+)$", p, re.M)
+        assert {int(t) for t in evals} <= arrow_eval, (name, evals)
 
 
 def test_training_prep_has_no_join_and_no_broadcast(spark, Q):
@@ -622,6 +633,6 @@ def test_semantic_dedup_arrow_is_one_shuffle(spark):
     )
     p = plan_of(semantic_dedup(df, seed_centroids(df, 4), engine="arrow"))
     assert p.count("Exchange hashpartitioning") == 1
-    assert "FlatMapGroupsInPandas" in p
+    assert "FlatMapGroupsInArrow" in p
     assert "BatchEvalPython" not in p
     assert "CartesianProduct" not in p

@@ -5,7 +5,7 @@ task; before Python 3.13 that re-read every cached zip archive's directory.
 The guard re-reads an archive only when its stat changed. These tests pin
 freshness (a rewritten archive is re-read and its new module imports) and
 the saving (an unchanged archive is read 0 times), as read counts. The last
-pins that the extraction modules import without pandas.
+pins that the package's modules import without pandas.
 """
 
 import importlib
@@ -224,19 +224,18 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_extraction_modules_import_no_pandas():
-    """The package root and every module that declares an extraction UDF
-    import without pandas: a worker that unpickles one of those UDFs imports
-    its module, and through it the package root."""
-    mods = [
-        "texteller_spark",
-        "texteller_spark.plans.pipeline",
-        "texteller_spark.sources.pages",
-        "texteller_spark.sources.pdf",
-        "texteller_spark.operators.normalize",
-    ]
-    code = f"import sys\nfor m in {mods!r}: __import__(m)\nprint('pandas' in sys.modules)"
+    """Every module of the package imports without pandas: a worker that
+    unpickles any of its UDFs imports that module and the package root.
+    Only the streaming state operator imports pandas, inside its builder."""
+    code = (
+        "import pkgutil, sys, texteller_spark as t\n"
+        "mods = [m.name for m in pkgutil.walk_packages(t.__path__, t.__name__ + '.')]\n"
+        "for m in mods: __import__(m)\n"
+        "print(' '.join(mods), 'pandas' in sys.modules)"
+    )
     out = subprocess.run(
         [sys.executable, "-c", code], cwd=_REPO, capture_output=True, text=True, check=True
     )
-    assert out.stdout.strip() == "False", out.stderr
-
+    *mods, pandas_loaded = out.stdout.split()
+    assert {"texteller_spark.operators.dedup", "texteller_spark.streaming.stream"} <= set(mods)
+    assert pandas_loaded == "False", out.stderr

@@ -50,14 +50,13 @@ extra ``aggregate``); the k=8 catalog entry documents the small-k shape.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.functions import pandas_udf
+
+from ..schema import arrow_matrix_udf, vector_matrix
 
 __all__ = ["seed_centroids", "assign_clusters", "kmeans_fit", "semantic_dedup"]
 
@@ -137,14 +136,11 @@ def _arrow_assign_udf(cids: np.ndarray, cents: np.ndarray, round_digits: int):
     pairwise summation difference)."""
     c_sq = (cents * cents).sum(axis=1)
 
-    @pandas_udf(T.LongType())
-    def assign(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for vecs in it:
-            mat = np.stack(vecs.to_numpy()).astype(np.float64)
-            d2 = (mat * mat).sum(axis=1)[:, None] - 2.0 * (mat @ cents.T) + c_sq
-            yield pd.Series(cids[np.argmin(np.round(d2, round_digits), axis=1)])
+    def assign(mat: np.ndarray) -> np.ndarray:
+        d2 = (mat * mat).sum(axis=1)[:, None] - 2.0 * (mat @ cents.T) + c_sq
+        return cids[np.argmin(np.round(d2, round_digits), axis=1)]
 
-    return assign
+    return arrow_matrix_udf(assign, T.LongType())
 
 
 def assign_clusters(
@@ -296,7 +292,7 @@ def semantic_dedup(
     ``engine='arrow'`` (default; the corpus-scale path) assigns via the
     BLAS kernel
     and resolves each cluster's pair decisions in ONE grouped Arrow batch
-    (``applyInPandas`` over ``cid``): a normalized matmul replaces the
+    (``applyInArrow`` over ``cid``): a normalized matmul replaces the
     interpreted per-pair higher-order cosine — same rounded-cosine
     admission, same keep-first-by-id contract (parity pinned in tests).
     One shuffle total (vectors move once, keyed by cid). The similarity
@@ -314,10 +310,10 @@ def semantic_dedup(
         thr = float(threshold)
         block = sim_block_cols
 
-        def dedup_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            ids = pdf["id"].to_numpy()
+        def dedup_group(group: pa.Table) -> pa.Table:
+            ids = group.column("id").to_numpy()
             order = np.argsort(ids)  # keep-first is defined by id order
-            x = np.stack(pdf["_v"].to_numpy())[order].astype(np.float64)
+            x = vector_matrix(group.column("_v").combine_chunks())[order]
             nrm = np.sqrt((x * x).sum(axis=1))
             keep = np.ones(len(ids), dtype=bool)
             nz = nrm > 0
@@ -335,11 +331,10 @@ def semantic_dedup(
                 kz = keep[nz]
                 kz[dup] = False
                 keep[nz] = kz
-            return pd.DataFrame(
-                {"id": ids[order], "cid": pdf["cid"].to_numpy()[order], "keep": keep}
-            )
+            cids = group.column("cid").to_numpy()
+            return pa.table({"id": ids[order], "cid": cids[order], "keep": keep})
 
-        return assigned.groupBy("cid").applyInPandas(
+        return assigned.groupBy("cid").applyInArrow(
             dedup_group, schema="id long, cid long, keep boolean"
         )
 

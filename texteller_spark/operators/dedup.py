@@ -5,8 +5,8 @@ Design for 10^12 rows:
 
 * **exact** — hash-groupBy on a content digest (one shuffle on a short key,
   never on the full text).
-* **MinHash + LSH** — per-doc signatures computed in one Arrow-batched
-  numpy kernel (no per-row Python), then banded: ``explode(bands)`` →
+* **MinHash + LSH** — per-doc signatures computed by one Arrow row UDF
+  (a doc's 64 hashes in one numpy step), then banded: ``explode(bands)`` →
   shuffle on ``(band_id, band_hash)`` → same-bucket pairs. Candidate
   verification joins signatures back, all JVM-side. The only quadratic work
   happens inside buckets, whose size LSH bounds with high probability.
@@ -29,17 +29,15 @@ from __future__ import annotations
 
 import contextlib
 import hashlib
-import os
 import threading
 from functools import lru_cache
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.functions import pandas_udf
+
+from ..schema import arrow_row_udf
 
 __all__ = [
     "exact_duplicate_groups",
@@ -59,11 +57,9 @@ __all__ = [
 ]
 
 #: per-Python-worker string-hash memo size (entries, not bytes). Worst-case
-#: resident cost per worker ≈ entries × (key chars + ~100B overhead) — the
-#: 2^20 default is a few hundred MB at adversarial vocab, fine at 128 GiB
-#: hosts; set TEXTELLER_HASH_CACHE_SIZE lower for memory-tight executors
-#: (0 disables memoization entirely).
-_HASH_CACHE_SIZE = int(os.environ.get("TEXTELLER_HASH_CACHE_SIZE", str(1 << 20)))
+#: resident cost per worker ≈ entries × (key chars + ~100B overhead) — a few
+#: hundred MB at adversarial vocab, fine at 128 GiB hosts.
+_HASH_CACHE_SIZE = 1 << 20
 
 #: live persisted signature handles (see _materialize) — callers own the
 #: lifetime: call release_caches() once the pair DataFrames are consumed,
@@ -179,11 +175,11 @@ _A = _rng.randint(1, 1 << 31, size=_N_HASHES, dtype=np.int64)
 _B = _rng.randint(0, 1 << 31, size=_N_HASHES, dtype=np.int64)
 
 
-@lru_cache(maxsize=_HASH_CACHE_SIZE)  # maxsize=0 disables memoization
+@lru_cache(maxsize=_HASH_CACHE_SIZE)
 def _hash32(s: str) -> int:
     """32-bit deterministic string hash = first 8 hex chars of md5 —
     portable across engines (SQL: CAST('0x'||substr(md5(s),1,8) AS BIGINT)).
-    Memoized per worker (size: TEXTELLER_HASH_CACHE_SIZE)."""
+    Memoized per worker."""
     return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
 
 
@@ -246,12 +242,11 @@ def _widen(df: DataFrame) -> DataFrame:
 
 
 def with_minhash(df: DataFrame, text_col: str = "text", shingle_k: int = 3) -> DataFrame:
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def sig_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for texts in it:
-            yield texts.map(lambda t: _minhash_sig(t or "", shingle_k))
+    def sig_udf(t: str | None) -> list[int]:
+        return _minhash_sig(t or "", shingle_k)
 
-    return _widen(df).withColumn("minhash", sig_udf(F.col(text_col)))
+    udf = arrow_row_udf(sig_udf, T.ArrayType(T.LongType()))
+    return _widen(df).withColumn("minhash", udf(F.col(text_col)))
 
 
 def _band_explode(
@@ -505,11 +500,10 @@ def incremental_dedup_decisions(
     )
 
 
-@lru_cache(maxsize=_HASH_CACHE_SIZE)  # maxsize=0 disables memoization
+@lru_cache(maxsize=_HASH_CACHE_SIZE)
 def _tok_hash64(t: str) -> int:
     """64-bit token hash from two md5 32-bit prefixes (lo = hex[0:8],
-    hi = hex[8:16]) — bit-for-bit recomputable in SQL. Memoized per worker
-    (size: TEXTELLER_HASH_CACHE_SIZE)."""
+    hi = hex[8:16]) — bit-for-bit recomputable in SQL. Memoized per worker."""
     h = hashlib.md5(t.encode()).hexdigest()
     return int(h[:8], 16) | (int(h[8:16], 16) << 32)
 
@@ -532,12 +526,11 @@ def _simhash64(text: str) -> int:
 
 
 def with_simhash(df: DataFrame, text_col: str = "text") -> DataFrame:
-    @pandas_udf(T.LongType())
-    def sim_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for texts in it:
-            yield texts.map(lambda t: _simhash64(t or ""))
+    def sim_udf(t: str | None) -> int:
+        return _simhash64(t or "")
 
-    return _widen(df).withColumn("simhash", sim_udf(F.col(text_col)))
+    udf = arrow_row_udf(sim_udf, T.LongType())
+    return _widen(df).withColumn("simhash", udf(F.col(text_col)))
 
 
 def simhash_near_pairs(
@@ -790,35 +783,27 @@ def _window_hash_udf(window: int):
     base = 1099511628211  # FNV-ish odd constant
     base_inv = pow(base, -1, 1 << 64)
 
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def win_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for texts in it:
-            out = []
-            for t in texts:
-                toks = (t or "").split()
-                n = len(toks)
-                if n < window:
-                    out.append([])
-                    continue
-                th = np.fromiter(
-                    (_tok_hash64(x) for x in toks), dtype=np.uint64, count=n
-                )
-                inv = np.full(n, base_inv, dtype=np.uint64)
-                inv[0] = 1
-                inv = np.cumprod(inv)  # base^-i (mod 2^64)
-                pref = np.cumsum(th * inv)  # P[i] = sum_j<=i th[j]*base^-j
-                bp = np.full(n, base, dtype=np.uint64)
-                bp[0] = 1
-                bp = np.cumprod(bp)  # base^i (mod 2^64)
-                # H[i] = (P[i+w-1] - P[i-1]) * base^(i+w-1)
-                #      = sum_{j<w} th[i+j] * base^(w-1-j)
-                d = pref[window - 1 :] - np.concatenate(
-                    (np.zeros(1, dtype=np.uint64), pref[: n - window])
-                )
-                out.append((d * bp[window - 1 :]).view(np.int64).tolist())
-            yield pd.Series(out)
+    def win_udf(t: str | None) -> list[int]:
+        toks = (t or "").split()
+        n = len(toks)
+        if n < window:
+            return []
+        th = np.fromiter((_tok_hash64(x) for x in toks), dtype=np.uint64, count=n)
+        inv = np.full(n, base_inv, dtype=np.uint64)
+        inv[0] = 1
+        inv = np.cumprod(inv)  # base^-i (mod 2^64)
+        pref = np.cumsum(th * inv)  # P[i] = sum_j<=i th[j]*base^-j
+        bp = np.full(n, base, dtype=np.uint64)
+        bp[0] = 1
+        bp = np.cumprod(bp)  # base^i (mod 2^64)
+        # H[i] = (P[i+w-1] - P[i-1]) * base^(i+w-1)
+        #      = sum_{j<w} th[i+j] * base^(w-1-j)
+        d = pref[window - 1 :] - np.concatenate(
+            (np.zeros(1, dtype=np.uint64), pref[: n - window])
+        )
+        return (d * bp[window - 1 :]).view(np.int64).tolist()
 
-    return win_udf
+    return arrow_row_udf(win_udf, T.ArrayType(T.LongType()))
 
 
 def remove_repeated_substrings(

@@ -1,12 +1,13 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary``
-columns with typed metadata, processed via Arrow-batched ``mapInPandas``.
+columns with typed metadata, processed by per-item Arrow row UDFs
+(``schema.arrow_row_udf``).
 
 The actual codec work (JPEG decode, audio resample, video frame extraction)
 needs native libraries that are NOT in this container — those kernels are
 STUBBED behind ``_decode_stub`` (a deterministic fake so plumbing is
 testable end-to-end) and raise ``NotImplementedError`` when
-``require_real=True``.  Everything Spark-side is real: schemas, batch
-iteration, partition behavior, and output shapes are exactly what a
+``require_real=True``.  Everything Spark-side is real: schemas, Arrow
+batches, partition behavior, and output shapes are exactly what a
 production decode stage uses — swap the stub body for PIL/ffmpeg on a
 cluster with the libs installed.
 """
@@ -14,13 +15,13 @@ cluster with the libs installed.
 from __future__ import annotations
 
 import io
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..schema import arrow_row_udf
 
 try:  # real image codec, used by the require_real path when present
     from PIL import Image as _PILImage
@@ -50,21 +51,12 @@ MEDIA_SCHEMA = T.StructType(
     ]
 )
 
+#: what decode_features adds to (media_id, kind)
 _FEATURE_SCHEMA = T.StructType(
     [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),
         T.StructField("n_bytes", T.LongType(), False),
         T.StructField("byte_entropy", T.DoubleType(), False),
         T.StructField("feature", T.ArrayType(T.FloatType()), False),
-    ]
-)
-
-_FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("frame", T.BinaryType(), False),
     ]
 )
 
@@ -114,33 +106,19 @@ def _decode_stub(payload: bytes, kind: str, require_real: bool) -> np.ndarray:
 
 
 def decode_features(df: DataFrame, require_real: bool = False) -> DataFrame:
-    """media table → per-item feature vectors, Arrow-batched (mapInPandas).
+    """media table → ``(media_id, kind, n_bytes, byte_entropy, feature)``:
+    one output row per input row, fixed feature dim, decoded per item by
+    an Arrow row UDF."""
 
-    The batch shape is the production contract: iterator of pandas frames,
-    one output row per input row, fixed feature dim.
-    """
+    def features(payload: bytes | None, kind: str) -> tuple:
+        f = _decode_stub(payload, kind, require_real)
+        nz = f[f > 0].astype(np.float64)
+        return len(payload or b""), float(-(nz * np.log2(nz)).sum()), f.tolist()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                _decode_stub(p, k, require_real)
-                for p, k in zip(pdf["payload"], pdf["kind"])
-            ]
-            ent = [
-                float(-(f[f > 0] * np.log2(f[f > 0])).sum()) for f in
-                (np.asarray(x, dtype=np.float64) for x in feats)
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": [len(p or b"") for p in pdf["payload"]],
-                    "byte_entropy": ent,
-                    "feature": feats,
-                }
-            )
-
-    return df.mapInPandas(run, schema=_FEATURE_SCHEMA)
+    udf = arrow_row_udf(features, _FEATURE_SCHEMA)
+    return df.select(
+        "media_id", "kind", udf("payload", "kind").alias("_f")
+    ).select("media_id", "kind", "_f.*")
 
 
 def _resize_stub(payload: bytes, w: int, h: int, require_real: bool) -> bytes:
@@ -171,41 +149,40 @@ def resize_media(
     df: DataFrame, width: int = 448, height: int = 448, require_real: bool = False
 ) -> DataFrame:
     """media table → payloads resized to fixed target dims (the analog of
-    the reference's 448×448 inference transform), Arrow-batched
-    ``mapInPandas``; ``width``/``height`` metadata updated to the target.
-    Only ``kind='image'`` rows are transformed; others pass through
-    untouched (same schema in and out, so stages compose)."""
+    the reference's 448×448 inference transform) by an Arrow row UDF;
+    ``width``/``height`` metadata updated to the target. Only
+    ``kind='image'`` rows are transformed; others pass through untouched
+    (same schema in and out, so stages compose)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            is_img = out["kind"] == "image"
-            out.loc[is_img, "payload"] = [
-                _resize_stub(p, width, height, require_real)
-                for p in out.loc[is_img, "payload"]
-            ]
-            out.loc[is_img, "width"] = width
-            out.loc[is_img, "height"] = height
-            out["width"] = out["width"].astype("Int32")
-            out["height"] = out["height"].astype("Int32")
-            yield out
+    def resize(payload: bytes | None, kind: str) -> bytes | None:
+        if kind != "image":
+            return payload
+        return _resize_stub(payload, width, height, require_real)
 
-    return df.mapInPandas(run, schema=MEDIA_SCHEMA)
+    udf = arrow_row_udf(resize, T.BinaryType())
+    img = F.col("kind") == "image"
+    return df.select(
+        "media_id",
+        "kind",
+        udf("payload", "kind").alias("payload"),
+        "mime",
+        F.when(img, F.lit(width)).otherwise(F.col("width")).alias("width"),
+        F.when(img, F.lit(height)).otherwise(F.col("height")).alias("height"),
+        "duration_ms",
+    )
 
 
 def sample_frames(df: DataFrame, every_bytes: int = 256, max_frames: int = 8) -> DataFrame:
-    """Video frame-sampling analog: emit ≤ ``max_frames`` payload slices per
-    item (1:N mapInPandas fan-out — the UDTF-shaped batch contract)."""
+    """Video frame-sampling analog: ``(media_id, frame_idx, frame)`` with
+    ≤ ``max_frames`` payload slices per item (1:N — an Arrow row UDF's
+    frame list, exploded)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "frame_idx": [], "frame": []}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                p = payload or b""
-                for i in range(min(max_frames, max(1, len(p) // every_bytes))):
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(i)
-                    out["frame"].append(p[i * every_bytes : (i + 1) * every_bytes])
-            yield pd.DataFrame(out)
+    def frames(payload: bytes | None) -> list[bytes]:
+        p = payload or b""
+        n = min(max_frames, max(1, len(p) // every_bytes))
+        return [p[i * every_bytes : (i + 1) * every_bytes] for i in range(n)]
 
-    return df.filter(F.col("kind") == "video").mapInPandas(run, schema=_FRAME_SCHEMA)
+    udf = arrow_row_udf(frames, T.ArrayType(T.BinaryType()))
+    return df.filter(F.col("kind") == "video").select(
+        "media_id", F.posexplode(udf("payload")).alias("frame_idx", "frame")
+    )

@@ -16,15 +16,15 @@ Two paths, mirroring how a 100 TB training-data pipeline actually serves ANN:
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.window import Window
+
+from ..schema import arrow_matrix_udf
 
 __all__ = [
     "cosine_to_query",
@@ -143,14 +143,11 @@ def with_lsh_bucket(df: DataFrame, dim: int, bits: int = 12, vec_col: str = "emb
     planes = _hyperplanes(dim, bits)
     weights = (1 << np.arange(bits, dtype=np.int64))
 
-    @pandas_udf(T.LongType())
-    def bucket_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for vecs in it:
-            mat = np.stack(vecs.to_numpy()).astype(np.float64)  # (n, dim)
-            signs = (mat @ planes.T) > 0  # (n, bits)
-            yield pd.Series((signs @ weights).astype(np.int64))
+    def bucket_udf(mat: np.ndarray) -> np.ndarray:
+        return ((mat @ planes.T) > 0) @ weights  # (n, dim) -> (n,)
 
-    return df.withColumn("bucket", bucket_udf(F.col(vec_col)))
+    udf = arrow_matrix_udf(bucket_udf, T.LongType())
+    return df.withColumn("bucket", udf(F.col(vec_col)))
 
 
 def with_lsh_bands(
@@ -163,15 +160,12 @@ def with_lsh_bands(
     r = bits // bands
     weights = 1 << np.arange(r, dtype=np.int64)
 
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def bands_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for vecs in it:
-            mat = np.stack(vecs.to_numpy()).astype(np.float64)  # (n, dim)
-            signs = (mat @ planes.T) > 0  # (n, bits)
-            vals = signs.reshape(len(mat), bands, r) @ weights  # (n, bands)
-            yield pd.Series(list(vals.astype(np.int64)))
+    def bands_udf(mat: np.ndarray) -> np.ndarray:
+        signs = (mat @ planes.T) > 0  # (n, bits)
+        return signs.reshape(len(mat), bands, r) @ weights  # (n, bands)
 
-    return df.withColumn("bands", bands_udf(F.col(vec_col)))
+    udf = arrow_matrix_udf(bands_udf, T.ArrayType(T.LongType()))
+    return df.withColumn("bands", udf(F.col(vec_col)))
 
 
 def lsh_near_dup_pairs(
@@ -290,26 +284,17 @@ def _band_probe_keys_udf(dim: int, bits: int, bands: int, probes: int):
     weights = 1 << np.arange(r, dtype=np.int64)
     band_base = (np.arange(bands, dtype=np.int64) << r)
 
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def keys_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for vecs in it:
-            mat = np.stack(vecs.to_numpy()).astype(np.float64)  # (n, dim)
-            proj = mat @ planes.T  # (n, bits)
-            vals = (proj > 0).reshape(len(mat), bands, r) @ weights  # (n, bands)
-            base = vals.astype(np.int64) + band_base[None, :]
-            if not probes:
-                yield pd.Series(list(base))
-                continue
-            flip = np.argsort(np.abs(proj), axis=1)[:, :probes]  # least-confident
-            out = []
-            for row in range(len(mat)):
-                keys = base[row].tolist()
-                for p in flip[row]:
-                    keys.append(int(base[row, int(p) // r]) ^ (1 << (int(p) % r)))
-                out.append(keys)
-            yield pd.Series(out)
+    def keys_udf(mat: np.ndarray) -> np.ndarray:
+        proj = mat @ planes.T  # (n, bits)
+        vals = (proj > 0).reshape(len(mat), bands, r) @ weights  # (n, bands)
+        base = vals + band_base[None, :]
+        if not probes:
+            return base
+        flip = np.argsort(np.abs(proj), axis=1)[:, :probes]  # least-confident
+        flipped = np.take_along_axis(base, flip // r, axis=1) ^ (1 << (flip % r))
+        return np.concatenate((base, flipped), axis=1)  # (n, bands + probes)
 
-    return keys_udf
+    return arrow_matrix_udf(keys_udf, T.ArrayType(T.LongType()))
 
 
 def _with_norm(df: DataFrame, id_col: str, vec_col: str, out_id: str) -> DataFrame:
@@ -451,15 +436,12 @@ def _arrow_probe_udf(cids: "np.ndarray", cents: "np.ndarray", nprobe: int,
     c_sq = (cents * cents).sum(axis=1)
     n_take = min(nprobe, len(cids))
 
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for vecs in it:
-            mat = np.stack(vecs.to_numpy()).astype(np.float64)
-            d2 = (mat * mat).sum(axis=1)[:, None] - 2.0 * (mat @ cents.T) + c_sq
-            order = np.argsort(np.round(d2, round_digits), axis=1, kind="stable")
-            yield pd.Series(list(cids[order[:, :n_take]]))
+    def probe(mat: np.ndarray) -> np.ndarray:
+        d2 = (mat * mat).sum(axis=1)[:, None] - 2.0 * (mat @ cents.T) + c_sq
+        order = np.argsort(np.round(d2, round_digits), axis=1, kind="stable")
+        return cids[order[:, :n_take]]
 
-    return probe
+    return arrow_matrix_udf(probe, T.ArrayType(T.LongType()))
 
 
 def ivf_ann_join(

@@ -14,6 +14,7 @@ plus ``text`` for OCR-text-block analogs.
 
 from __future__ import annotations
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -64,6 +65,11 @@ EXTRACTED_SCHEMA = T.StructType(
 )
 
 
+# Every Python stage in the package takes and returns Arrow: row kernels go
+# through arrow_row_udf, numpy vector kernels through arrow_matrix_udf. Only
+# the streaming state operator (streaming/stream.py) uses pandas.
+
+
 def arrow_row_udf(kernel, spark_type: T.DataType):
     """A pure row kernel as a Spark ``arrow_udf`` (``ArrowEvalPython``,
     evalType ``SQL_SCALAR_ARROW_UDF``): the kernel runs once per row of each
@@ -75,6 +81,37 @@ def arrow_row_udf(kernel, spark_type: T.DataType):
     def run(*cols):
         rows = zip(*(c.to_pylist() for c in cols))
         return pa.array([kernel(*row) for row in rows], type=arrow_type)
+
+    run.__name__ = kernel.__name__  # the UDF's name in plans and the UI
+    return F.arrow_udf(run, spark_type)
+
+
+def vector_matrix(vecs: pa.Array) -> np.ndarray:
+    """An ``array<double|float>`` Arrow column as one ``(n, d)`` float64
+    matrix. A null or ragged row raises: reshaping the flat values would
+    otherwise spread a short row's tail over its neighbours."""
+    lens = np.diff(vecs.offsets.to_numpy())
+    d = int(lens[0]) if len(lens) else 0
+    if vecs.null_count or (lens != d).any():
+        raise ValueError("vector column needs non-null rows of equal length")
+    flat = vecs.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+    return flat.reshape(len(vecs), d)
+
+
+def arrow_matrix_udf(kernel, spark_type: T.DataType):
+    """A numpy kernel over a vector column as a Spark ``arrow_udf``: each
+    Arrow batch arrives as one :func:`vector_matrix`, and the kernel's
+    ``(n,)`` result becomes a column of ``spark_type``, its ``(n, k)``
+    result an ``array`` column of ``k`` values per row."""
+    arrow_type = to_arrow_type(spark_type)
+
+    def run(vecs):
+        out = np.asarray(kernel(vector_matrix(vecs)))
+        if out.ndim == 1:
+            return pa.array(out, type=arrow_type)
+        offsets = np.arange(len(out) + 1, dtype=np.int32) * out.shape[1]
+        flat = pa.array(out.ravel(), type=arrow_type.value_type)
+        return pa.ListArray.from_arrays(pa.array(offsets), flat, type=arrow_type)
 
     run.__name__ = kernel.__name__  # the UDF's name in plans and the UI
     return F.arrow_udf(run, spark_type)

@@ -13,7 +13,7 @@ follows the HTTP header block.
 
 Spark shape: ``binaryFile`` scan (one row per shard; Common-Crawl shards
 are ~1 GB, the natural distribution unit — file-granular parallelism, no
-shuffle) → ``mapInPandas`` record parser → pages rows. Malformed records
+shuffle) → ``mapInArrow`` record parser → pages rows. Malformed records
 degrade row-wise, never task-wise: a corrupt gzip member is skipped by
 resyncing to the next gzip magic, truncated tails are dropped, and all
 records after a corruption are still yielded — real crawl archives contain
@@ -44,8 +44,9 @@ import io
 import zlib
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..schema import PAGES_SCHEMA
 
@@ -58,7 +59,7 @@ __all__ = [
     "read_text_wet",
 ]
 
-#: rows per emitted Arrow batch in read_pages_warc — bounds task-resident
+#: rows per emitted Arrow batch of the WARC/WET scan — bounds task-resident
 #: output memory at (batch × avg record) instead of (whole shard's records)
 _OUT_BATCH_ROWS = 2048
 
@@ -244,36 +245,54 @@ def parse_warc(data: bytes) -> list[dict]:
     return list(iter_warc_records(data))
 
 
+def _scan_records(
+    spark: SparkSession, path_glob: str, record_type: str, column: str
+) -> DataFrame:
+    """Shards → pages rows: each ``record_type`` record's payload fills
+    ``column`` (``html`` as bytes, or ``text`` decoded as UTF-8 with invalid
+    bytes replaced); the other payload column and ``lang`` are null. One
+    task per shard (binaryFile split = whole file); shards are parsed one at
+    a time and rows leave in Arrow batches of at most ``_OUT_BATCH_ROWS``,
+    so a task never holds a whole shard's records."""
+    files = spark.read.format("binaryFile").load(path_glob)
+    schema = to_arrow_schema(PAGES_SCHEMA)
+
+    def batch(rows: list[dict]) -> pa.RecordBatch:
+        payload = [r["html"] for r in rows]
+        if column == "text":
+            payload = [p.decode("utf-8", errors="replace") for p in payload]
+        cols = {
+            "url": [r["url"] for r in rows],
+            "warc_ts": [r["warc_ts"] for r in rows],
+            column: payload,
+        }
+        return pa.RecordBatch.from_arrays(
+            [pa.array(cols.get(f.name, [None] * len(rows)), f.type) for f in schema],
+            schema=schema,
+        )
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        buf: list[dict] = []
+        for shards in batches:
+            content = shards.column(0)
+            for i in range(len(content)):
+                for r in iter_warc_records(content[i].as_py(), record_type):
+                    buf.append(r)
+                    if len(buf) >= _OUT_BATCH_ROWS:
+                        yield batch(buf)
+                        buf = []
+        if buf:
+            yield batch(buf)
+
+    return files.select("content").mapInArrow(run, schema=PAGES_SCHEMA)
+
+
 def read_pages_warc(spark: SparkSession, path_glob: str) -> DataFrame:
     """Scan ``*.warc`` / ``*.warc.gz`` shards into the authoritative pages
-    shape. One task per shard (binaryFile split = whole file); ``text`` and
-    ``lang`` are unknown at scan time (null) — exactly what
-    ``extract_pages`` consumes. Output rows stream out in bounded batches
-    (``_OUT_BATCH_ROWS``): the task never materializes a whole shard's
-    records at once."""
-    files = spark.read.format("binaryFile").load(path_glob)
-    cols = ["url", "warc_ts", "html", "text", "lang"]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        buf: list[dict] = []
-        for pdf in batches:
-            for content in pdf["content"]:
-                for r in iter_warc_records(bytes(content)):
-                    buf.append(
-                        {
-                            "url": r["url"],
-                            "warc_ts": r["warc_ts"],
-                            "html": r["html"],
-                            "text": None,
-                            "lang": None,
-                        }
-                    )
-                    if len(buf) >= _OUT_BATCH_ROWS:
-                        yield pd.DataFrame(buf, columns=cols)
-                        buf = []
-        yield pd.DataFrame(buf, columns=cols)
-
-    return files.select("content").mapInPandas(run, schema=PAGES_SCHEMA)
+    shape. ``text`` and ``lang`` are unknown at scan time (null) — exactly
+    what ``extract_pages`` consumes. Task and memory contract: see
+    :func:`_scan_records`."""
+    return _scan_records(spark, path_glob, "response", "html")
 
 
 def read_text_wet(spark: SparkSession, path_glob: str) -> DataFrame:
@@ -283,26 +302,4 @@ def read_text_wet(spark: SparkSession, path_glob: str) -> DataFrame:
     the entry point for pipelines that start from pre-extracted text
     (dedup, quality, decontamination) and skip the html stage entirely.
     Same task/memory/degradation contract as :func:`read_pages_warc`."""
-    files = spark.read.format("binaryFile").load(path_glob)
-    cols = ["url", "warc_ts", "html", "text", "lang"]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        buf: list[dict] = []
-        for pdf in batches:
-            for content in pdf["content"]:
-                for r in iter_warc_records(bytes(content), "conversion"):
-                    buf.append(
-                        {
-                            "url": r["url"],
-                            "warc_ts": r["warc_ts"],
-                            "html": None,
-                            "text": r["html"].decode("utf-8", errors="replace"),
-                            "lang": None,
-                        }
-                    )
-                    if len(buf) >= _OUT_BATCH_ROWS:
-                        yield pd.DataFrame(buf, columns=cols)
-                        buf = []
-        yield pd.DataFrame(buf, columns=cols)
-
-    return files.select("content").mapInPandas(run, schema=PAGES_SCHEMA)
+    return _scan_records(spark, path_glob, "conversion", "text")

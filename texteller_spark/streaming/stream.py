@@ -84,7 +84,9 @@ def streaming_dedup_first_seen(
     TTL). Default ``None`` keeps exact forever-state semantics, with no
     watermark and no row dropped.
     """
-    import pandas as pd  # noqa: F401  (pandas batches cross the state op)
+    # the package's one pandas stage: this state op's Arrow successor,
+    # transformWithState, needs protobuf
+    import pandas as pd  # noqa: F401
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     out_schema = pages_stream.select("url", "warc_ts", "text", "lang").schema
