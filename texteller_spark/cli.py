@@ -11,7 +11,8 @@ from __future__ import annotations
 
 import argparse
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Observation, SparkSession
 
 from .plans.checkpoint import read_done_urls, resume_pending, write_extracted
 from .plans.pipeline import extract_pages, extract_pages_chunked
@@ -56,15 +57,22 @@ def main(argv: list[str] | None = None) -> None:
         pages = read_pages_warc(spark, args.input)
     else:
         pages = spark.read.parquet(args.input)
+    fresh = read_done_urls(spark, args.output) is None
+    done = Observation("done")  # rows the table held before this run
     if args.resume:
-        pages = resume_pending(pages, args.output)
+        pages = resume_pending(pages, args.output, done)
     out = (
         extract_pages_chunked(pages, args.chunk_chars, partitions=args.partitions)
         if args.chunk_chars
         else extract_pages(pages, partitions=args.partitions)
     )
-    write_extracted(out, args.output, args.run_id)
-    n = read_done_urls(spark, args.output).count()
+    written, _ = write_extracted(out, args.output, args.run_id)
+    try:
+        n = written + (0 if fresh else done.get["n_rows"])
+    except (AssertionError, Py4JJavaError):
+        # not observed: no --resume, or AQE dropped the anti-join's build
+        # side (empty done-set or input) and the observation with it
+        n = read_done_urls(spark, args.output).count()
     print(f"extracted table now holds {n} urls")
 
 

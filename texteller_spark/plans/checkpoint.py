@@ -1,21 +1,10 @@
-"""Resumable execution: per-partition lineage counters + checkpointed urls.
+"""Resumable execution: an observed append of the results + checkpointed urls.
 
-North-rule requirements: "per-partition lineage and counters are checkpointed
-… for resumable re-runs". The design is declarative (no mapPartitions):
+North rule: "per-partition lineage and counters are checkpointed … for
+resumable re-runs"; the counters here are per run. Declarative (no mapPartitions):
 
-* :func:`stage_metrics` — per-partition row/byte counters for any stage,
-  computed with ``spark_partition_id()`` + a plain groupBy (map-side partial
-  aggregation; the only shuffle is P→few rows).
-* :func:`write_extracted` — append results + the per-run metrics table from
-  one pass of the kernel. The frame is local-checkpointed lazily: the write
-  job computes each row once and keeps its blocks on the executors, and the
-  metrics job reads those blocks instead of re-running scan, resume
-  anti-join and kernel. ``persist()`` cannot stand in for it. Written first,
-  the append to ``extracted`` re-caches a ``--resume`` plan (it reads that
-  path through the anti-join), so the metrics job would count 0 rows; with
-  metrics first, AQE may not coalesce a cached plan's partitions
-  (``canChangeCachedPlanOutputPartitioning`` is off), so the write would
-  fan out into one file per shuffle partition.
+* :func:`write_extracted` — append results, then the run's row and byte
+  totals, observed by the write job itself, as one ``_metrics`` row.
 * :func:`resume_pending` — anti-join the input scan against already-
   checkpointed urls, so a re-run only processes the remainder. On Iceberg
   this is ``pages.join(done, 'url', 'left_anti')`` against the snapshot-
@@ -33,58 +22,56 @@ co-partitioned.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .io import append_table, read_table, table_target
 
-__all__ = ["stage_metrics", "write_extracted", "resume_pending", "read_done_urls"]
+__all__ = ["write_extracted", "resume_pending", "read_done_urls"]
 
 
-def stage_metrics(df: DataFrame, stage: str, bytes_col: str) -> DataFrame:
-    """Per-partition row count and summed ``length(bytes_col)`` for ``df``
-    at this point of the plan."""
-    return (
-        df.select(F.spark_partition_id().alias("partition_id"), bytes_col)
-        .groupBy("partition_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.length(F.col(bytes_col))).alias("n_bytes"),
-        )
-        .select(F.lit(stage).alias("stage"), "partition_id", "n_rows", "n_bytes")
-    )
+def write_extracted(extracted: DataFrame, out_dir: str, run_id: str) -> tuple[int, int]:
+    """Append the extraction output, then its ``assemble:<run_id>`` metrics
+    row, through the IO seam (parquet path in-sandbox; ``writeTo().append()``
+    under ``SPARK_GRAFT_TABLE_FORMAT=iceberg``); return the rows written and
+    their summed ``length(extracted_text)``.
 
-
-def write_extracted(extracted: DataFrame, out_dir: str, run_id: str) -> None:
-    """Append the extraction output, then its ``assemble:<run_id>`` metrics,
-    through the IO seam (parquet path in-sandbox; ``writeTo().append()``
-    under ``SPARK_GRAFT_TABLE_FORMAT=iceberg``).
-
-    The kernel runs once per row: ``localCheckpoint(eager=False)`` cuts the
-    lineage at this frame, so the metrics job reads the blocks the write
-    job left on the executors and counts exactly the rows it wrote, while
-    AQE still plans the write's partitions (the module docstring says why
-    not ``persist()``). The blocks live in executor storage, not on a
-    reliable filesystem: if an executor is lost between the two jobs, the
-    metrics job fails loudly instead of recomputing. Spark frees the blocks
-    when the frame is garbage-collected.
+    Both totals are an ``Observation`` on the written frame: the write job
+    computes them once per row as it writes, and Spark merges the partial of
+    each successful task of its final stage once, so a retry is not counted
+    twice. An observation has no per-partition keys: ``partition_id`` is
+    NULL. The row is built in the JVM; one from Python would cost Python
+    tasks.
     """
-    extracted = extracted.localCheckpoint(eager=False)
-    append_table(extracted, table_target(out_dir, "extracted"))
-    m = stage_metrics(extracted, f"assemble:{run_id}", bytes_col="extracted_text")
-    append_table(m, table_target(out_dir, "_metrics"))
+    totals = Observation(f"assemble:{run_id}")
+    aggs = F.count(F.lit(1)).alias("n_rows"), F.sum(F.length("extracted_text")).alias("n_bytes")
+    append_table(extracted.observe(totals, *aggs), table_target(out_dir, "extracted"))
+    got = totals.get
+    n_rows, n_bytes = got["n_rows"], got["n_bytes"] or 0  # sum() of no rows is NULL
+    row = extracted.sparkSession.range(1, numPartitions=1).select(
+        F.lit(f"assemble:{run_id}").alias("stage"), F.lit(None).cast("int").alias("partition_id"),
+        F.lit(n_rows).cast("long").alias("n_rows"), F.lit(n_bytes).cast("long").alias("n_bytes"),
+    )
+    append_table(row, table_target(out_dir, "_metrics"))
+    return n_rows, n_bytes
 
 
 def read_done_urls(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    done = read_table(spark, table_target(out_dir, "extracted"))
+    done = read_table(spark, table_target(out_dir, "extracted"), schema="url string")
     return None if done is None else done.select("url")
 
 
-def resume_pending(pages: DataFrame, out_dir: str) -> DataFrame:
+def resume_pending(
+    pages: DataFrame, out_dir: str, done_rows: Observation | None = None
+) -> DataFrame:
     """Filter the input scan down to urls not yet present in the output
     checkpoint (left_anti). Idempotent re-runs: crash → rerun → only the
-    remainder is processed."""
+    remainder is processed. ``done_rows`` observes the done-set's
+    ``n_rows`` in the job that runs the join, unless nothing was written
+    yet or AQE drops the join's build side; its ``get`` raises then."""
     done = read_done_urls(pages.sparkSession, out_dir)
     if done is None:
         return pages
+    if done_rows is not None:
+        done = done.observe(done_rows, F.count(F.lit(1)).alias("n_rows"))
     return pages.join(done, "url", "left_anti")

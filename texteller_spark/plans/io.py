@@ -64,15 +64,19 @@ def append_table(df: DataFrame, target: str, fmt: str | None = None) -> None:
 _NOT_YET_WRITTEN = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
 
 
-def read_table(spark: SparkSession, target: str, fmt: str | None = None) -> DataFrame | None:
+def read_table(
+    spark: SparkSession, target: str, fmt: str | None = None, schema: str | None = None
+) -> DataFrame | None:
     """Read ``target``; None when nothing has been committed to it yet.
 
     Any other failure (e.g. a corrupt file) raises: treating an unreadable
     checkpoint as empty would make a resumed run re-extract and append
-    every page again."""
+    every page again. A parquet ``schema`` (DDL) skips the footer-reading
+    job of schema inference; a ``_temporary/``-only directory then reads as
+    empty, and a corrupt file raises on the first scan."""
     if table_format(fmt) == "parquet":
         try:
-            return spark.read.parquet(target)
+            return (spark.read.schema(schema) if schema else spark.read).parquet(target)
         except AnalysisException as e:
             if e.getCondition() in _NOT_YET_WRITTEN:
                 return None

@@ -2,11 +2,19 @@
 — the raw physical plans behind the properties pinned in
 tests/test_plan_quality.py, readable without a Spark session.
 
+Expression ids (``#17``) and exchange ``plan_id``s are renumbered per
+section in order of first appearance, so regenerating an unchanged tree
+rewrites no line. What still can differ between two regenerations is a
+choice AQE makes at run time from stage sizes: ``web_domain_rank``'s
+broadcast join has planned ``BuildLeft`` on one run and ``BuildRight`` on
+another of the same tree.
+
 Usage: python tools/plan_dump.py [sf_dir]
 """
 
 from __future__ import annotations
 
+import re
 import sys
 from pathlib import Path
 
@@ -48,6 +56,15 @@ HEADLINE = [
 ]
 
 
+def stable_ids(plan: str) -> str:
+    """Number ``#<id>`` and ``plan_id=<id>`` in ``plan`` 0, 1, … by first
+    appearance (one sequence each)."""
+    for pattern, fmt in ((r"#(\d+)", "#{}"), (r"plan_id=(\d+)", "plan_id={}")):
+        ids: dict[str, int] = {}
+        plan = re.sub(pattern, lambda m: fmt.format(ids.setdefault(m[1], len(ids))), plan)
+    return plan
+
+
 def main() -> None:
     from texteller_spark.plans import queries as Q
     from texteller_spark.plans.pipeline import extract_pages, extract_pages_chunked
@@ -58,8 +75,8 @@ def main() -> None:
     docs = spark.read.parquet(f"{SF}/documents.parquet")
 
     def formatted(df) -> str:
-        return df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
+        return stable_ids(
+            df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
         )
 
     sections = [
