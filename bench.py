@@ -185,11 +185,11 @@ def query_builders(spark, corpus) -> dict:
         return pagerank(link_edges(wide(link_corpus(spark))), iters=3)
 
     def kmeans_corpus():
-        # distributed Lloyd over N_DOCS x 64-dim: map-only assignment under
-        # the broadcast centroid row + one 64-key exchange per round
+        # distributed Lloyd over N_DOCS x 64-dim: map-only BLAS assignment
+        # against the driver's centroid matrix + one 64-key exchange per round
         from texteller_spark.operators.clustering import kmeans_fit
 
-        return kmeans_fit(wide(ensure_emb_corpus(spark)), k=64, iters=2, engine="arrow")
+        return kmeans_fit(wide(ensure_emb_corpus(spark)), k=64, iters=2)
 
     def semantic_dedup_corpus():
         # SemDeDup at corpus scale: k=128 seed clusters bound the pair
@@ -200,7 +200,7 @@ def query_builders(spark, corpus) -> dict:
         )
 
         e = wide(ensure_emb_corpus(spark))
-        return semantic_dedup(e, seed_centroids(e, 128), threshold=0.9, engine="arrow")
+        return semantic_dedup(e, seed_centroids(e, 128), threshold=0.9)
 
     def curation_signals():
         # full crawl-curation signal pass over the corpus in ONE scan —

@@ -687,17 +687,14 @@ def test_ann_join_multiprobe_improves_recall(spark):
     assert r8 >= 0.5
 
 
-def test_ivf_ann_join_engine_parity_and_exact_at_limit(spark):
-    """ivf_ann_join contracts: (1) the arrow (BLAS) and jvm (interpreted
-    higher-order) engines emit identical results — same rounded-distance,
-    lowest-cid-tie assignment/probe contract as clustering.assign_clusters;
-    (2) nprobe >= nlist probes every inverted list, so the output equals
-    exact brute-force top-k (computed independently in numpy) — the
-    exactness-at-the-limit contract that anchors the approximation."""
+def test_ivf_ann_join_exact_at_limit(spark):
+    """ivf_ann_join contract: nprobe >= nlist probes every inverted list,
+    so the output equals exact brute-force top-k (computed independently
+    in numpy) — the exactness-at-the-limit contract that anchors the
+    approximation."""
     import numpy as np
 
     from texteller_spark.operators.clustering import kmeans_fit
-    from texteller_spark.operators.dedup import release_caches
     from texteller_spark.operators.similarity import ivf_ann_join
 
     rng = np.random.RandomState(7)
@@ -707,22 +704,10 @@ def test_ivf_ann_join_engine_parity_and_exact_at_limit(spark):
     df = spark.createDataFrame(
         rows, "vec_id long, embedding array<float>"
     ).repartition(4)
-    try:
-        cents = kmeans_fit(df, k=6, iters=2, dim=dim, engine="jvm").select(
-            "cid", "cent"
-        )
-        q = df.filter(F.col("vec_id") < nq)
-        c = df.filter(F.col("vec_id") >= nq)
-
-        a = ivf_ann_join(q, c, cents, k=5, nprobe=2, engine="arrow").collect()
-        j = ivf_ann_join(q, c, cents, k=5, nprobe=2, engine="jvm").collect()
-        key = lambda r: (r.query_id, r.neighbor_id, r.rnk, r.cosine)
-        assert sorted(map(key, a)) == sorted(map(key, j))
-        assert len(a) > 0
-
-        full = ivf_ann_join(q, c, cents, k=5, nprobe=6, engine="arrow").collect()
-    finally:
-        release_caches()
+    cents = kmeans_fit(df, k=6, iters=2).select("cid", "cent")
+    q = df.filter(F.col("vec_id") < nq)
+    c = df.filter(F.col("vec_id") >= nq)
+    full = ivf_ann_join(q, c, cents, k=5, nprobe=6).collect()
     vn = vecs.astype(np.float64)
     vn /= np.linalg.norm(vn, axis=1, keepdims=True)
     exp = []
@@ -1292,7 +1277,6 @@ def test_kmeans_fit_matches_reference_and_is_partition_invariant(spark):
     import random
 
     from texteller_spark.operators.clustering import kmeans_fit
-    from texteller_spark.operators.dedup import release_caches
 
     rng = random.Random(11)
     dim, k = 8, 3
@@ -1303,17 +1287,14 @@ def test_kmeans_fit_matches_reference_and_is_partition_invariant(spark):
         vecs[i] = [c + rng.uniform(-1, 1) for c in center]
     rows = [(i, [float(x) for x in v]) for i, v in vecs.items()]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    try:
-        got = {
-            r.cid: (r.n, [round(x, 6) for x in r.cent])
-            for r in kmeans_fit(df, k=k, iters=2, dim=dim, engine="jvm").collect()
-        }
-        got_shuffled = {
-            r.cid: (r.n, [round(x, 6) for x in r.cent])
-            for r in kmeans_fit(df.repartition(7), k=k, iters=2, dim=dim, engine="jvm").collect()
-        }
-    finally:
-        release_caches()
+    got = {
+        r.cid: (r.n, [round(x, 6) for x in r.cent])
+        for r in kmeans_fit(df, k=k, iters=2).collect()
+    }
+    got_shuffled = {
+        r.cid: (r.n, [round(x, 6) for x in r.cent])
+        for r in kmeans_fit(df.repartition(7), k=k, iters=2).collect()
+    }
     cents, counts = _kmeans_reference(vecs, k, iters=2)
     assert set(got) == set(cents)
     for c in cents:
@@ -1324,7 +1305,6 @@ def test_kmeans_fit_matches_reference_and_is_partition_invariant(spark):
 
 def test_kmeans_empty_cluster_keeps_previous_centroid(spark):
     from texteller_spark.operators.clustering import kmeans_fit
-    from texteller_spark.operators.dedup import release_caches
 
     # seed 1 duplicates seed 0 (the way clusters actually empty under
     # Forgy init): every row ties or loses to cid 0, so cluster 1 gets no
@@ -1332,13 +1312,10 @@ def test_kmeans_empty_cluster_keeps_previous_centroid(spark):
     rows = [(0, [1.0, 1.0]), (1, [1.0, 1.0]), (2, [0.5, 0.5]), (3, [1.6, 1.4]),
             (4, [0.4, 0.6]), (5, [1.5, 0.6])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    try:
-        got = {r.cid: (r.n, r.cent) for r in kmeans_fit(df, k=2, iters=1, dim=2, engine="jvm").collect()}
-        # a second round is still well-defined: the kept centroid re-enters
-        # assignment and recaptures the rows nearest the original seed
-        got2 = {r.cid: r.n for r in kmeans_fit(df, k=2, iters=2, dim=2, engine="jvm").collect()}
-    finally:
-        release_caches()
+    got = {r.cid: (r.n, r.cent) for r in kmeans_fit(df, k=2, iters=1).collect()}
+    # a second round is still well-defined: the kept centroid re-enters
+    # assignment and recaptures the rows nearest the original seed
+    got2 = {r.cid: r.n for r in kmeans_fit(df, k=2, iters=2).collect()}
     assert got[1][0] == 0  # emptied on the tie-break to the lowest cid
     assert got[1][1] == [1.0, 1.0]  # kept its previous centroid, not null
     assert got[0][0] == 6
@@ -1348,7 +1325,6 @@ def test_kmeans_empty_cluster_keeps_previous_centroid(spark):
 
 def test_semantic_dedup_keep_first_within_cluster_only(spark):
     from texteller_spark.operators.clustering import seed_centroids, semantic_dedup
-    from texteller_spark.operators.dedup import release_caches
 
     # cluster A near (0,0): ids 0,2,3 with 2,3 near-dups of 0
     # cluster B near (9,9): id 1 (seed), id 4 a near-dup of 1
@@ -1358,15 +1334,11 @@ def test_semantic_dedup_keep_first_within_cluster_only(spark):
         (4, [8.9, 9.1]), (5, [0.0, 0.0]),
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    try:
-        got = {r.id: (r.cid, r.keep) for r in
-               semantic_dedup(df, seed_centroids(df, 2), threshold=0.9,
-                              engine="jvm").collect()}
-        got_shuffled = {r.id: (r.cid, r.keep) for r in
-                        semantic_dedup(df.repartition(5), seed_centroids(df, 2), engine="jvm",
-                                       threshold=0.9).collect()}
-    finally:
-        release_caches()
+    got = {r.id: (r.cid, r.keep) for r in
+           semantic_dedup(df, seed_centroids(df, 2), threshold=0.9).collect()}
+    got_shuffled = {r.id: (r.cid, r.keep) for r in
+                    semantic_dedup(df.repartition(5), seed_centroids(df, 2),
+                                   threshold=0.9).collect()}
     assert len(got) == 6
     keeps = {i: got[i][1] for i in got}
     assert keeps == {0: True, 1: True, 2: False, 3: False, 4: False, 5: True}
@@ -1377,68 +1349,22 @@ def test_semantic_dedup_keep_first_within_cluster_only(spark):
     assert got_shuffled == got
 
 
-def test_clustering_arrow_engine_matches_jvm(spark):
+def test_semantic_dedup_blocked_sim_matches_single_block(spark, monkeypatch):
     import random
 
-    from texteller_spark.operators.clustering import (
-        assign_clusters,
-        kmeans_fit,
-        seed_centroids,
-        semantic_dedup,
-    )
-    from texteller_spark.operators.dedup import release_caches
-
-    rng = random.Random(23)
-    dim, k = 8, 4
-    rows = []
-    for i in range(60):
-        center = [float(3 * (i % k))] * dim
-        rows.append((i, [c + rng.uniform(-1, 1) for c in center]))
-    rows.append((60, [0.0] * dim))  # zero vector: always kept, never NaN
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = seed_centroids(df, k)
-    try:
-        a_j = sorted((r.vec_id, r.cid) for r in
-                     assign_clusters(df, cents, engine="jvm")
-                     .select("vec_id", "cid").collect())
-        a_a = sorted((r.vec_id, r.cid) for r in
-                     assign_clusters(df, cents, engine="arrow")
-                     .select("vec_id", "cid").collect())
-        f_j = sorted((r.cid, r.n, tuple(round(x, 6) for x in r.cent)) for r in
-                     kmeans_fit(df, k=k, iters=2, dim=dim, engine="jvm").collect())
-        f_a = sorted((r.cid, r.n, tuple(round(x, 6) for x in r.cent)) for r in
-                     kmeans_fit(df, k=k, iters=2, dim=dim, engine="arrow").collect())
-        s_j = sorted(tuple(r) for r in
-                     semantic_dedup(df, cents, threshold=0.9, engine="jvm").collect())
-        s_a = sorted(tuple(r) for r in
-                     semantic_dedup(df, cents, threshold=0.9, engine="arrow").collect())
-    finally:
-        release_caches()
-    assert a_a == a_j
-    assert f_a == f_j
-    assert s_a == s_j
-    assert len(s_a) == 61
-
-
-def test_semantic_dedup_blocked_sim_matches_single_block(spark):
-    import random
-
+    from texteller_spark.operators import clustering
     from texteller_spark.operators.clustering import seed_centroids, semantic_dedup
-    from texteller_spark.operators.dedup import release_caches
 
     rng = random.Random(31)
     rows = [(i, [3.0 * (i % 3) + rng.uniform(-1, 1) for _ in range(6)])
             for i in range(40)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     cents = seed_centroids(df, 3)
-    try:
-        full = sorted(tuple(r) for r in
-                      semantic_dedup(df, cents, threshold=0.8, engine="arrow").collect())
-        blocked = sorted(tuple(r) for r in
-                         semantic_dedup(df, cents, threshold=0.8, engine="arrow",
-                                        sim_block_cols=3).collect())
-        jvm = sorted(tuple(r) for r in
-                     semantic_dedup(df, cents, threshold=0.8, engine="jvm").collect())
-    finally:
-        release_caches()
-    assert blocked == full == jvm
+    full = sorted(tuple(r) for r in
+                  semantic_dedup(df, cents, threshold=0.8).collect())
+    # a budget of 40 doubles compares each ~13-row cluster 3 columns at a
+    # time; the driver reads the constant when it builds the kernel
+    monkeypatch.setattr(clustering, "_SIM_BLOCK_DOUBLES", 40)
+    blocked = sorted(tuple(r) for r in
+                     semantic_dedup(df, cents, threshold=0.8).collect())
+    assert blocked == full

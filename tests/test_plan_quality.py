@@ -163,53 +163,29 @@ def test_ann_join_is_band_equijoin_with_windowgrouplimit(spark, Q):
 
 def test_ivf_join_is_list_equijoin_vector_free_with_windowgrouplimit(spark, Q):
     """IVF ANN join plan shape: the inverted-list candidate join is a hash
-    equi-join on cid whose exchanges carry ONLY (id, cid) rows — the
-    vector-free posture every bucketed exchange in this package pins; the
-    embedding crosses a keyed exchange at most once per side (the id
-    join-backs of the exact rerank); per-query top-k pushes down to
-    WindowGroupLimit. The jvm catalog entry keeps zero Python (the
-    centroid cross joins are model-sized broadcasts); the arrow default
-    uses Arrow kernels, never per-row BatchEvalPython."""
-    from texteller_spark.operators.dedup import release_caches
-
+    equi-join on cid whose exchange (broadcast at this scale, shuffled at
+    corpus scale) carries ONLY (id, cid) rows — the vector-free posture
+    every bucketed exchange in this package pins; the embedding crosses a
+    keyed exchange at most once per side (the id join-backs of the exact
+    rerank); per-query top-k pushes down to WindowGroupLimit. List
+    assignment and probing are one Arrow kernel per side (two nodes),
+    never per-row BatchEvalPython."""
     vec_markers = ("_v_query_id#", "_v_neighbor_id#")
-    try:
-        df = Q.q_ivf_kmeans(spark, SF)
-        p = plan_of(df)
-        assert "WindowGroupLimit" in p
-        assert "BatchEvalPython" not in p
-        assert "ArrowEvalPython" not in p  # jvm oracle path: zero Python
-        exs = exchange_inputs(df)
-        cid_exs = [
-            (args, inputs) for args, inputs in exs if "hashpartitioning(cid" in args
-        ]
-        assert cid_exs  # the list equi-join exists and shuffles on cid
-        for args, inputs in cid_exs:
-            assert not any(v in inputs for v in vec_markers), (args, inputs)
-        n_vec = sum(1 for _, i in exs if any(v in i for v in vec_markers))
-        assert n_vec <= 2, exs
-
-        # arrow default: same shape, Arrow kernels only
-        from pyspark.sql import functions as F
-
-        from texteller_spark.operators.clustering import seed_centroids
-        from texteller_spark.operators.similarity import ivf_ann_join
-
-        e = spark.read.parquet(f"{SF}/embeddings.parquet")
-        adf = ivf_ann_join(
-            e.filter(F.col("vec_id") < 20),
-            e.filter(F.col("vec_id") >= 20),
-            seed_centroids(e, 8),
-            k=5,
-            nprobe=2,
-            engine="arrow",
-        )
-        ap = plan_of(adf)
-        assert "BatchEvalPython" not in ap
-        assert "ArrowEvalPython" in ap
-        assert "WindowGroupLimit" in ap
-    finally:
-        release_caches()
+    df = Q.q_ivf_kmeans(spark, SF)
+    p = plan_of(df)
+    assert "WindowGroupLimit" in p
+    assert p.count("ArrowEvalPython") == 2
+    assert "BatchEvalPython" not in p
+    exs = exchange_inputs(df)
+    cid_exs = [
+        (args, inputs) for args, inputs in exs
+        if any(c.startswith("cid#") for c in inputs.split(", "))
+    ]
+    assert cid_exs  # the list equi-join exists and moves (id, cid) rows
+    for args, inputs in cid_exs:
+        assert not any(v in inputs for v in vec_markers), (args, inputs)
+    n_vec = sum(1 for _, i in exs if any(v in i for v in vec_markers))
+    assert n_vec <= 2, exs
 
 
 def test_lsh_band_exchanges_are_vector_free(spark, Q):
@@ -257,6 +233,55 @@ def test_lsh_plane_sign_margins_are_engine_safe(spark, Q):
     mat = np.stack([np.asarray(e, dtype=np.float64) for e in emb])
     planes = plane_matrix(mat.shape[1], 32)
     assert np.abs(mat @ planes.T).min() > 1e-9
+
+
+def _midpoint_margin(vals, digits: int) -> float:
+    """Smallest distance of any value from a rounding midpoint at
+    ``digits`` decimals: how far a value may drift before it rounds
+    differently."""
+    import numpy as np
+
+    scaled = np.asarray(vals) * 10.0**digits
+    return float((np.abs(scaled - np.floor(scaled) - 0.5) / 10.0**digits).min())
+
+
+def test_blas_distance_forms_round_like_sequential_sums(spark):
+    """The clustering kernels compute squared L2 as ``|x|²-2x·c+|c|²`` and
+    cosine as a normalized matmul; the DuckDB oracles sum element by
+    element. The two must round equal (6 digits for the k-means distance,
+    4 for the SemDeDup cosine), and no sequential value may sit within
+    100x the largest form difference of a rounding midpoint — otherwise
+    equality on these fixtures would be luck, not a margin."""
+    import duckdb
+    import numpy as np
+
+    emb = (
+        duckdb.sql(f"SELECT embedding FROM '{SF}/embeddings.parquet' ORDER BY vec_id")
+        .fetchnumpy()["embedding"]
+    )
+    x = np.stack([np.asarray(e, dtype=np.float64) for e in emb])
+    cents = x[:8]  # the catalog's Forgy seeds: the 8 lowest vec_ids
+
+    blas_d2 = (x * x).sum(axis=1)[:, None] - 2.0 * (x @ cents.T) + (cents * cents).sum(axis=1)
+    seq_d2 = np.zeros_like(blas_d2)
+    for i in range(x.shape[1]):
+        seq_d2 = seq_d2 + (x[:, None, i] - cents[None, :, i]) ** 2
+
+    x = x[(x * x).sum(axis=1) > 0]  # zero rows have no cosine
+    nrm = np.sqrt((x * x).sum(axis=1))
+    u = x / nrm[:, None]
+    blas_cos = u @ u.T
+    seq_dot = np.zeros_like(blas_cos)
+    for i in range(x.shape[1]):
+        seq_dot = seq_dot + x[:, None, i] * x[None, :, i]
+    pairs = np.triu_indices(len(x), 1)  # the pair rule reads a < b only
+    blas_cos = blas_cos[pairs]
+    seq_cos = (seq_dot / (nrm[:, None] * nrm[None, :]))[pairs]
+
+    for blas, seq, digits in ((blas_d2, seq_d2, 6), (blas_cos, seq_cos, 4)):
+        assert np.array_equal(np.round(blas, digits), np.round(seq, digits)), digits
+        diff = float(np.abs(blas - seq).max())
+        assert _midpoint_margin(seq, digits) > 100 * diff, (digits, diff)
 
 
 def test_chunked_pipeline_costs_exactly_two_exchanges(spark):
@@ -586,53 +611,28 @@ def test_mixture_and_lr_are_single_agg_scans(spark, Q):
         assert "EvalPython" not in p, fn.__name__
 
 
-def test_kmeans_assignment_is_map_only_broadcast(spark, Q):
-    # the only join shapes allowed are the one-row centroid broadcast
-    # (BroadcastNestedLoopJoin over a single collect_list row) and k-key
-    # hash joins for the centroid update; a CartesianProduct or Python
-    # eval anywhere means assignment stopped being a scan-speed map
-    from texteller_spark.operators.dedup import release_caches
+def test_kmeans_assignment_is_map_only_broadcast(spark):
+    # assignment is a scan-speed map: one Arrow kernel per batch against
+    # the driver's centroid matrix — an Exchange or CartesianProduct means
+    # the embedding started moving to meet its centroids
+    from texteller_spark.operators.clustering import assign_clusters, seed_centroids
 
-    try:
-        p = plan_of(Q.q_cluster_kmeans(spark, SF))
-    finally:
-        release_caches()
+    e = spark.read.parquet(f"{SF}/embeddings.parquet")
+    p = plan_of(assign_clusters(e, seed_centroids(e, 8)))
+    assert "ArrowEvalPython" in p
+    assert "Exchange" not in p
     assert "CartesianProduct" not in p
-    assert "EvalPython" not in p
-    assert "Exchange rangepartitioning" not in p  # no global sorts
 
 
-def test_semantic_dedup_pairs_join_is_cluster_keyed(spark, Q):
-    # the pair space must be keyed on the cluster id (the SemDeDup
-    # bound) — an unkeyed theta join would re-derive the O(n^2) baseline
-    from texteller_spark.operators.dedup import release_caches
-
-    try:
-        p = plan_of(Q.q_semantic_dedup(spark, SF))
-    finally:
-        release_caches()
-    assert "CartesianProduct" not in p
-    assert "EvalPython" not in p
-    joins = [l for l in p.splitlines()
-             if "HashJoin" in l or "SortMergeJoin" in l]
-    assert any("_ca" in l and "_cb" in l for l in joins), joins
-
-
-def test_semantic_dedup_arrow_is_one_shuffle(spark):
-    # the corpus-scale engine's contract: vectors move exactly once (the
-    # cid-keyed exchange feeding the grouped pair kernel); assignment adds
-    # an Arrow eval, never row-at-a-time Python
-    from pyspark.sql import functions as F
-
-    from texteller_spark.operators.clustering import seed_centroids, semantic_dedup
-
-    df = spark.range(100).select(
-        F.col("id").alias("vec_id"),
-        F.array(*[(F.pmod(F.hash("id", F.lit(i)), F.lit(199)) / 100.0)
-                  for i in range(4)]).alias("embedding"),
-    )
-    p = plan_of(semantic_dedup(df, seed_centroids(df, 4), engine="arrow"))
+def test_semantic_dedup_arrow_is_one_shuffle(spark, Q):
+    # vectors move exactly once: the cid-keyed exchange feeding the
+    # grouped pair kernel, so the pair space is keyed on the cluster id
+    # (the SemDeDup bound — an unkeyed theta join would re-derive the
+    # O(n^2) baseline); assignment adds an Arrow eval, never row-at-a-time
+    # Python
+    p = plan_of(Q.q_semantic_dedup(spark, SF))
     assert p.count("Exchange hashpartitioning") == 1
+    assert "Exchange hashpartitioning(cid" in p
     assert "FlatMapGroupsInArrow" in p
     assert "BatchEvalPython" not in p
     assert "CartesianProduct" not in p

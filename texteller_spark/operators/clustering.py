@@ -10,42 +10,29 @@ but driven by a learned partition of the embedding space). The reference
 repo has no clustering stage — this is training-data-pipeline surface on
 top of the reference's extraction semantics (reference analog: none).
 
-Each operator carries two engines with pinned-identical results:
-
-* ``engine='jvm'`` (the oracle/catalog path — the catalog passes it
-  explicitly) is built-in JVM expressions only — assignment is map-only (the centroid table collapses
-  to a ONE-ROW broadcast ``collect_list`` of (cid, cent) structs; the
-  per-row argmin is a higher-order ``aggregate`` with an
-  order-independent (dist, cid) accumulator), the Lloyd update is one
-  k-key hash exchange per round with map-side partial per-dimension
-  ``avg``, and semantic dedup self-joins on the cluster id so candidate
-  pairs per row are bounded by cluster size. Zero Python anywhere — but
-  note Catalyst higher-order functions are CodegenFallback (interpreted
-  per element), so this engine's sweet spot is small k and
-  oracle-verified correctness.
-* ``engine='arrow'`` (the DEFAULT — a bare ``kmeans_fit(df, k)`` must never
-  run the interpreted path at corpus scale; r3 verdict finding #2) is the
-  MLlib-shaped variant:
-  the k-row centroid model round-trips through the driver (an O(k*d)
-  aggregate — see :func:`_collect_centroids`) so assignment is one BLAS
-  matmul per Arrow batch, and the SemDeDup pair decisions resolve per
-  cluster in one grouped batch. Measured ~10-25x over the interpreted
-  engine at 100k rows x 64 dims.
+One engine, shaped like Spark MLlib's KMeans: the k-row centroid model
+round-trips through the driver (an O(k*d) aggregate — see
+:func:`_collect_centroids`), so assignment is one BLAS matmul per Arrow
+batch, each Lloyd update is one k-key hash exchange with map-side partial
+per-dimension ``avg``, and the SemDeDup pair decisions resolve per
+cluster in one grouped Arrow batch. Nothing is persisted, so no operator
+here leaves a cache to release.
 
 At 10^12 rows you raise ``k`` with the corpus (SemDeDup uses ~100k
-clusters) and the pair join never degenerates toward the O(n²) exact
+clusters) and the pair space never degenerates toward the O(n²) exact
 baseline.
 
-Determinism across engines and layouts: seeds are the k lowest-id rows
-(Forgy init — oracle-expressible, no RNG), every distance and every
-round-boundary centroid is rounded to ``round_digits`` BEFORE any
-comparison, and all tie-breaks are (value, id). Empty clusters keep their
-previous centroid (``coalesce``), mirrored in the SQL oracle.
+Determinism across layouts: seeds are the k lowest-id rows (Forgy init —
+oracle-expressible, no RNG), every distance and every round-boundary
+centroid is rounded to ``round_digits`` BEFORE any comparison, and all
+tie-breaks are (value, id). The BLAS distance forms differ from the SQL
+oracles' sequential sums only far below the rounding digit (pinned by
+``tests/test_plan_quality.py::test_blas_distance_forms_round_like_sequential_sums``).
+Empty clusters keep their previous centroid, mirrored in the SQL oracle.
 
-At 100k-cluster scale the broadcast centroid row is k*d doubles (~600 MB
-at k=100k, d=768) — past the broadcast comfort zone, shard the centroid
-array and take the argmin of per-shard argmins (same accumulator, one
-extra ``aggregate``); the k=8 catalog entry documents the small-k shape.
+At 100k-cluster scale the centroid matrix every assignment kernel carries
+is k*d doubles (~600 MB at k=100k, d=768) — shard it and take the argmin
+of per-shard argmins; the k=8 catalog entry documents the small-k shape.
 """
 
 from __future__ import annotations
@@ -65,12 +52,9 @@ def _as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
 
 
-def _sq_dist(vec: Column, cent: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(vec, cent, lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+#: doubles per similarity block in :func:`semantic_dedup` (~1 GiB): a
+#: cluster of n rows is compared ``max(1, budget // n)`` columns at a time
+_SIM_BLOCK_DOUBLES = 1 << 27
 
 
 def seed_centroids(df: DataFrame, k: int, id_col: str = "vec_id",
@@ -86,40 +70,15 @@ def seed_centroids(df: DataFrame, k: int, id_col: str = "vec_id",
     )
 
 
-def _cents_row(centroids: DataFrame) -> DataFrame:
-    """The centroid table collapsed to one row holding ``array<struct<cid,
-    cent>>`` — the broadcast-able form assignment consumes. List order is
-    irrelevant: the argmin accumulator is order-independent."""
-    return centroids.agg(F.collect_list(F.struct("cid", "cent")).alias("_cents"))
-
-
-def _nearest(cents: Column, vec: Column, round_digits: int) -> Column:
-    """struct(cid, dist) of the nearest centroid — higher-order ``aggregate``
-    with a (dist, cid)-min accumulator, so the result does not depend on
-    the order centroids appear in the array."""
-    init = F.struct(
-        F.lit(-1).cast("long").alias("cid"), F.lit(float("inf")).alias("dist")
-    )
-
-    def merge(acc: Column, c: Column) -> Column:
-        d = F.round(_sq_dist(vec, c["cent"]), round_digits)
-        better = (d < acc["dist"]) | ((d == acc["dist"]) & (c["cid"] < acc["cid"]))
-        return F.when(
-            better, F.struct(c["cid"].cast("long").alias("cid"), d.alias("dist"))
-        ).otherwise(acc)
-
-    return F.aggregate(cents, init, merge)
-
-
 def _collect_centroids(centroids: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     """Bring the k-row centroid table to the driver, sorted by cid.
 
     This is the ONE sanctioned driver-side collect in the package: an
     O(k*d) model aggregate (kilobytes-to-megabytes, NEVER a function of
     corpus size) — the same round-trip Spark MLlib's own KMeans performs
-    every Lloyd iteration. It buys the Arrow engine below: distances as a
-    single BLAS matmul per batch instead of per-element interpreted
-    higher-order functions (~30x measured at 100k x 64 x k=64)."""
+    every Lloyd iteration. It buys distances as a single BLAS matmul per
+    batch instead of per-element interpreted higher-order functions (~30x
+    measured at 100k x 64 x k=64)."""
     rows = centroids.select("cid", "cent").collect()
     rows.sort(key=lambda r: r.cid)
     cids = np.array([r.cid for r in rows], dtype=np.int64)
@@ -130,10 +89,8 @@ def _collect_centroids(centroids: DataFrame) -> tuple[np.ndarray, np.ndarray]:
 def _arrow_assign_udf(cids: np.ndarray, cents: np.ndarray, round_digits: int):
     """cid column via numpy: rounded squared-L2 argmin against the driver
     centroid matrix. ``cids`` is sorted ascending, and np.argmin returns
-    the FIRST minimum, so ties break to the lowest cid — the identical
-    contract as the JVM ``_nearest`` accumulator (equality pinned by
-    tests; both round before comparing, which absorbs the sequential-vs-
-    pairwise summation difference)."""
+    the FIRST minimum, so ties break to the lowest cid — the contract of
+    the SQL oracles' ``ORDER BY ROUND(d2, n), cid``."""
     c_sq = (cents * cents).sum(axis=1)
 
     def assign(mat: np.ndarray) -> np.ndarray:
@@ -149,116 +106,59 @@ def assign_clusters(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_digits: int = 6,
-    engine: str = "arrow",
 ) -> DataFrame:
     """+ ``cid`` column: nearest centroid by squared L2 (rounded before
-    comparison; ties break to the lowest cid). Map-only in both engines —
-    the embedding column never shuffles.
-
-    ``engine='jvm'`` keeps the whole computation in Catalyst expressions
-    (one-row broadcast centroid array + higher-order argmin): zero Python,
-    oracle-exact — but Catalyst higher-order functions are interpreted
-    (CodegenFallback), so it is the small-k/oracle path, not the default.
-    ``engine='arrow'`` (default) trades one O(k*d) driver collect (see
-    :func:`_collect_centroids`) for BLAS batch distances — ~30x faster
-    once k*d*rows reaches corpus scale. Both
-    produce identical assignments (rounded distances, lowest-cid ties;
-    parity pinned in tests)."""
-    if engine == "arrow":
-        cids, cents = _collect_centroids(centroids)
-        udf = _arrow_assign_udf(cids, cents, round_digits)
-        return df.withColumn("cid", udf(_as_double(F.col(vec_col))))
-    out = df.crossJoin(F.broadcast(_cents_row(centroids)))
-    best = _nearest(F.col("_cents"), _as_double(F.col(vec_col)), round_digits)
-    return out.withColumn("cid", best["cid"]).drop("_cents")
+    comparison; ties break to the lowest cid). Map-only — the embedding
+    column never shuffles: one O(k*d) driver collect of the centroids (see
+    :func:`_collect_centroids`), then a BLAS matmul per Arrow batch."""
+    cids, cents = _collect_centroids(centroids)
+    udf = _arrow_assign_udf(cids, cents, round_digits)
+    return df.withColumn("cid", udf(_as_double(F.col(vec_col))))
 
 
 def kmeans_fit(
     df: DataFrame,
     k: int = 8,
     iters: int = 2,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_digits: int = 6,
-    engine: str = "arrow",
 ) -> DataFrame:
     """``iters`` Lloyd rounds from the Forgy seeds; returns ``(cid, n,
     cent)`` — member count and the final centroid (each component rounded
-    at every round boundary, so the trajectory is engine-reproducible).
+    at every round boundary, so the trajectory is layout-reproducible).
+    The dimension is the seeds' width.
 
-    Cost per round: one corpus scan (map-only assignment under broadcast
-    centroids) + one hash exchange carrying k keys x d partial (sum,
-    count) pairs — map-side combine does the real work, the shuffle is
-    O(k*d) regardless of corpus size. Each round's k-row centroid frame is
-    materialized (persist via the dedup cache contract — release with
-    ``dedup.release_caches()``): without it, round r's full subtree —
-    corpus scan included — re-executes inside every later round's
-    broadcast build, turning ``iters`` rounds into O(iters²) corpus scans
-    (verified on the physical plan). Empty clusters keep their previous
-    centroid.
-
-    ``engine='arrow'`` (default) is the MLlib-shaped variant: centroids
-    round-trip through the driver each iteration (O(k*d) —
-    :func:`_collect_centroids`) so assignment is a BLAS matmul in an Arrow
-    kernel and the per-round update aggregate is collected directly instead
-    of persisted. Identical trajectory to the JVM engine (same rounded
-    aggregates; parity pinned in tests), ~30x faster once k*d*rows is
-    corpus-sized; pass ``engine='jvm'`` for the interpreted oracle-exact
-    path (the catalog does)."""
-    from .dedup import _materialize
-
-    def _upd_agg(assigned):
-        upd = assigned.groupBy("cid").agg(
-            F.count(F.lit(1)).alias("_n"),
-            *[
-                F.round(F.avg(F.col("_v")[i]), round_digits).alias(f"_c{i}")
-                for i in range(dim)
-            ],
-        )
-        return upd.select(
-            "cid", "_n", F.array(*[F.col(f"_c{i}") for i in range(dim)]).alias("_cent")
-        )
-
-    base = df.select(F.col(id_col).alias("_id"), _as_double(F.col(vec_col)).alias("_v"))
-    if engine == "arrow":
-        cids, cents_np = _collect_centroids(seed_centroids(df, k, id_col, vec_col))
-        counts = np.zeros(len(cids), dtype=np.int64)
-        for _ in range(iters):
-            udf = _arrow_assign_udf(cids, cents_np, round_digits)
-            assigned = base.withColumn("cid", udf(F.col("_v")))
-            counts = np.zeros(len(cids), dtype=np.int64)
-            for r in _upd_agg(assigned).collect():  # k rows — model-sized
-                i = int(np.searchsorted(cids, r["cid"]))
-                cents_np[i] = r["_cent"]
-                counts[i] = r["_n"]
-        out = [
-            (int(c), int(n), [float(x) for x in cents_np[i]])
-            for i, (c, n) in enumerate(zip(cids, counts))
-        ]
-        return df.sparkSession.createDataFrame(
-            out, "cid long, n long, cent array<double>"
-        )
-
-    cents = seed_centroids(df, k, id_col, vec_col).withColumn(
-        "n", F.lit(0).cast("long")
-    )
+    Cost per round: one corpus scan (map-only BLAS assignment against the
+    driver's centroid matrix) + one hash exchange carrying k keys x d
+    partial (sum, count) pairs — map-side combine does the real work, the
+    shuffle is O(k*d) regardless of corpus size. The k-row update is
+    collected to the driver (:func:`_collect_centroids`'s round-trip) and
+    becomes the next round's matrix, so nothing is persisted and no round
+    re-executes an earlier one. Empty clusters keep their previous
+    centroid."""
+    cids, cents = _collect_centroids(seed_centroids(df, k, id_col, vec_col))
+    dim = cents.shape[1]
+    base = df.select(_as_double(F.col(vec_col)).alias("_v"))
+    counts = np.zeros(len(cids), dtype=np.int64)
     for _ in range(iters):
-        assigned = base.crossJoin(F.broadcast(_cents_row(cents.select("cid", "cent"))))
-        assigned = assigned.select(
-            "_v", _nearest(F.col("_cents"), F.col("_v"), round_digits)["cid"].alias("cid")
+        assign = _arrow_assign_udf(cids, cents, round_digits)
+        upd = base.withColumn("cid", assign(F.col("_v"))).groupBy("cid").agg(
+            F.count(F.lit(1)).alias("_n"),
+            F.array(*[
+                F.round(F.avg(F.col("_v")[i]), round_digits) for i in range(dim)
+            ]).alias("_cent"),
         )
-        upd = _upd_agg(assigned)
-        cents = _materialize(
-            cents.select("cid", F.col("cent").alias("_prev"))
-            .join(upd, "cid", "left")
-            .select(
-                "cid",
-                F.coalesce(F.col("_cent"), F.col("_prev")).alias("cent"),
-                F.coalesce(F.col("_n"), F.lit(0).cast("long")).alias("n"),
-            )
-        )
-    return cents.select("cid", "n", "cent")
+        counts = np.zeros(len(cids), dtype=np.int64)
+        for r in upd.collect():  # k rows — model-sized
+            i = int(np.searchsorted(cids, r["cid"]))
+            cents[i] = r["_cent"]
+            counts[i] = r["_n"]
+    out = [
+        (int(c), int(n), [float(x) for x in cents[i]])
+        for i, (c, n) in enumerate(zip(cids, counts))
+    ]
+    return df.sparkSession.createDataFrame(out, "cid long, n long, cent array<double>")
 
 
 def semantic_dedup(
@@ -268,109 +168,57 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_digits: int = 4,
-    engine: str = "arrow",
-    sim_block_cols: int | None = None,
 ) -> DataFrame:
     """SemDeDup decision frame ``(id, cid, keep)``: a row is dropped when
     some LOWER-id row in the SAME cluster has ``round(cosine,
     round_digits) >= threshold`` (keep-first, the convention every dedup
     decision frame in this package uses).
 
-    The pair space is the within-cluster self-join — candidates per row
-    are bounded by cluster size (choose ``k`` so clusters stay small at
-    your corpus scale; SemDeDup uses ~100k). Zero-norm rows have no
-    defined cosine and are always kept, mirroring the NaN guard of
+    The pair space is within-cluster — candidates per row are bounded by
+    cluster size (choose ``k`` so clusters stay small at your corpus
+    scale; SemDeDup uses ~100k). Zero-norm rows have no defined cosine and
+    are always kept, mirroring the NaN guard of
     ``similarity.embedding_near_dup_pairs``.
 
-    The assignment frame feeds three plan branches (both pair-join sides
-    and the decision join-back), so it is materialized once — the same
-    signature-stage pattern as ``dedup.minhash_lsh_pairs`` (at 10^12 rows,
-    checkpoint it to a table instead; it is the artifact every downstream
-    cluster consumer reuses anyway). Release with
-    ``dedup.release_caches()`` or wrap in ``dedup.signature_cache()``.
-
-    ``engine='arrow'`` (default; the corpus-scale path) assigns via the
-    BLAS kernel
-    and resolves each cluster's pair decisions in ONE grouped Arrow batch
-    (``applyInArrow`` over ``cid``): a normalized matmul replaces the
-    interpreted per-pair higher-order cosine — same rounded-cosine
-    admission, same keep-first-by-id contract (parity pinned in tests).
-    One shuffle total (vectors move once, keyed by cid). The similarity
-    matrix is computed in column blocks (``sim_block_cols``, auto-sized to
-    ~2^27 doubles) so per-group memory is O(n*d + n*block), never O(n²) —
-    a skewed mega-cluster degrades to more block matmuls, not an OOM; the
+    Assignment is :func:`assign_clusters`' BLAS kernel; each cluster's
+    pair decisions resolve in ONE grouped Arrow batch (``applyInArrow``
+    over ``cid``) as a normalized matmul. One shuffle total (vectors move
+    once, keyed by cid), nothing persisted. The similarity matrix is
+    computed in column blocks of ``_SIM_BLOCK_DOUBLES`` doubles, so
+    per-group memory is O(n*d + n*block), never O(n²) — a skewed
+    mega-cluster degrades to more block matmuls, not an OOM; the
     cluster's VECTORS must still fit one worker (SemDeDup's operating
     assumption — raise k as the corpus grows)."""
-    from .dedup import _materialize
+    assigned = assign_clusters(df, centroids, id_col, vec_col).select(
+        F.col(id_col).alias("id"), "cid", _as_double(F.col(vec_col)).alias("_v")
+    )
+    thr = float(threshold)
+    budget = _SIM_BLOCK_DOUBLES
 
-    if engine == "arrow":
-        assigned = assign_clusters(
-            df, centroids, id_col, vec_col, engine="arrow"
-        ).select(F.col(id_col).alias("id"), "cid", _as_double(F.col(vec_col)).alias("_v"))
-        thr = float(threshold)
-        block = sim_block_cols
+    def dedup_group(group: pa.Table) -> pa.Table:
+        ids = group.column("id").to_numpy()
+        order = np.argsort(ids)  # keep-first is defined by id order
+        x = vector_matrix(group.column("_v").combine_chunks())[order]
+        nrm = np.sqrt((x * x).sum(axis=1))
+        keep = np.ones(len(ids), dtype=bool)
+        nz = nrm > 0
+        n = int(nz.sum())
+        if n > 1:
+            u = x[nz] / nrm[nz][:, None]
+            c = max(1, budget // n)
+            dup = np.zeros(n, dtype=bool)
+            rows = np.arange(n)
+            for j0 in range(0, n, c):
+                j1 = min(j0 + c, n)
+                sim = np.round(u @ u[j0:j1].T, round_digits)
+                below = rows[:, None] < np.arange(j0, j1)[None, :]
+                dup[j0:j1] |= ((sim >= thr) & below).any(axis=0)
+            kz = keep[nz]
+            kz[dup] = False
+            keep[nz] = kz
+        cids = group.column("cid").to_numpy()
+        return pa.table({"id": ids[order], "cid": cids[order], "keep": keep})
 
-        def dedup_group(group: pa.Table) -> pa.Table:
-            ids = group.column("id").to_numpy()
-            order = np.argsort(ids)  # keep-first is defined by id order
-            x = vector_matrix(group.column("_v").combine_chunks())[order]
-            nrm = np.sqrt((x * x).sum(axis=1))
-            keep = np.ones(len(ids), dtype=bool)
-            nz = nrm > 0
-            n = int(nz.sum())
-            if n > 1:
-                u = x[nz] / nrm[nz][:, None]
-                c = block or max(1, (1 << 27) // n)
-                dup = np.zeros(n, dtype=bool)
-                rows = np.arange(n)
-                for j0 in range(0, n, c):
-                    j1 = min(j0 + c, n)
-                    sim = np.round(u @ u[j0:j1].T, round_digits)
-                    below = rows[:, None] < np.arange(j0, j1)[None, :]
-                    dup[j0:j1] |= ((sim >= thr) & below).any(axis=0)
-                kz = keep[nz]
-                kz[dup] = False
-                keep[nz] = kz
-            cids = group.column("cid").to_numpy()
-            return pa.table({"id": ids[order], "cid": cids[order], "keep": keep})
-
-        return assigned.groupBy("cid").applyInArrow(
-            dedup_group, schema="id long, cid long, keep boolean"
-        )
-
-    norm = F.sqrt(
-        F.aggregate(
-            F.col(vec_col), F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-        )
-    )
-    assigned = _materialize(
-        assign_clusters(df, centroids, id_col, vec_col, engine="jvm").select(
-            F.col(id_col).alias("id"), "cid",
-            _as_double(F.col(vec_col)).alias("_v"), norm.alias("_n"),
-        )
-    )
-    sided = assigned.filter(F.col("_n") > 0)
-    a = sided.select(
-        F.col("id").alias("id_a"), F.col("cid").alias("_ca"),
-        F.col("_v").alias("_va"), F.col("_n").alias("_na"),
-    )
-    b = sided.select(
-        F.col("id").alias("id_b"), F.col("cid").alias("_cb"),
-        F.col("_v").alias("_vb"), F.col("_n").alias("_nb"),
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("_va"), F.col("_vb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    dropped = (
-        a.join(b, on=[F.col("_ca") == F.col("_cb"), F.col("id_a") < F.col("id_b")])
-        .withColumn("_cos", F.round(dot / (F.col("_na") * F.col("_nb")), round_digits))
-        .filter(F.col("_cos") >= F.lit(threshold))
-        .select(F.col("id_b").alias("_dup"))
-        .distinct()
-    )
-    return (
-        assigned.join(dropped, assigned["id"] == dropped["_dup"], "left")
-        .select("id", "cid", F.col("_dup").isNull().alias("keep"))
+    return assigned.groupBy("cid").applyInArrow(
+        dedup_group, schema="id long, cid long, keep boolean"
     )

@@ -432,7 +432,7 @@ def _arrow_probe_udf(cids: "np.ndarray", cents: "np.ndarray", nprobe: int,
     the IVF probe-list kernel. Rounded squared-L2 (same contract as
     ``clustering._arrow_assign_udf``), stable argsort over ascending-cid
     columns so ties break to the lowest cid — identical ordering to the
-    JVM/SQL ``row_number() OVER (ORDER BY ROUND(d2, n), cid)`` probe."""
+    SQL oracle's ``row_number() OVER (ORDER BY ROUND(d2, n), cid)`` probe."""
     c_sq = (cents * cents).sum(axis=1)
     n_take = min(nprobe, len(cids))
 
@@ -455,7 +455,6 @@ def ivf_ann_join(
     vec_col: str = "embedding",
     round_digits: int = 4,
     assign_round_digits: int = 6,
-    engine: str = "arrow",
 ) -> DataFrame:
     """IVF-bucketed bulk ANN join (set-vs-set top-k): the inverted-file
     scale path that complements the banded-LSH :func:`ann_join`. A coarse
@@ -473,14 +472,13 @@ def ivf_ann_join(
 
     Plan shape (pinned in tests — scale posture first):
 
-    * corpus list assignment is MAP-ONLY (broadcast centroid model; Arrow
-      BLAS kernel by default, interpreted JVM higher-order argmin under
-      ``engine='jvm'`` for the oracle path — both rounded-distance,
-      lowest-cid ties, identical output, same two-engine contract as
-      ``clustering.assign_clusters``); the embedding never shuffles for it;
-    * query probe lists are the same kernel returning the ``nprobe``
-      nearest cids (JVM path: broadcast-explode + ``row_number() <=
-      nprobe`` — a WindowGroupLimit on narrow rows);
+    * corpus list assignment is MAP-ONLY: the centroid model is collected
+      once (O(k*d)) and each Arrow batch ranks the centroids by rounded
+      squared L2 with lowest-cid ties (:func:`_arrow_probe_udf`, the
+      contract of ``clustering.assign_clusters``) and keeps the nearest;
+      the embedding never shuffles for it;
+    * query probe lists are the same kernel keeping the ``nprobe``
+      nearest cids, exploded to narrow ``(query_id, cid)`` rows;
     * the list equi-join moves ONLY ``(id, cid)`` rows — vector-free, the
       same posture every band exchange in this package pins; pairs are
       unique by construction (one list per corpus row, distinct probed
@@ -499,54 +497,21 @@ def ivf_ann_join(
     uses ~100k) re-balances structurally, the same two levers as the
     EXACTSUBSTR hot-hash join (BENCH.md "EXACTSUBSTR hot-key skew").
     """
-    from .clustering import (
-        _arrow_assign_udf,
-        _as_double,
-        _cents_row,
-        _collect_centroids,
-        _nearest,
-        _sq_dist,
-    )
+    from .clustering import _as_double, _collect_centroids
 
     qn = _with_norm(queries_df, query_id_col, vec_col, "query_id")
     cn = _with_norm(corpus_df, corpus_id_col, vec_col, "neighbor_id")
 
-    if engine == "arrow":
-        np_cids, np_cents = _collect_centroids(centroids)
-        assign = _arrow_assign_udf(np_cids, np_cents, assign_round_digits)
-        probe = _arrow_probe_udf(np_cids, np_cents, nprobe, assign_round_digits)
-        ca = cn.select(
-            "neighbor_id",
-            assign(_as_double(F.col("_v_neighbor_id"))).alias("cid"),
-        )
-        qp = qn.select(
-            "query_id",
-            F.explode(probe(_as_double(F.col("_v_query_id")))).alias("cid"),
-        )
-    else:
-        cent = centroids.select("cid", "cent")
-        ca = cn.crossJoin(F.broadcast(_cents_row(cent))).select(
-            "neighbor_id",
-            _nearest(
-                F.col("_cents"), _as_double(F.col("_v_neighbor_id")),
-                assign_round_digits,
-            )["cid"].alias("cid"),
-        )
-        qd = qn.crossJoin(F.broadcast(cent)).select(
-            "query_id",
-            "cid",
-            F.round(
-                _sq_dist(_as_double(F.col("_v_query_id")), F.col("cent")),
-                assign_round_digits,
-            ).alias("_d"),
-        )
-        wq = Window.partitionBy("query_id").orderBy(F.asc("_d"), F.asc("cid"))
-        qp = (
-            qd.withColumn("_rn", F.row_number().over(wq))
-            .filter(F.col("_rn") <= nprobe)
-            .select("query_id", "cid")
-        )
+    np_cids, np_cents = _collect_centroids(centroids)
 
+    def lists(vec: str, n: int):
+        # exploded, so the join's inferred ``isnotnull(cid)`` filters the
+        # Generate output instead of re-running the kernel beneath it
+        probe = _arrow_probe_udf(np_cids, np_cents, n, assign_round_digits)
+        return F.explode(probe(_as_double(F.col(vec)))).alias("cid")
+
+    ca = cn.select("neighbor_id", lists("_v_neighbor_id", 1))
+    qp = qn.select("query_id", lists("_v_query_id", nprobe))
     pair_ids = qp.join(ca, "cid").select("query_id", "neighbor_id")
     return _exact_rerank(pair_ids, qn, cn, k, round_digits)
 

@@ -59,9 +59,18 @@ def append_table(df: DataFrame, target: str, fmt: str | None = None) -> None:
         df.writeTo(target).using("iceberg").create()
 
 
-# read errors that mean "nothing committed yet": no path (first run), or a
-# directory holding only ``_temporary/`` (a crash before the first commit)
+# read errors that mean "nothing committed yet": a directory holding only
+# ``_temporary/`` (a crash before the first commit), or a path that vanished
+# between the existence probe and the read
 _NOT_YET_WRITTEN = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
+def _path_exists(spark: SparkSession, target: str) -> bool:
+    """Hadoop ``FileSystem.exists`` on ``target`` — a probe that logs
+    nothing, unlike reading an absent path (Spark's ``FileStreamSink``
+    warns with a full stack trace before the ``PATH_NOT_FOUND``)."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(target)
+    return path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path)
 
 
 def read_table(
@@ -75,6 +84,8 @@ def read_table(
     job of schema inference; a ``_temporary/``-only directory then reads as
     empty, and a corrupt file raises on the first scan."""
     if table_format(fmt) == "parquet":
+        if not _path_exists(spark, target):
+            return None
         try:
             return (spark.read.schema(schema) if schema else spark.read).parquet(target)
         except AnalysisException as e:

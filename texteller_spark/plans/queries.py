@@ -1476,15 +1476,15 @@ FROM ranked WHERE rn <= {k}
 def q_cluster_kmeans(spark, sf):
     """Distributed Lloyd k-means over the embeddings table (k=8, 2 rounds,
     Forgy seeds = the 8 lowest vec_ids): the clustering stage of
-    cluster-then-dedup semantic curation (SemDeDup). Assignment is map-only
-    under a one-row broadcast centroid array; each update is one k-key
-    exchange with map-side partial per-dimension avg. Output is the final
-    centroid set exploded to (cid, n_members, pos, val) scalars so the
-    oracle verifies every component value-exactly."""
+    cluster-then-dedup semantic curation (SemDeDup). Assignment is a
+    map-only BLAS kernel against the driver's centroid matrix; each update
+    is one k-key exchange with map-side partial per-dimension avg. Output
+    is the final centroid set exploded to (cid, n_members, pos, val)
+    scalars so the oracle verifies every component value-exactly."""
     from ..operators.clustering import kmeans_fit
 
     e = _t(spark, sf, "embeddings")
-    fitted = kmeans_fit(e, k=8, iters=2, dim=_EMB_DIM, engine="jvm")
+    fitted = kmeans_fit(e, k=8, iters=2)
     return fitted.select(
         "cid",
         F.col("n").alias("n_members"),
@@ -1494,9 +1494,12 @@ def q_cluster_kmeans(spark, sf):
 
 def _kmeans_assign_cte(name: str, cents: str, dim: int) -> str:
     """Assignment round as SQL: nearest centroid by squared L2, distance
-    ROUNDed before comparison and ties to the lowest cid — the exact
-    contract of ``clustering._nearest`` (same element order in the
-    summation, so the doubles agree bit-for-bit before rounding)."""
+    ROUNDed before comparison and ties to the lowest cid — the contract of
+    ``clustering._arrow_assign_udf``. This sums the squared differences in
+    element order; the kernel's BLAS form ``|x|²-2x·c+|c|²`` differs from
+    it only far below the 6th digit, so the two round equal
+    (``tests/test_plan_quality.py::test_blas_distance_forms_round_like_sequential_sums``
+    pins the margin on the fixture embeddings)."""
     return f"""{name} AS (
   SELECT vec_id, v, cid FROM (
     SELECT e.vec_id, e.v, c.cid,
@@ -1513,9 +1516,9 @@ def _kmeans_ctes(k: int, iters: int, dim: int) -> list[str]:
     """The unrolled-Lloyd CTE chain (emb, c0, a0, p0, c1, ...): assignment
     (rounded-distance argmin), per-dimension AVG rounded at the round
     boundary (the same rounding ``kmeans_fit`` applies, which pins the
-    trajectory across engines), empty clusters keeping the previous
-    centroid via COALESCE. Shared by the fit oracle and the
-    fitted-centroid SemDeDup oracle."""
+    trajectory), empty clusters keeping the previous centroid via
+    COALESCE. Shared by the fit oracle and the fitted-centroid SemDeDup
+    oracle."""
     ctes = [
         "emb AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v"
         " FROM embeddings)",
@@ -1556,7 +1559,7 @@ def q_semantic_dedup(spark, sf):
     from ..operators.clustering import seed_centroids, semantic_dedup
 
     e = _t(spark, sf, "embeddings")
-    return semantic_dedup(e, seed_centroids(e, 8), threshold=0.45, engine="jvm").select(
+    return semantic_dedup(e, seed_centroids(e, 8), threshold=0.45).select(
         F.col("id").alias("vec_id"), "cid", "keep"
     )
 
@@ -1589,8 +1592,8 @@ def q_semantic_dedup_fitted(spark, sf):
     from ..operators.clustering import kmeans_fit, semantic_dedup
 
     e = _t(spark, sf, "embeddings")
-    fitted = kmeans_fit(e, k=8, iters=2, dim=_EMB_DIM, engine="jvm").select("cid", "cent")
-    return semantic_dedup(e, fitted, threshold=0.45, engine="jvm").select(
+    fitted = kmeans_fit(e, k=8, iters=2).select("cid", "cent")
+    return semantic_dedup(e, fitted, threshold=0.45).select(
         F.col("id").alias("vec_id"), "cid", "keep"
     )
 
@@ -1623,23 +1626,16 @@ def q_ivf_kmeans(spark, sf):
     inverted lists by nearest centroid, probe each query's (vec_id < 20)
     nprobe=2 nearest lists, exact-rerank the probed members to top-5.
     Complements `sim_ann_join`'s hyperplane banding: the partition adapts
-    to clustered embedding distributions. List equi-join is vector-free;
-    engine='jvm' is the interpreted oracle path (the arrow default is
-    pinned identical in tests)."""
+    to clustered embedding distributions. List assignment and probing are
+    the BLAS k-means kernel; the list equi-join is vector-free."""
     from ..operators.clustering import kmeans_fit
     from ..operators.similarity import ivf_ann_join
 
     e = _t(spark, sf, "embeddings")
-    cents = kmeans_fit(e, k=8, iters=2, dim=_EMB_DIM, engine="jvm").select(
-        "cid", "cent"
-    )
+    cents = kmeans_fit(e, k=8, iters=2).select("cid", "cent")
     return ivf_ann_join(
-        e.filter(F.col("vec_id") < 20),
-        e.filter(F.col("vec_id") >= 20),
-        cents,
-        k=5,
-        nprobe=2,
-        engine="jvm",
+        e.filter(F.col("vec_id") < 20), e.filter(F.col("vec_id") >= 20), cents,
+        k=5, nprobe=2,
     )
 
 

@@ -5,7 +5,7 @@ corpus, same every-397th-vector query set, same numpy exact baseline) so
 the two families are directly comparable on the geometry a near-dup /
 decontamination workload actually has. Grid: nlist (coarse-quantizer
 size) × nprobe (lists probed per query); the quantizer is kmeans_fit
-(arrow engine, 2 Lloyd rounds) trained once per nlist and its training
+(2 Lloyd rounds) trained once per nlist and its training
 wall time reported separately — at production scale the quantizer is a
 once-per-corpus artifact, not a per-query cost.
 
@@ -52,7 +52,6 @@ def main():
     from pyspark.sql import functions as F
 
     from texteller_spark.operators.clustering import kmeans_fit
-    from texteller_spark.operators.dedup import release_caches
     from texteller_spark.operators.similarity import ivf_ann_join
     from texteller_spark.session import build_session
 
@@ -65,17 +64,14 @@ def main():
     results = []
     for nlist, probes_list in GRID:
         t0 = time.monotonic()
-        cents = kmeans_fit(corpus, k=nlist, iters=2, dim=64, engine="arrow").select(
-            "cid", "cent"
-        )
+        cents = kmeans_fit(corpus, k=nlist, iters=2).select("cid", "cent")
         cents = cents.persist()
         cents.count()
         train_sec = time.monotonic() - t0
-        release_caches()
         for nprobe in probes_list:
             t0 = time.monotonic()
             res = ivf_ann_join(
-                queries, corpus, cents, k=1_000_000, nprobe=nprobe, engine="arrow"
+                queries, corpus, cents, k=1_000_000, nprobe=nprobe
             ).persist()
             n_cand = res.count()  # forces the full join end-to-end
             top = (
@@ -85,7 +81,6 @@ def main():
             )
             wall = time.monotonic() - t0
             res.unpersist()
-            release_caches()
             # top-K by rank, not by collect order
             byq = {}
             for q, _, n in sorted(map(tuple, top)):
