@@ -624,6 +624,23 @@ def test_kmeans_assignment_is_map_only_broadcast(spark):
     assert "CartesianProduct" not in p
 
 
+def test_semantic_dedup_pairs_join_is_cluster_keyed(spark, Q):
+    # the pair space must be keyed on the cluster id (the SemDeDup
+    # bound) — an unkeyed theta join would re-derive the O(n^2) baseline:
+    # the grouped pair kernel groups on cid, its one exchange partitions
+    # on cid, and no join or cartesian product pairs rows outside it
+    import re
+
+    p = plan_of(Q.q_semantic_dedup(spark, SF))
+    assert "CartesianProduct" not in p
+    assert "BatchEvalPython" not in p
+    assert not [l for l in p.splitlines() if "Join" in l], p
+    groups = re.findall(r"FlatMapGroupsInArrow \[([^\]]*)\]", p)
+    assert groups and all(re.fullmatch(r"cid#\d+L?", g) for g in groups), groups
+    exchanges = re.findall(r"Exchange hashpartitioning\(([^,)]*)", p)
+    assert exchanges and all(e.startswith("cid#") for e in exchanges), exchanges
+
+
 def test_semantic_dedup_arrow_is_one_shuffle(spark, Q):
     # vectors move exactly once: the cid-keyed exchange feeding the
     # grouped pair kernel, so the pair space is keyed on the cluster id
